@@ -1003,8 +1003,9 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * shape re-published the whole snapshot to flip one flag. The
     * tombstoned rows stay visible in [[snapshot]] with
     * `is_deleted = true` (reference dangling-id tolerance) until
-    * [[compact]] physically drops them. */
-  def delete(ids: Seq[Long]): Unit = {
+    * [[compact]] physically drops them. No ids, no write: an empty
+    * call appends no delta and no sidecar rows. */
+  def delete(ids: Seq[Long]): Unit = if (ids.nonEmpty) {
     val hit = snapshot().filter(col("id").isin(ids: _*))
       .withColumn("is_deleted", lit(true))
     graft.core.DeltaLog.append(hit, dataPath,

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,6 +30,31 @@ import org.apache.spark.sql.functions._
   * cadence, advancing the watermark, so the delta tail stays bounded
   * by the compaction window while per-flush cost stays O(batch).
   *
+  * One-scan tail: every live delta dir is read as ONE parquet
+  * relation — one listing, one merged-schema inference (a column only
+  * a later delta carries reads null for earlier rows), each row's seq
+  * parsed from its `_metadata.file_path` — so the Spark jobs a read
+  * launches do not grow with the number of live deltas (past 32 dirs
+  * Spark lists them in one parallel listing job, still one).
+  *
+  * Held tail: the RESOLVED tail (latest-seq-wins rows, tombstones
+  * included) is persisted and held for the log version it was resolved
+  * at, keyed on the session, the qualified dir, the id column, the
+  * watermark and each live delta's seq plus its file names and
+  * modification times (a same-seq rewrite — a checkpoint replay, a
+  * scratch store rebuilt in place — writes new part names under a new
+  * `_SUCCESS`). Every later read at that version reuses it, so
+  * consecutive searches between two writes resolve the tail once; the
+  * first read that sees another version releases it (unpersist), and
+  * [[compact]] releases it once the fold it fed is durable. At most
+  * one tail is held per store dir, and it is no larger than the live
+  * tail — which the compaction cadence already bounds for the
+  * broadcast anti-join above. The key is what is on disk, so store
+  * instances over one dir share the held tail, and a rewrite by
+  * another instance or process is seen by the next read. A dir that is never read again keeps its tail until the
+  * session stops; Spark's storage memory evicts it to disk under
+  * pressure.
+  *
   * Crash/replay safety (the checkpoint replays a batch after any
   * crash; every arrow below is idempotent under replay):
   *  - append crashes mid-write → partial dir without `_SUCCESS` is
@@ -51,6 +77,8 @@ object DeltaLog {
   val TombCol = "__tomb"
   private val SeqCol = "__delta_seq"
   private val DirPattern = """^d(\d+)$""".r
+  /** The seq of the delta dir a part file sits in, from its path. */
+  private val SeqInPath = """/d(\d+)/[^/]+$"""
 
   private def basePath(dir: String) = s"$dir/base"
   private def deltaRoot(dir: String) = s"$dir/delta"
@@ -201,17 +229,105 @@ object DeltaLog {
   /** Every complete (`_SUCCESS`-marked) delta seq on disk, sorted. A
     * dir without the marker is an in-flight or torn write — invisible
     * until its replay completes it. */
-  def deltaSeqs(spark: SparkSession, dir: String): Seq[Long] = {
+  def deltaSeqs(spark: SparkSession, dir: String): Seq[Long] =
+    deltas(spark, dir).map(_.seq)
+
+  /** One complete delta dir: its seq, path, the (name, mtime) of every
+    * file in it — what a same-seq rewrite changes — and its bytes. */
+  private case class Delta(seq: Long, path: Path, files: Seq[(String, Long)],
+                           bytes: Long)
+
+  private def deltas(spark: SparkSession, dir: String): Seq[Delta] = {
     val root = new Path(deltaRoot(dir))
     val f = fs(spark, root)
     if (!f.exists(root)) Seq.empty
     else f.listStatus(root).toSeq.flatMap { st =>
       st.getPath.getName match {
-        case DirPattern(d) if f.exists(new Path(st.getPath, "_SUCCESS")) =>
-          Some(d.toLong)
+        case DirPattern(d) =>
+          val files = f.listStatus(st.getPath).toSeq
+          val stamp = files.map(c => c.getPath.getName -> c.getModificationTime)
+          if (stamp.exists(_._1 == "_SUCCESS"))
+            Some(Delta(d.toLong, st.getPath, stamp.sorted, files.map(_.getLen).sum))
+          else None
         case _ => None
       }
-    }.sorted
+    }.sortBy(_.seq)
+  }
+
+  /** The live deltas (seq above the watermark) as ONE parquet relation,
+    * schemas merged, each row tagged with its seq in [[SeqCol]]. */
+  private def scanTail(spark: SparkSession, live: Seq[Delta]): DataFrame =
+    spark.read.option("mergeSchema", "true")
+      .parquet(live.map(_.path.toString): _*)
+      .withColumn(SeqCol,
+        regexp_extract(col("_metadata.file_path"), SeqInPath, 1).cast("long"))
+
+  /** What a resolved tail depends on; equal keys read equal tails. */
+  private case class TailVersion(session: SparkSession, idCol: String,
+                                 watermark: Long, live: Seq[Delta])
+  private case class Held(version: TailVersion, tail: DataFrame)
+  /** Qualified store dir → its held tail (see the object scaladoc). */
+  private val held = scala.collection.mutable.Map.empty[String, Held]
+
+  private def qualify(spark: SparkSession, dir: String): String = {
+    val p = new Path(dir)
+    fs(spark, p).makeQualified(p).toString
+  }
+
+  private def release(h: Held): Unit =
+    // a stopped session has already dropped its cached blocks
+    if (!h.version.session.sparkContext.isStopped)
+      h.tail.unpersist(blocking = false)
+
+  /** The resolved live tail — latest-seq-wins rows, [[TombCol]] kept —
+    * or None when no delta is live. A tail held at the current version
+    * is reused; any other held tail for the dir is released. `hold`
+    * persists and holds a freshly resolved tail ([[compact]] passes
+    * false: it retires the version it reads). */
+  private def resolvedTail(spark: SparkSession, dir: String, idCol: String,
+                           hold: Boolean): Option[DataFrame] = {
+    val w = watermark(spark, dir)
+    val version = TailVersion(spark, idCol, w,
+      deltas(spark, dir).filter(_.seq > w))
+    val key = qualify(spark, dir)
+    held.synchronized {
+      held.get(key) match {
+        case Some(h) if h.version == version => Some(h.tail)
+        case prior =>
+          prior.foreach { h => release(h); held.remove(key) }
+          if (version.live.isEmpty) None
+          else {
+            // a cached plan keeps the partitioning it was planned with
+            // (AQE does not coalesce it), so size the resolving shuffle
+            // as AQE would: one partition per advisory-size share of the
+            // tail. A small tail stays one id-sorted partition, and a
+            // delete drawn from it writes one file.
+            val target = JavaUtils.byteStringAsBytes(
+              spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+            val bytes = version.live.map(_.bytes).sum
+            val parts = math.min(Int.MaxValue.toLong,
+              math.max(1L, (bytes + target - 1) / target)).toInt
+            // latest-seq-wins per id; within one seq the append is
+            // id-unique
+            val win = Window.partitionBy(col(idCol)).orderBy(col(SeqCol).desc)
+            val resolved = scanTail(spark, version.live)
+              .repartition(parts, col(idCol))
+              .withColumn("__rn", row_number().over(win))
+              .filter(col("__rn") === 1).drop("__rn", SeqCol)
+            if (hold) {
+              resolved.persist()
+              held(key) = Held(version, resolved)
+            }
+            Some(resolved)
+          }
+      }
+    }
+  }
+
+  /** Releases the tail held for `dir`, if any. */
+  private def releaseTail(spark: SparkSession, dir: String): Unit = {
+    val key = qualify(spark, dir)
+    held.synchronized(held.remove(key).foreach(release))
   }
 
   /** Merged current state: base shadowed by live deltas, latest seq
@@ -224,32 +340,30 @@ object DeltaLog {
     * A pre-delta-log plain snapshot at the dir ROOT is adopted as the
     * initial base first ([[adoptIfLegacy]] — file renames only), so
     * opening a legacy store through the log never reads it as empty.
-    * Unions tolerate schema drift between base and deltas (columns
-    * added by newer writers pad null on the older side). */
+    * Schema drift is tolerated between deltas (one merged schema) and
+    * between base and tail (columns added by newer writers pad null on
+    * the older side). The tail is resolved once per log version and
+    * held (object scaladoc). */
   def readMerged(spark: SparkSession, dir: String,
-                 idCol: String): Option[DataFrame] = {
+                 idCol: String): Option[DataFrame] =
+    merged(spark, dir, idCol, hold = true)
+
+  private def merged(spark: SparkSession, dir: String, idCol: String,
+                     hold: Boolean): Option[DataFrame] = {
     adoptIfLegacy(spark, dir)
     val base = SnapshotIO.read(spark, basePath(dir))
-    val w = watermark(spark, dir)
-    val live = deltaSeqs(spark, dir).filter(_ > w)
-    if (live.isEmpty) return base
-    val deltas = live.map(s0 =>
-        spark.read.parquet(seqDir(dir, s0)).withColumn(SeqCol, lit(s0)))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-    // latest-seq-wins per id; within one seq the append is id-unique
-    val win = Window.partitionBy(col(idCol)).orderBy(col(SeqCol).desc)
-    val resolved = deltas.withColumn("__rn", row_number().over(win))
-      .filter(col("__rn") === 1).drop("__rn", SeqCol)
-    val alive = resolved.filter(!col(TombCol)).drop(TombCol)
-    Some(base match {
-      case None => alive
-      case Some(b) =>
-        // tombstoned ids participate in the shadow set: their base rows
-        // must disappear even though they contribute no delta row
-        alive.unionByName(
-          b.join(resolved.select(col(idCol)), Seq(idCol), "left_anti"),
-          allowMissingColumns = true)
-    })
+    resolvedTail(spark, dir, idCol, hold).map { resolved =>
+      val alive = resolved.filter(!col(TombCol)).drop(TombCol)
+      base match {
+        case None => alive
+        case Some(b) =>
+          // tombstoned ids participate in the shadow set: their base
+          // rows must disappear even though they contribute no delta row
+          alive.unionByName(
+            b.join(resolved.select(col(idCol)), Seq(idCol), "left_anti"),
+            allowMissingColumns = true)
+      }
+    }.orElse(base)
   }
 
   /** Fold the live delta tail into base (crash-safe publish), advance
@@ -303,12 +417,13 @@ object DeltaLog {
       return w
     }
     val hi = live.max
-    readMerged(spark, dir, idCol).foreach { m =>
+    merged(spark, dir, idCol, hold = false).foreach { m =>
       if (retainGenerations > 0)
         SnapshotIO.publishRetained(transform(m), basePath(dir), retainGenerations)
       else SnapshotIO.publish(transform(m), basePath(dir))
     }
     setWatermark(spark, dir, hi)
+    releaseTail(spark, dir)
     // record the folded base's row count, PAIRED with the watermark it
     // belongs to (stale pairs from a crash between the two writes are
     // detected by the seq mismatch) — an O(delta) store-size tracker
@@ -348,8 +463,8 @@ object DeltaLog {
   /** Upper bound on the merged live row count, from O(delta) state:
     * the base count recorded at the last fold (falling back to one
     * zero-column base scan when the pair is missing or stale) plus
-    * each live delta's non-tombstone row count (footer-cheap scans of
-    * the tail only). An upper bound because duplicate-id inserts are
+    * the live tail's non-tombstone row count (one count over the
+    * one-scan tail). An upper bound because duplicate-id inserts are
     * double-counted and tombstone hits are not subtracted — exact
     * resolution of the overlap is the merged count, which a
     * threshold-tracking caller only needs once this bound says a
@@ -358,8 +473,9 @@ object DeltaLog {
     val bc = baseCount(spark, dir).getOrElse(
       SnapshotIO.read(spark, basePath(dir)).map(_.count()).getOrElse(0L))
     val w = watermark(spark, dir)
-    bc + deltaSeqs(spark, dir).filter(_ > w).map(s0 =>
-      spark.read.parquet(seqDir(dir, s0)).filter(!col(TombCol)).count()).sum
+    val live = deltas(spark, dir).filter(_.seq > w)
+    bc + (if (live.isEmpty) 0L
+      else scanTail(spark, live).filter(!col(TombCol)).count())
   }
 
   private def setBaseCount(spark: SparkSession, dir: String, wm: Long,

@@ -2,8 +2,11 @@ package graft
 
 import graft.core.{DeltaLog, SnapshotIO}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Append-only delta log: merge-on-read semantics, tombstones, cadence
   * compaction, and idempotence across every crash/replay point the
@@ -21,6 +24,36 @@ class DeltaLogSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     pairs.toDF("id", "v")
+  }
+
+  /** Spark jobs `body` launches, counted by a listener. The bus delivers
+    * events in order, so once a marker job started after `body` has been
+    * seen, every job of `body` has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"dlog-jobs-${System.nanoTime()}"
+    val counted = new AtomicInteger
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => counted.incrementAndGet(); ()
+          case Some(g) if g == s"$group-end" => marker.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-end", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, TimeUnit.SECONDS), "marker job never seen")
+      counted.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("append + readMerged: latest seq wins per id, base shadowed") {
@@ -239,5 +272,79 @@ class DeltaLogSpec extends SparkSpec {
     // the replay completes it (overwrite) and it becomes visible
     DeltaLog.append(df(0L -> "a1"), dir, 1L)
     assert(rows(dir) == Map(0L -> "a1"))
+  }
+
+  test("merged read: job count independent of the tail length") {
+    val one = Files.createTempDirectory("dlogjobs1").toString
+    val eight = Files.createTempDirectory("dlogjobs8").toString
+    Seq(one, eight).foreach { dir =>
+      DeltaLog.append(df((0L until 40L).map(i => i -> s"base$i"): _*), dir, 0L)
+      DeltaLog.compact(spark, dir, "id")
+    }
+    DeltaLog.append(df((0L until 80L).map(i => i -> s"t$i"): _*), one, 1L)
+    (1L to 8L).foreach(q => DeltaLog.append(
+      df((q * 10L until q * 10L + 10L).map(i => i -> s"t$i"): _*), eight, q))
+    def read(dir: String) = DeltaLog.readMerged(spark, dir, "id").get.collect()
+    val jobs1 = jobsOf(read(one))
+    val jobs8 = jobsOf(read(eight))
+    assert(jobs8 == jobs1,
+      s"a tail of 8 deltas took $jobs8 jobs against $jobs1 for 1 delta")
+    assert(rows(eight).size == 90)
+  }
+
+  test("a second read at the same log version does not re-scan the delta files") {
+    val dir = Files.createTempDirectory("dlogheld").toString
+    DeltaLog.append(df(0L -> "a", 1L -> "b"), dir, 0L)
+    DeltaLog.compact(spark, dir, "id")
+    DeltaLog.append(df(1L -> "B", 2L -> "c"), dir, 1L)
+    DeltaLog.append(df(2L -> "C"), dir, 2L)
+    val expected = Map(0L -> "a", 1L -> "B", 2L -> "C")
+    assert(rows(dir) == expected)
+    // garble every delta part file in place, keeping its name and
+    // modification time: the log version is unchanged, so a read that
+    // re-scanned the tail would fail or return the garbage
+    DeltaLog.deltaSeqs(spark, dir).foreach { q =>
+      new java.io.File(DeltaLog.deltaPath(dir, q)).listFiles()
+        .filter(_.getName.endsWith(".parquet")).foreach { part =>
+          val mtime = part.lastModified()
+          Files.write(part.toPath, Array.fill[Byte](part.length.toInt)(7))
+          assert(part.setLastModified(mtime))
+        }
+    }
+    assert(rows(dir) == expected)
+  }
+
+  test("schema drift: a column only a later delta carries reads null for earlier rows") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("dlogdrift").toString
+    DeltaLog.append(df(0L -> "a", 1L -> "b"), dir, 0L)
+    DeltaLog.append(Seq((1L, "B", "x1"), (2L, "c", "x2")).toDF("id", "v", "extra"),
+      dir, 1L)
+    val got = DeltaLog.readMerged(spark, dir, "id").get
+      .select("id", "v", "extra").collect()
+      .map(r => r.getLong(0) -> (r.getString(1), Option(r.getString(2)))).toMap
+    assert(got == Map(0L -> ("a", None), 1L -> ("B", Some("x1")),
+      2L -> ("c", Some("x2"))))
+  }
+
+  test("a delta rewritten at the same seq after a read is what the next read returns") {
+    val dir = Files.createTempDirectory("dlogrewrite").toString
+    DeltaLog.append(df(0L -> "a"), dir, 0L)
+    DeltaLog.append(df(1L -> "b"), dir, 1L)
+    assert(rows(dir) == Map(0L -> "a", 1L -> "b"))
+    // a replay of batch 1 with different rows
+    DeltaLog.append(df(1L -> "b2", 5L -> "q"), dir, 1L)
+    assert(rows(dir) == Map(0L -> "a", 1L -> "b2", 5L -> "q"))
+    // the same rewrite by another process: its dir is swapped in without
+    // this session's write-path cache refresh, so only the rewritten
+    // files' names and mtimes tell the two versions apart
+    val side = Files.createTempDirectory("dlogside").toString
+    DeltaLog.append(df(1L -> "B2", 5L -> "Q"), side, 1L)
+    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(f.delete(new Path(DeltaLog.deltaPath(dir, 1L)), true))
+    assert(f.rename(new Path(DeltaLog.deltaPath(side, 1L)),
+      new Path(DeltaLog.deltaPath(dir, 1L))))
+    assert(rows(dir) == Map(0L -> "a", 1L -> "B2", 5L -> "Q"))
   }
 }

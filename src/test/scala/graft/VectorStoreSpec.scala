@@ -442,6 +442,37 @@ class VectorStoreSpec extends SparkSpec {
     assert(!f.exists(new org.apache.hadoop.fs.Path(s"$dir/ivf_tombstones")))
     assert(!store.searchIvf(newSelf, nProbe = 4, k = 5).collect()
       .map(_.getAs[Long]("id")).contains(gone))
+    // an empty delete writes nothing: no new delta seq, no sidecar file
+    val seqs = graft.core.DeltaLog.deltaSeqs(s, s"$dir/vectors")
+    store.delete(Seq.empty)
+    assert(graft.core.DeltaLog.deltaSeqs(s, s"$dir/vectors") == seqs)
+    assert(!f.exists(new org.apache.hadoop.fs.Path(s"$dir/ivf_tombstones")))
+  }
+
+  test("cross-instance freshness: B's exact search sees A's ingest and delete") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("storexinst").toString
+    val a = VectorStore.open(s, dir, dim = 8)
+    val b = VectorStore.open(s, dir, dim = 8)
+    val data = corpus(40, 8)
+    a.ingest(data.take(30).map { case (_, v) => Tuple1(v) }.toDF("embedding"))
+    a.compact()
+    a.ingest(data.slice(30, 35).map { case (_, v) => Tuple1(v) }.toDF("embedding"))
+    val q = data(37)._2.toSeq
+    def ids(store: VectorStore) =
+      store.search(q, 5).collect().map(_.getAs[Long]("id")).toSeq
+    // B reads the store (base + one live delta) before A writes again
+    val victim = ids(b).head
+    val added = a.ingest(Seq(Tuple1(data(37)._2)).toDF("embedding"))
+    a.delete(Seq(victim))
+    val after = b.search(q, 5).collect()
+    assert(after.head.getAs[Long]("id") == added &&
+      after.head.getAs[Double]("dist") < 1e-6,
+      "B must see the row A ingested after B's first read")
+    assert(!after.map(_.getAs[Long]("id")).contains(victim),
+      "B must never return the id A deleted")
+    assert(ids(b) == ids(a))
   }
 
   test("compact folds the index sidecars: tables drop tombstoned ids, sidecars clear") {
