@@ -13,11 +13,14 @@ import org.apache.spark.sql.functions._
   *
   * Everything is a DataFrame→DataFrame transformation over a
   * merge-on-read delta log ([[graft.core.DeltaLog]]: compacted base +
-  * per-mutation delta dirs); the only driver-side state is the store
-  * path and small model artifacts (k centroids, chunks×k codebook).
-  * Mutations (ingest/delete) are O(batch) delta appends — the
-  * reference's save is likewise an O(1) slot write (storage.py:198-230)
-  * — and [[compact]] folds the tail on the caller's cadence. Pre-delta
+  * per-mutation delta dirs). Driver-side state is the store path and a
+  * few derived values memoized on what is on disk ([[memo]]): the live
+  * row count and per-filter BQ thresholds on the log version, the HNSW
+  * build row on the files of `hnsw_model`, the hierarchical IVF serve
+  * model on the files of `ivf_model` and `ivf_supers`. Mutations
+  * (ingest/delete) are O(batch) delta appends — the reference's save
+  * is likewise an O(1) slot write (storage.py:198-230) — and
+  * [[compact]] folds the tail on the caller's cadence. Pre-delta
   * stores (plain snapshot at the vectors root) are adopted by renames
   * on first read.
   */
@@ -312,7 +315,6 @@ class VectorStore private (val spark: SparkSession, val path: String,
           .repartition(col(Ivf.ClusterCol))
           .write.mode("append").partitionBy(Ivf.ClusterCol).parquet(ivfPqDataPath)
       }
-      invalidateDerivedCaches()
       start
     } finally { full.unpersist(); () }
   }
@@ -402,7 +404,7 @@ class VectorStore private (val spark: SparkSession, val path: String,
       // the next buildHnsw. Deletes need nothing: the live-join drops
       // tombstoned ids and the graph search skips the dangling edges
       // (the reference's B2 tolerance, hnsw.py:370-373).
-      val m = hnswModel() // instance memo — no per-call model-row read
+      val m = hnswModel() // memo — no per-call model-row read
       // the graph was built over the UNFILTERED corpus, so the graph
       // side always walks the unfiltered rows below the watermark; a
       // filtered query over-fetches (k ÷ match fraction, 2× margin) and
@@ -473,32 +475,19 @@ class VectorStore private (val spark: SparkSession, val path: String,
     }
   }
 
-  /** Persisted HNSW build params + watermark, memoized per instance —
-    * `searchHnsw` previously re-read the one-row model parquet (a file
-    * listing + head job) on EVERY call. Same invalidation and
-    * cross-instance staleness contract as the live-count memo:
-    * build/refresh/mutations clear it; a writer refreshing through
-    * another instance leaves this one's watermark stale until it
-    * mutates or reopens, which can only mis-split graph vs exact-tail
-    * serving for the refresh window's ids — the merge dedup keeps
-    * results correct either way. */
+  /** Persisted HNSW build params + watermark, memoized on the model
+    * dir's files — `searchHnsw` would otherwise re-read the one-row
+    * model parquet (a file listing + head job) on every call. */
   private case class HnswModelRow(params: Hnsw.Params, parts: Int,
                                   watermark: Long)
-  @transient private lazy val hnswModelCache =
-    new java.util.concurrent.atomic.AtomicReference[HnswModelRow](null)
-  private def hnswModel(): HnswModelRow = {
-    val c = hnswModelCache.get()
-    if (c != null) c
-    else {
+  private def hnswModel(): HnswModelRow =
+    memo("hnsw", stamps(hnswModelPath)) {
       val mrow = spark.read.parquet(hnswModelPath).head
-      val r = HnswModelRow(
+      HnswModelRow(
         Hnsw.Params(mrow.getAs[Int]("m"), mrow.getAs[Int]("ef_construction"),
           seed = mrow.getAs[Long]("seed")),
         mrow.getAs[Int]("num_partitions"), mrow.getAs[Long]("built_next_id"))
-      hnswModelCache.set(r)
-      r
     }
-  }
 
   private def hnswModelPath = s"$path/hnsw_model"
   private def hnswEdgesPath = s"$path/hnsw_edges"
@@ -532,7 +521,6 @@ class VectorStore private (val spark: SparkSession, val path: String,
     Seq((m, efConstruction, seed, parts, watermark))
       .toDF("m", "ef_construction", "seed", "num_partitions", "built_next_id")
       .coalesce(1).write.mode("overwrite").parquet(hnswModelPath)
-    hnswModelCache.set(HnswModelRow(params, parts, watermark))
   }
 
   /** B1 incremental through the facade: fold the exact-scan tail into
@@ -560,7 +548,6 @@ class VectorStore private (val spark: SparkSession, val path: String,
     Seq((params.m, params.efConstruction, params.seed, parts, newWatermark))
       .toDF("m", "ef_construction", "seed", "num_partitions", "built_next_id")
       .coalesce(1).write.mode("overwrite").parquet(hnswModelPath)
-    hnswModelCache.set(HnswModelRow(params, parts, newWatermark))
   }
 
   private def live(metadataFilter: Map[String, String]): DataFrame = {
@@ -652,7 +639,6 @@ class VectorStore private (val spark: SparkSession, val path: String,
       Ivf.saveHier(hm, ivfModelPath, ivfSupersPath)
       Ivf.writePartitioned(assigned, ivfDataPath)
       clearDir(ivfTombPath) // fresh table is built from live rows only
-      ivfHierCache.set(null) // serve memo must reopen the new model
       hm.flat
     } else {
       val frac =
@@ -668,7 +654,6 @@ class VectorStore private (val spark: SparkSession, val path: String,
       // a flat rebuild over an earlier hierarchical one must not leave
       // the stale super table steering ingest-time assignment
       clearDir(ivfSupersPath)
-      ivfHierCache.set(null) // serve memo must not keep the hier model
       model
     }
   }
@@ -713,26 +698,19 @@ class VectorStore private (val spark: SparkSession, val path: String,
     }
   }
 
-  /** Serve-side hier model, memoized per instance — `searchIvf`
-    * previously re-collected the WHOLE child-centroid table on every
-    * call; `openHier` additionally keeps large-k models lazy (counts
-    * resident, child blocks LRU-bounded by
+  /** Serve-side hier model, memoized on the model and super dirs'
+    * files — `searchIvf` would otherwise re-collect the WHOLE
+    * child-centroid table on every call; `openHier` additionally keeps
+    * large-k models lazy (counts resident, child blocks LRU-bounded by
     * `graft.ivf.residentModelBytes` — the r16 driver-residency
-    * perf-weak). Invalidation: [[buildIvf]] clears on either branch;
-    * same cross-instance staleness contract as the HNSW model memo. */
-  @transient private lazy val ivfHierCache =
-    new java.util.concurrent.atomic.AtomicReference[Option[Ivf.HierProbe]](null)
+    * perf-weak). None for a flat model. */
   private def hierModelIfPersisted(): Option[Ivf.HierProbe] = {
-    val c = ivfHierCache.get()
-    if (c != null) c
-    else {
-      val r =
-        if (successAt(ivfSupersPath) && successAt(ivfModelPath))
-          Some(Ivf.openHier(spark, ivfModelPath, ivfSupersPath, "embedding",
-            sessionConfig.ivfResidentModelBytes))
-        else None
-      ivfHierCache.set(r)
-      r
+    val (model, supers) = (stamps(ivfModelPath), stamps(ivfSupersPath))
+    memo("ivf", (model, supers)) {
+      if (Seq(model, supers).forall(_.exists(_.name == "_SUCCESS")))
+        Some(Ivf.openHier(spark, ivfModelPath, ivfSupersPath, "embedding",
+          sessionConfig.ivfResidentModelBytes))
+      else None
     }
   }
 
@@ -784,8 +762,7 @@ class VectorStore private (val spark: SparkSession, val path: String,
     // pricing a code-table count() (a full file listing on a 100 TB
     // table) per query. The code table can hold slightly MORE rows
     // (deletes since the last build sit in the sidecar), but √N-window
-    // sizing is insensitive to that margin and a stale count only
-    // mis-sizes a recall window, never a distance.
+    // sizing is insensitive to that margin.
     val w = if (rerank >= 0) rerank
       else Pq.scaledRerank(k, liveCount(), sessionConfig.pqRerankFactor)
     val pred = if (metadataFilter.isEmpty) None
@@ -874,44 +851,43 @@ class VectorStore private (val spark: SparkSession, val path: String,
     else Some(spark.read.parquet(bqModelPath).orderBy("i")
       .collect().map(_.getDouble(1)).toSeq)
 
-  // Per-filter BQ threshold cache: a metadata-filtered `searchBq` must
-  // train on the FILTERED corpus (global midpoints can be blind under a
-  // clustered filter), but repeated queries with the SAME filter should
-  // not pay the full-corpus stats aggregation each time. Keyed by the
-  // canonicalized filter map; store-instance-local, invalidated by this
-  // instance's mutations (ingest/delete/compact). Staleness trade: a
-  // writer mutating the store through ANOTHER VectorStore instance (or
-  // raw SnapshotIO) leaves cached thresholds stale until this instance
-  // mutates or is reopened — thresholds only steer the Hamming screen,
-  // the exact rerank stays correct, so staleness costs recall margin,
-  // never wrong distances. Bounded: a long-lived read-only instance
-  // serving many DISTINCT filters would otherwise accumulate one
-  // dim-length Seq per filter forever; at the cap the map clears
-  // (entries are cheap to recompute — one stats pass each).
+  /** Values derived from the store, memoized per instance under
+    * `name` and reused only while `version` — the on-disk state the
+    * value was derived from — reads equal. A write through any instance,
+    * a [[graft.streaming.StreamingIngest]] flush or a raw
+    * [[graft.core.DeltaLog]] append changes that state, so the next call
+    * recomputes; no build or mutation method touches the memo. The
+    * version is read before the value is computed, so a write racing
+    * the computation leaves an entry the next call recomputes. */
+  @transient private lazy val memos =
+    new java.util.concurrent.ConcurrentHashMap[String, (Any, Any)]()
+  private def memo[T](name: String, version: Any)(compute: => T): T =
+    memos.get(name) match {
+      case (v, value) if v == version => value.asInstanceOf[T]
+      case _ =>
+        val value = compute
+        if (memos.size() >= BqFilterCacheMax) memos.clear()
+        memos.put(name, (version, value))
+        value
+    }
+  /** Bound on [[memos]]: a long-lived instance serving many DISTINCT
+    * filtered `searchBq` calls would otherwise keep one dim-length Seq
+    * per filter forever; at the cap the map clears (entries are cheap
+    * to recompute — one stats pass each). */
   private val BqFilterCacheMax = 1024
-  @transient private lazy val bqFilterThresholds =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Double]]()
+  private def logVersion = graft.core.DeltaLog.version(spark, dataPath)
+  private def stamps(dir: String) = graft.core.DeltaLog.fileStamps(spark, dir)
+
   private[graft] val bqTrainCount =
     new java.util.concurrent.atomic.AtomicInteger(0)
   private def filterKey(m: Map[String, String]): String =
     m.toSeq.sorted.map { case (k, v) => s"$k\u0000$v" }.mkString("\u0001")
 
-  // Unfiltered live row count, memoized: every scale-aware default
-  // (hnsw auto beam, bq/pq auto rerank windows) prices one corpus
-  // count per call otherwise. Same invalidation + cross-instance
-  // staleness contract as the BQ threshold cache above — a stale
-  // count only mis-sizes a recall window, never a distance.
-  @transient private lazy val liveCountCache =
-    new java.util.concurrent.atomic.AtomicLong(-1L)
-  private def liveCount(): Long = {
-    val c = liveCountCache.get()
-    if (c >= 0L) c
-    else {
-      val n = snapshot().filter(!col("is_deleted")).count()
-      liveCountCache.set(n)
-      n
-    }
-  }
+  /** Unfiltered live row count: every scale-aware default (hnsw auto
+    * beam, bq/pq auto rerank windows) and [[size]] would price one
+    * corpus count per call otherwise. */
+  private def liveCount(): Long =
+    memo("live", logVersion)(snapshot().filter(!col("is_deleted")).count())
   /** Count for scale rules: memoized for the unfiltered corpus, exact
     * per call under a metadata filter (filtered counts are
     * filter-specific and already bounded by the filtered scan the
@@ -919,12 +895,6 @@ class VectorStore private (val spark: SparkSession, val path: String,
   private def scaleCount(corpus: DataFrame,
                          metadataFilter: Map[String, String]): Long =
     if (metadataFilter.isEmpty) liveCount() else corpus.count()
-
-  private def invalidateDerivedCaches(): Unit = {
-    bqFilterThresholds.clear()
-    liveCountCache.set(-1L)
-    hnswModelCache.set(null)
-  }
 
   def searchBq(query: Seq[Float], k: Int, rerank: Int = 0,
                metadataFilter: Map[String, String] = Map.empty,
@@ -946,14 +916,9 @@ class VectorStore private (val spark: SparkSession, val path: String,
     val th = if (!centered) Nil
       else if (metadataFilter.isEmpty)
         bqThresholdsIfPersisted().getOrElse(train())
-      else {
-        // per-filter memo: identical filtered searches share ONE stats
-        // pass (see the cache's staleness scaladoc above)
-        if (bqFilterThresholds.size() >= BqFilterCacheMax)
-          bqFilterThresholds.clear()
-        bqFilterThresholds.computeIfAbsent(filterKey(metadataFilter),
-          _ => train())
-      }
+      // per-filter memo: identical filtered searches share ONE stats
+      // pass per log version
+      else memo("bq:" + filterKey(metadataFilter), logVersion)(train())
     val enc = Bq.encode(corpus, "embedding", thresholds = th)
     val w = if (rerank >= 0) rerank
       else Bq.scaledRerank(k, scaleCount(corpus, metadataFilter),
@@ -1011,7 +976,6 @@ class VectorStore private (val spark: SparkSession, val path: String,
     graft.core.DeltaLog.append(hit, dataPath,
       graft.core.DeltaLog.nextSeq(spark, dataPath))
     appendIndexTombstones(ids)
-    invalidateDerivedCaches()
   }
 
   /** Bulk [[delete]]: the ids arrive as a one-column DataFrame (any
@@ -1040,7 +1004,6 @@ class VectorStore private (val spark: SparkSession, val path: String,
       if (successAt(ivfPqDataPath))
         tombs.write.mode("append").parquet(ivfPqTombPath)
     }
-    invalidateDerivedCaches()
   }
 
   /** Compaction: fold the delta tail into the base AND physically drop
@@ -1067,7 +1030,6 @@ class VectorStore private (val spark: SparkSession, val path: String,
       retainGenerations = retainGenerations,
       transform = m => Crud.compact(m).withColumn("is_deleted", lit(false)),
       foldEmptyTail = true)
-    invalidateDerivedCaches()
   }
 
   /** File compaction: merge the BASE snapshot's accumulated small
@@ -1175,7 +1137,7 @@ class VectorStore private (val spark: SparkSession, val path: String,
   /** S2/S4: point lookup and live count. */
   def get(id: Long): Option[org.apache.spark.sql.Row] =
     snapshot().filter(col("id") === id && !col("is_deleted")).collect().headOption
-  def size(): Long = snapshot().filter(!col("is_deleted")).count()
+  def size(): Long = liveCount()
 }
 
 object VectorStore {

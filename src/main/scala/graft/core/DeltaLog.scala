@@ -39,11 +39,8 @@ import org.apache.spark.sql.functions._
   *
   * Held tail: the RESOLVED tail (latest-seq-wins rows, tombstones
   * included) is persisted and held for the log version it was resolved
-  * at, keyed on the session, the qualified dir, the id column, the
-  * watermark and each live delta's seq plus its file names and
-  * modification times (a same-seq rewrite — a checkpoint replay, a
-  * scratch store rebuilt in place — writes new part names under a new
-  * `_SUCCESS`). Every later read at that version reuses it, so
+  * at ([[version]]), keyed on the session, the qualified dir and the id
+  * column besides. Every later read at that version reuses it, so
   * consecutive searches between two writes resolve the tail once; the
   * first read that sees another version releases it (unpersist), and
   * [[compact]] releases it once the fold it fed is durable. At most
@@ -51,9 +48,9 @@ import org.apache.spark.sql.functions._
   * tail — which the compaction cadence already bounds for the
   * broadcast anti-join above. The key is what is on disk, so store
   * instances over one dir share the held tail, and a rewrite by
-  * another instance or process is seen by the next read. A dir that is never read again keeps its tail until the
-  * session stops; Spark's storage memory evicts it to disk under
-  * pressure.
+  * another instance or process is seen by the next read. A dir that is
+  * never read again keeps its tail until the session stops; Spark's
+  * storage memory evicts it to disk under pressure.
   *
   * Crash/replay safety (the checkpoint replays a batch after any
   * crash; every arrow below is idempotent under replay):
@@ -232,26 +229,58 @@ object DeltaLog {
   def deltaSeqs(spark: SparkSession, dir: String): Seq[Long] =
     deltas(spark, dir).map(_.seq)
 
-  /** One complete delta dir: its seq, path, the (name, mtime) of every
-    * file in it — what a same-seq rewrite changes — and its bytes. */
-  private case class Delta(seq: Long, path: Path, files: Seq[(String, Long)],
-                           bytes: Long)
+  /** One file directly in a listed dir. Its name, length and
+    * modification time are what an in-place rewrite changes: a Spark
+    * write names its part files afresh, a rename-swap brings other
+    * mtimes. */
+  private[graft] final case class FileStamp(name: String, len: Long,
+                                            mtime: Long)
 
-  private def deltas(spark: SparkSession, dir: String): Seq[Delta] = {
-    val root = new Path(deltaRoot(dir))
-    val f = fs(spark, root)
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).toSeq.flatMap { st =>
-      st.getPath.getName match {
+  /** The stamps of the files and subdirs directly in `dir`, sorted by
+    * name; empty when `dir` is absent. */
+  private[graft] def fileStamps(spark: SparkSession, dir: String): Seq[FileStamp] = {
+    val p = new Path(dir)
+    try fs(spark, p).listStatus(p).toSeq
+      .map(st => FileStamp(st.getPath.getName, st.getLen, st.getModificationTime))
+      .sortBy(_.name)
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+  }
+
+  /** One complete delta dir: its seq, path and file stamps. */
+  private[graft] final case class Delta(seq: Long, path: Path,
+                                        files: Seq[FileStamp]) {
+    def bytes: Long = files.map(_.len).sum
+  }
+
+  private def deltas(spark: SparkSession, dir: String): Seq[Delta] =
+    fileStamps(spark, deltaRoot(dir)).flatMap { st =>
+      st.name match {
         case DirPattern(d) =>
-          val files = f.listStatus(st.getPath).toSeq
-          val stamp = files.map(c => c.getPath.getName -> c.getModificationTime)
-          if (stamp.exists(_._1 == "_SUCCESS"))
-            Some(Delta(d.toLong, st.getPath, stamp.sorted, files.map(_.getLen).sum))
+          val path = new Path(deltaRoot(dir), st.name)
+          val files = fileStamps(spark, path.toString)
+          if (files.exists(_.name == "_SUCCESS")) Some(Delta(d.toLong, path, files))
           else None
         case _ => None
       }
     }.sortBy(_.seq)
+
+  /** A log version: what the merged state of a dir is derived from. */
+  final case class Version(watermark: Long, baseMtime: Long, live: Seq[Delta])
+
+  /** The log version on disk: the watermark, the modification time of
+    * the base's `_SUCCESS` (−1 before the first publish) and every live
+    * delta (seq above the watermark) with its file stamps. Equal
+    * versions read equal merged states; an append, a compaction, a
+    * base republish and a same-seq rewrite (a checkpoint replay, a
+    * scratch store rebuilt in place — new part names under a new
+    * `_SUCCESS`) each change it. */
+  def version(spark: SparkSession, dir: String): Version = {
+    val w = watermark(spark, dir)
+    val success = new Path(basePath(dir), "_SUCCESS")
+    val baseMtime =
+      try fs(spark, success).getFileStatus(success).getModificationTime
+      catch { case _: java.io.FileNotFoundException => -1L }
+    Version(w, baseMtime, deltas(spark, dir).filter(_.seq > w))
   }
 
   /** The live deltas (seq above the watermark) as ONE parquet relation,
@@ -264,7 +293,7 @@ object DeltaLog {
 
   /** What a resolved tail depends on; equal keys read equal tails. */
   private case class TailVersion(session: SparkSession, idCol: String,
-                                 watermark: Long, live: Seq[Delta])
+                                 log: Version)
   private case class Held(version: TailVersion, tail: DataFrame)
   /** Qualified store dir → its held tail (see the object scaladoc). */
   private val held = scala.collection.mutable.Map.empty[String, Held]
@@ -286,16 +315,15 @@ object DeltaLog {
     * false: it retires the version it reads). */
   private def resolvedTail(spark: SparkSession, dir: String, idCol: String,
                            hold: Boolean): Option[DataFrame] = {
-    val w = watermark(spark, dir)
-    val version = TailVersion(spark, idCol, w,
-      deltas(spark, dir).filter(_.seq > w))
+    val at = TailVersion(spark, idCol, version(spark, dir))
+    val live = at.log.live
     val key = qualify(spark, dir)
     held.synchronized {
       held.get(key) match {
-        case Some(h) if h.version == version => Some(h.tail)
+        case Some(h) if h.version == at => Some(h.tail)
         case prior =>
           prior.foreach { h => release(h); held.remove(key) }
-          if (version.live.isEmpty) None
+          if (live.isEmpty) None
           else {
             // a cached plan keeps the partitioning it was planned with
             // (AQE does not coalesce it), so size the resolving shuffle
@@ -304,19 +332,19 @@ object DeltaLog {
             // delete drawn from it writes one file.
             val target = JavaUtils.byteStringAsBytes(
               spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-            val bytes = version.live.map(_.bytes).sum
+            val bytes = live.map(_.bytes).sum
             val parts = math.min(Int.MaxValue.toLong,
               math.max(1L, (bytes + target - 1) / target)).toInt
             // latest-seq-wins per id; within one seq the append is
             // id-unique
             val win = Window.partitionBy(col(idCol)).orderBy(col(SeqCol).desc)
-            val resolved = scanTail(spark, version.live)
+            val resolved = scanTail(spark, live)
               .repartition(parts, col(idCol))
               .withColumn("__rn", row_number().over(win))
               .filter(col("__rn") === 1).drop("__rn", SeqCol)
             if (hold) {
               resolved.persist()
-              held(key) = Held(version, resolved)
+              held(key) = Held(at, resolved)
             }
             Some(resolved)
           }
@@ -472,8 +500,7 @@ object DeltaLog {
   def sizeUpperBound(spark: SparkSession, dir: String): Long = {
     val bc = baseCount(spark, dir).getOrElse(
       SnapshotIO.read(spark, basePath(dir)).map(_.count()).getOrElse(0L))
-    val w = watermark(spark, dir)
-    val live = deltas(spark, dir).filter(_.seq > w)
+    val live = version(spark, dir).live
     bc + (if (live.isEmpty) 0L
       else scanTail(spark, live).filter(!col(TombCol)).count())
   }

@@ -341,10 +341,32 @@ class DeltaLogSpec extends SparkSpec {
     // files' names and mtimes tell the two versions apart
     val side = Files.createTempDirectory("dlogside").toString
     DeltaLog.append(df(1L -> "B2", 5L -> "Q"), side, 1L)
+    val before = DeltaLog.version(spark, dir)
     val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(f.delete(new Path(DeltaLog.deltaPath(dir, 1L)), true))
     assert(f.rename(new Path(DeltaLog.deltaPath(side, 1L)),
       new Path(DeltaLog.deltaPath(dir, 1L))))
+    assert(DeltaLog.version(spark, dir) != before,
+      "a same-seq rewrite swapped in by rename left the log version unchanged")
     assert(rows(dir) == Map(0L -> "a", 1L -> "B2", 5L -> "Q"))
+  }
+
+  test("log version: equal across reads, changed by every write") {
+    val dir = Files.createTempDirectory("dlogversion").toString
+    def version = DeltaLog.version(spark, dir)
+    DeltaLog.append(df(0L -> "a"), dir, 0L)
+    val writes = Seq[(String, () => Any)](
+      "append" -> (() => DeltaLog.append(df(1L -> "b"), dir, 1L)),
+      "compact" -> (() => DeltaLog.compact(spark, dir, "id")),
+      "empty-tail compact republishing the base" ->
+        (() => DeltaLog.compact(spark, dir, "id", foldEmptyTail = true)))
+    writes.foldLeft(version) { case (before, (name, write)) =>
+      assert(rows(dir).nonEmpty)
+      assert(version == before, s"a read before the $name changed the version")
+      write()
+      val after = version
+      assert(after != before, s"the $name left the log version unchanged")
+      after
+    }
   }
 }

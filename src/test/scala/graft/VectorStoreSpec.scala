@@ -475,6 +475,62 @@ class VectorStoreSpec extends SparkSpec {
     assert(ids(b) == ids(a))
   }
 
+  test("cross-instance memos: B's memoized values follow writes made through A") {
+    val s = spark
+    import s.implicits._
+    val data = corpus(150, 8)
+    val self = data(42)._2.toSeq
+    val parity1 = Map("parity" -> "1")
+    def bq(store: VectorStore) =
+      store.searchBq(self, k = 3, rerank = 9, metadataFilter = parity1).collect()
+    def hnsw(store: VectorStore) = store.searchHnsw(self, k = 5, ef = 1000).collect()
+    def ivf(store: VectorStore, nProbe: Int) =
+      store.searchIvf(self, nProbe = nProbe, k = 3).collect()
+    def selfHit(rows: Array[org.apache.spark.sql.Row]) =
+      rows.head.getAs[Double]("dist") < 1e-6
+    // (what B serves first, what A writes, what B must then see)
+    val cases = Seq[(String, (VectorStore, VectorStore) => Unit,
+        VectorStore => Unit, (VectorStore, VectorStore) => Unit)](
+      ("live count", (_, b) => assert(b.size() == 150L),
+        a => a.delete(Seq(7L)),
+        (_, b) => assert(b.size() == 149L, "B's size() missed A's delete")),
+      ("filtered BQ thresholds", (_, b) => bq(b),
+        a => a.delete(Seq(9L)),
+        { (_, b) =>
+          val trained = b.bqTrainCount.get()
+          bq(b)
+          assert(b.bqTrainCount.get() == trained + 1,
+            "B served thresholds trained before A's delete")
+        }),
+      ("HNSW build row", { (a, b) =>
+          a.buildHnsw(m = 8, efConstruction = 50, numPartitions = 4); hnsw(b) },
+        a => a.buildHnsw(m = 8, efConstruction = 50, numPartitions = 2),
+        { (a, b) =>
+          val got = hnsw(b)
+          assert(selfHit(got))
+          assert(got.map(_.getAs[Long]("id")).toSeq ==
+            hnsw(a).map(_.getAs[Long]("id")).toSeq,
+            "B searched A's new graph with the old shard count")
+        }),
+      ("IVF serve model", { (a, b) =>
+          a.buildIvf(12, hierarchical = Some(true)); ivf(b, 12) },
+        a => a.buildIvf(4),
+        (_, b) => assert(selfHit(ivf(b, 4)),
+          "B probed A's flat table through the replaced hierarchical model")))
+    cases.foreach { case (name, serve, write, check) =>
+      withClue(s"$name: ") {
+        val dir = Files.createTempDirectory("storexmemo").toString
+        val a = VectorStore.open(s, dir, dim = 8)
+        val b = VectorStore.open(s, dir, dim = 8)
+        a.ingest(data.map { case (i, v) =>
+          (v, Map("parity" -> (i % 2).toString)) }.toDF("embedding", "metadata"))
+        serve(a, b)
+        write(a)
+        check(a, b)
+      }
+    }
+  }
+
   test("compact folds the index sidecars: tables drop tombstoned ids, sidecars clear") {
     val s = spark
     import s.implicits._
