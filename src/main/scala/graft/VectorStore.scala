@@ -1,8 +1,10 @@
 package graft
 
-import graft.core.Tables
+import graft.core.{DeltaLog, Tables}
 import graft.functions.HashingEmbedder
 import graft.operators.{Bq, Crud, Hnsw, Ivf, IvfPq, Lsh, Pq, Search, Sq}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,8 +18,19 @@ import org.apache.spark.sql.functions._
   * per-mutation delta dirs). Driver-side state is the store path and a
   * few derived values memoized on what is on disk ([[memo]]): the live
   * row count and per-filter BQ thresholds on the log version, the HNSW
-  * build row on the files of `hnsw_model`, the hierarchical IVF serve
-  * model on the files of `ivf_model` and `ivf_supers`. Mutations
+  * build row on the files of `hnsw_model`, the IVF serve model (flat
+  * or hierarchical) on the files of `ivf_model` and `ivf_supers`.
+  *
+  * Executor-side state is the persisted HNSW graph: its shards,
+  * reconstructed from the delta-log base and `hnsw_edges`
+  * ([[graft.operators.Hnsw.holdShards]]), persisted MEMORY_ONLY and
+  * keyed on the file stamps of `hnsw_model` and `hnsw_edges` and on
+  * the base's identity (the log watermark and the base `_SUCCESS`
+  * mtime). Every instance over one dir shares it; at most one graph is
+  * held per dir, and the first search that sees another key releases
+  * it and holds the new one — so the first search after a build,
+  * refresh or compaction pays the reconstruction, and later ones only
+  * apply the live delta tail as a shadow. Mutations
   * (ingest/delete) are O(batch) delta appends — the reference's save
   * is likewise an O(1) slot write (storage.py:198-230) — and
   * [[compact]] folds the tail on the caller's cadence. Pre-delta
@@ -292,12 +305,15 @@ class VectorStore private (val spark: SparkSession, val path: String,
           "metadata_json", "is_deleted")
         // a hierarchical model assigns through the two-level kernel
         // (O(2·√k·dim)/row) — the flat O(k·dim) scan would be the
-        // exact per-row cliff the hierarchy exists to remove
-        val assignedNew =
-          if (successAt(ivfSupersPath))
-            Ivf.assignHier(proj,
-              Ivf.loadHier(spark, ivfModelPath, ivfSupersPath, "embedding"))
-          else Ivf.assign(proj, Ivf.load(spark, ivfModelPath, "embedding"))
+        // exact per-row cliff the hierarchy exists to remove. A lazy
+        // (large-k) serve model holds only some child blocks, so the
+        // assignment loads the whole model
+        val assignedNew = ivfServeModel() match {
+          case Left(flat) => Ivf.assign(proj, flat)
+          case Right(hm: Ivf.HierModel) => Ivf.assignHier(proj, hm)
+          case Right(_) => Ivf.assignHier(proj,
+            Ivf.loadHier(spark, ivfModelPath, ivfSupersPath, "embedding"))
+        }
         assignedNew
           .repartition(col(Ivf.ClusterCol))
           .write.mode("append").partitionBy(Ivf.ClusterCol).parquet(ivfDataPath)
@@ -370,7 +386,7 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * other route. */
   def searchHnsw(query: Seq[Float], k: Int, ef: Int = 0,
                  metadataFilter: Map[String, String] = Map.empty): DataFrame = {
-    val corpus = live(metadataFilter)
+    lazy val corpus = live(metadataFilter)
     val persisted = successAt(hnswModelPath) && successAt(hnswEdgesPath)
     // metadata-filtered searches route by SELECTIVITY when a persisted
     // graph exists: a TIGHT filter keeps the pre-filter rebuild (shard
@@ -394,22 +410,23 @@ class VectorStore private (val spark: SparkSession, val path: String,
         filteredN.toDouble / total >= sessionConfig.hnswPostFilterMinFraction
     }
     if (persisted && (metadataFilter.isEmpty || postFilterRoute)) {
-      // persisted-graph serving (the B11 load path): search the edges
-      // table [[buildHnsw]] wrote instead of rebuilding every shard
-      // graph per query. Rows ingested AFTER the build (id ≥ the build
-      // watermark) are served by an EXACT scan of that tail, merged
-      // with the graph results — so post-build ingests surface
-      // immediately with exact (not just graph-approximate) ranking,
-      // ingest() stays O(batch), and the tail bill amortizes away at
-      // the next buildHnsw. Deletes need nothing: the live-join drops
-      // tombstoned ids and the graph search skips the dangling edges
-      // (the reference's B2 tolerance, hnsw.py:370-373).
+      // persisted-graph serving (the B11 load path): walk the shard
+      // graphs held on the executors ([[heldHnsw]]: reconstructed from
+      // the edges table [[buildHnsw]] wrote once per build, refresh or
+      // compaction, not once per query). Rows ingested AFTER the build
+      // (id ≥ the build watermark) are served by an EXACT scan of that
+      // tail, merged with the graph results — so post-build ingests
+      // surface immediately with exact (not just graph-approximate)
+      // ranking, ingest() stays O(batch), and the tail bill amortizes
+      // away at the next buildHnsw. Writes since the hold reach the
+      // shards as the shadow of the live delta tail: a delete makes its
+      // id absent (the walk steps over it — the reference's B2
+      // tolerance, hnsw.py:370-373), an upsert replaces its vector.
       val m = hnswModel() // memo — no per-call model-row read
       // the graph was built over the UNFILTERED corpus, so the graph
       // side always walks the unfiltered rows below the watermark; a
       // filtered query over-fetches (k ÷ match fraction, 2× margin) and
       // post-filters, and its beam widens to cover the fetch window
-      val unfiltered = if (metadataFilter.isEmpty) corpus else live(Map.empty)
       val kFetch = if (!postFilterRoute) k
         else math.min(Int.MaxValue.toLong, math.max(k.toLong,
           math.ceil(2.0 * k * liveCount().toDouble /
@@ -417,17 +434,20 @@ class VectorStore private (val spark: SparkSession, val path: String,
       val eff0 =
         if (ef > 0) ef
         else Hnsw.scaledEf(sessionConfig.ef, liveCount(), m.parts)
-      val edgesDf = spark.read.parquet(hnswEdgesPath)
-      val graphBase = unfiltered.filter(col("id") < m.watermark)
-      // only the over-fetch route widens the beam (it must cover the
-      // fetch window); the unfiltered path keeps its ef contract
-      def graphRaw(kf: Int) = Hnsw.searchEdges(edgesDf, graphBase,
-          "id", "embedding", Seq((0L, query.toArray)), kf,
-          if (postFilterRoute) math.max(eff0, kf) else eff0,
-          m.parts, m.params)
-        .select("id", "dist")
-      val graphSide = if (!postFilterRoute) graphRaw(kFetch)
-        else {
+      val (shards, shadow) = heldHnsw(m)
+      val q = query.toArray
+      try {
+        if (!postFilterRoute) {
+          // one job: per shard the graph walk and the exact scan of the
+          // rows at or above the watermark. The two sides hold disjoint
+          // ids, so the merge is the top k of both
+          val (graph, tail) = Hnsw.searchShards(shards, shadow, q, kFetch, eff0, k)
+          hitsFrame(Hnsw.topK((graph ++ tail).iterator, k))
+        } else {
+          // only the over-fetch route widens the beam (it must cover the
+          // fetch window); the unfiltered path keeps its ef contract
+          def graphRaw(kf: Int) = hitsFrame(Hnsw.searchShards(shards, shadow, q,
+            kf, math.max(eff0, kf), kPost = 0)._1)
           // the 2× global-selectivity margin under-fills k when the
           // filter is CORRELATED against the query's neighborhood
           // (local match fraction ≪ global — the r16 VERDICT #6
@@ -439,31 +459,24 @@ class VectorStore private (val spark: SparkSession, val path: String,
           // uncorrelated query fills on the first window.
           val maxKf = math.min(Int.MaxValue.toLong,
             math.max(kFetch.toLong, liveCount())).toInt
-          var kf = kFetch
-          var rows = graphRaw(kf).join(corpus.select("id"), "id")
+          def survivors(kf: Int) = graphRaw(kf).join(corpus.select("id"), "id")
             .orderBy(col("dist").asc, col("id").asc).limit(k).collect()
+            .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+          var kf = kFetch
+          var rows = survivors(kf)
           while (rows.length < k && kf < maxKf) {
             kf = math.min(maxKf.toLong, 4L * kf).toInt
-            rows = graphRaw(kf).join(corpus.select("id"), "id")
-              .orderBy(col("dist").asc, col("id").asc).limit(k).collect()
+            rows = survivors(kf)
           }
-          spark.createDataFrame(
-            java.util.Arrays.asList(rows: _*),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("id",
-                org.apache.spark.sql.types.LongType, nullable = false),
-              org.apache.spark.sql.types.StructField("dist",
-                org.apache.spark.sql.types.DoubleType, nullable = false))))
+          val tailSide = Search.knnExact(corpus.filter(col("id") >= m.watermark),
+              "id", "embedding", query, k)
+            .select("id", "dist")
+          // the graph side holds ids below the watermark only, so the
+          // two sides are disjoint here too
+          hitsFrame(rows).unionByName(tailSide)
+            .orderBy(col("dist").asc, col("id").asc).limit(k)
         }
-      val tailSide = Search.knnExact(corpus.filter(col("id") >= m.watermark),
-          "id", "embedding", query, k)
-        .select("id", "dist")
-      // dropDuplicates: in the window between a refreshHnsw publish and
-      // its watermark bump, tail ids are ALSO in the graph — both sides
-      // return them at identical distances, and the dedup (≤ 2k rows)
-      // keeps the merge correct rather than double-counting one id
-      graphSide.unionByName(tailSide).dropDuplicates("id")
-        .orderBy(col("dist").asc, col("id").asc).limit(k)
+      } finally shadow.destroy()
     } else {
       val eff =
         if (ef > 0) ef
@@ -473,6 +486,47 @@ class VectorStore private (val spark: SparkSession, val path: String,
       Hnsw.search(corpus, "id", "embedding", query, k, eff)
         .select("id", "dist")
     }
+  }
+
+  /** (id, dist) hits as a local DataFrame. */
+  private def hitsFrame(hits: Seq[(Long, Double)]): DataFrame = {
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    spark.createDataFrame(
+      java.util.Arrays.asList(hits.map { case (id, d) =>
+        org.apache.spark.sql.Row(id, d) }: _*),
+      StructType(Seq(StructField("id", LongType, nullable = false),
+        StructField("dist", DoubleType, nullable = false))))
+  }
+
+  /** The persisted graph's shards held on the executors, and the live
+    * delta tail broadcast as their shadow (class scaladoc). The shards
+    * are reconstructed from the delta-log base and `hnsw_edges` on the
+    * first search after a build, refresh or compaction; later searches
+    * reuse them and read no edges. Only the tail — which the compaction
+    * cadence bounds — reaches the Spark driver. */
+  private def heldHnsw(m: HnswModelRow): (RDD[Hnsw.Shard], Broadcast[Hnsw.Shadow]) = {
+    val sides = DeltaLog.readSides(spark, dataPath, "id")
+    val key = (spark.sparkContext, stamps(hnswModelPath), stamps(hnswEdgesPath),
+      sides.version.watermark, sides.version.baseMtime)
+    val shards = VectorStore.holdGraph(DeltaLog.qualify(spark, dataPath), key) {
+      val base = sides.base.getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Tables.nodeSchema))
+      Hnsw.holdShards(spark.read.parquet(hnswEdgesPath),
+        base.filter(!col("is_deleted")), "id", "embedding", m.parts, m.params,
+        m.watermark)
+    }
+    // the merged view's liveness: a tombstone or an is_deleted row
+    // makes its id absent (null embedding), any other row is the id's
+    // vector. A tail of tombstone-only deltas carries neither column
+    val shadow = sides.tail.fold(Map.empty: Hnsw.Shadow) { t =>
+      def colOrNull(c: String) = if (t.columns.contains(c)) col(c) else lit(null)
+      val present = coalesce(!col(DeltaLog.TombCol) && !colOrNull("is_deleted"),
+        lit(false))
+      Hnsw.collectShadow(
+        t.select(col("id"), when(present, colOrNull("embedding")).as("embedding")),
+        "id", "embedding", m.parts)
+    }
+    (shards, spark.sparkContext.broadcast(shadow))
   }
 
   /** Persisted HNSW build params + watermark, memoized on the model
@@ -501,8 +555,9 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * through the graph, ids ingested after it are exact-scanned as a
     * tail until the next build — mutation paths stay O(batch).
     * `numPartitions` defaults to the session parallelism; it is pinned
-    * in the model because [[graft.operators.Hnsw.searchEdges]] must
-    * re-shard vectors with the build-time hash. */
+    * in the model because the held shards
+    * ([[graft.operators.Hnsw.holdShards]]) must re-shard vectors with
+    * the build-time hash. */
   def buildHnsw(m: Int = 16, efConstruction: Int = 200,
                 numPartitions: Int = 0, seed: Long = 42L): Unit = {
     val parts = if (numPartitions > 0) numPartitions
@@ -683,14 +738,13 @@ class VectorStore private (val spark: SparkSession, val path: String,
     // two-level build (14.8× rank cost at k = 316k, ScaleProbe
     // ivf_probe_rank_316k). Stores at or below FlatBuildMaxK lists
     // keep the exact flat ranking (searchHier routes internally).
-    hierModelIfPersisted() match {
-      case Some(hm) =>
+    ivfServeModel() match {
+      case Right(hm) =>
         val np = if (nProbe > 0) nProbe
           else Ivf.scaledNProbe(sessionConfig.nProbe, hm.k,
             sessionConfig.ivfProbeFraction)
         Ivf.searchHier(assigned, hm, "id", query, np, k, pred)
-      case None =>
-        val model = Ivf.load(spark, ivfModelPath, "embedding")
+      case Left(model) =>
         val np = if (nProbe > 0) nProbe
           else Ivf.scaledNProbe(sessionConfig.nProbe, model.k,
             sessionConfig.ivfProbeFraction)
@@ -698,19 +752,21 @@ class VectorStore private (val spark: SparkSession, val path: String,
     }
   }
 
-  /** Serve-side hier model, memoized on the model and super dirs'
-    * files — `searchIvf` would otherwise re-collect the WHOLE
-    * child-centroid table on every call; `openHier` additionally keeps
+  /** Serve-side IVF model — Left for a flat model, Right for a
+    * hierarchical one — memoized on the model and super dirs' files:
+    * `searchIvf` and `ingest` would otherwise re-read it on every call
+    * (one job for the flat centroid table, the WHOLE child-centroid
+    * table for a hierarchical one). `openHier` additionally keeps
     * large-k models lazy (counts resident, child blocks LRU-bounded by
     * `graft.ivf.residentModelBytes` — the r16 driver-residency
-    * perf-weak). None for a flat model. */
-  private def hierModelIfPersisted(): Option[Ivf.HierProbe] = {
+    * perf-weak). */
+  private def ivfServeModel(): Either[Ivf.Model, Ivf.HierProbe] = {
     val (model, supers) = (stamps(ivfModelPath), stamps(ivfSupersPath))
     memo("ivf", (model, supers)) {
       if (Seq(model, supers).forall(_.exists(_.name == "_SUCCESS")))
-        Some(Ivf.openHier(spark, ivfModelPath, ivfSupersPath, "embedding",
+        Right(Ivf.openHier(spark, ivfModelPath, ivfSupersPath, "embedding",
           sessionConfig.ivfResidentModelBytes))
-      else None
+      else Left(Ivf.load(spark, ivfModelPath, "embedding"))
     }
   }
 
@@ -1146,4 +1202,31 @@ object VectorStore {
     * config-fixed dim (src/config.yaml:3, storage.py:138). */
   def open(spark: SparkSession, path: String, dim: Int): VectorStore =
     new VectorStore(spark, path, dim)
+
+  /** A store's held HNSW shards and the on-disk state they were
+    * reconstructed from. */
+  private final case class HeldGraph(key: Any, shards: RDD[Hnsw.Shard])
+  /** Qualified vectors dir → its held graph: at most one per store dir,
+    * shared by every instance over it. */
+  private val heldGraphs = scala.collection.mutable.Map.empty[String, HeldGraph]
+
+  /** The shards held for `dir` at `key`, else `shards` persisted and held
+    * in their place — the graph held for another key is released. */
+  private def holdGraph(dir: String, key: Any)(
+      shards: => RDD[Hnsw.Shard]): RDD[Hnsw.Shard] =
+    heldGraphs.synchronized {
+      heldGraphs.get(dir) match {
+        case Some(h) if h.key == key => h.shards
+        case prior =>
+          // a stopped context has already dropped its cached blocks
+          prior.foreach { h =>
+            if (!h.shards.sparkContext.isStopped) h.shards.unpersist(blocking = false)
+          }
+          val held = shards.setName(s"hnsw shards $dir")
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+          heldGraphs(dir) = HeldGraph(key, held)
+          held
+      }
+    }
 }
+

@@ -298,7 +298,7 @@ object DeltaLog {
   /** Qualified store dir → its held tail (see the object scaladoc). */
   private val held = scala.collection.mutable.Map.empty[String, Held]
 
-  private def qualify(spark: SparkSession, dir: String): String = {
+  private[graft] def qualify(spark: SparkSession, dir: String): String = {
     val p = new Path(dir)
     fs(spark, p).makeQualified(p).toString
   }
@@ -308,14 +308,15 @@ object DeltaLog {
     if (!h.version.session.sparkContext.isStopped)
       h.tail.unpersist(blocking = false)
 
-  /** The resolved live tail — latest-seq-wins rows, [[TombCol]] kept —
-    * or None when no delta is live. A tail held at the current version
-    * is reused; any other held tail for the dir is released. `hold`
+  /** The resolved live tail at log version `log` (read by the caller)
+    * — latest-seq-wins rows, [[TombCol]] kept — or None when no delta
+    * is live. A tail held at that version is reused; any other held
+    * tail for the dir is released. `hold`
     * persists and holds a freshly resolved tail ([[compact]] passes
     * false: it retires the version it reads). */
   private def resolvedTail(spark: SparkSession, dir: String, idCol: String,
-                           hold: Boolean): Option[DataFrame] = {
-    val at = TailVersion(spark, idCol, version(spark, dir))
+                           hold: Boolean, log: Version): Option[DataFrame] = {
+    val at = TailVersion(spark, idCol, log)
     val live = at.log.live
     val key = qualify(spark, dir)
     held.synchronized {
@@ -376,11 +377,31 @@ object DeltaLog {
                  idCol: String): Option[DataFrame] =
     merged(spark, dir, idCol, hold = true)
 
+  /** The two sides a merged read combines, at one log version: the base
+    * (None before the first publish) and the resolved live tail —
+    * latest-seq-wins rows with [[TombCol]] kept, None when no delta is
+    * live — held as [[readMerged]] holds it. For readers that keep
+    * state derived from the base and apply the tail per read. */
+  private[graft] final case class Sides(version: Version,
+                                        base: Option[DataFrame],
+                                        tail: Option[DataFrame])
+
+  private[graft] def readSides(spark: SparkSession, dir: String,
+                               idCol: String): Sides =
+    sides(spark, dir, idCol, hold = true)
+
+  private def sides(spark: SparkSession, dir: String, idCol: String,
+                    hold: Boolean): Sides = {
+    adoptIfLegacy(spark, dir)
+    val log = version(spark, dir)
+    Sides(log, SnapshotIO.read(spark, basePath(dir)),
+      resolvedTail(spark, dir, idCol, hold, log))
+  }
+
   private def merged(spark: SparkSession, dir: String, idCol: String,
                      hold: Boolean): Option[DataFrame] = {
-    adoptIfLegacy(spark, dir)
-    val base = SnapshotIO.read(spark, basePath(dir))
-    resolvedTail(spark, dir, idCol, hold).map { resolved =>
+    val Sides(_, base, tail) = sides(spark, dir, idCol, hold)
+    tail.map { resolved =>
       val alive = resolved.filter(!col(TombCol)).drop(TombCol)
       base match {
         case None => alive

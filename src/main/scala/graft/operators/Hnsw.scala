@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
@@ -26,14 +28,23 @@ import scala.collection.mutable
   * the reference's own contract: recall ≥ 0.7 vs exact on ≥ 80% of
   * queries (test_hnsw.py:141-153), not structural identity.
   *
-  * Scale: build is embarrassingly parallel per shard; search touches
-  * ~ef·M nodes per shard. For serving-size corpora prefer IVF (O6) —
-  * this operator exists for capability parity and for in-memory-shard
-  * regimes (each executor holds its shard's graph). Per-partition graph
-  * memory is `numPartitions`-bounded: a shard of s vectors holds
-  * ~s·(4·dim + 16·M levels) bytes (~110 MB at 10M rows / 32 parts /
-  * dim 64 / M=8), so size partitions to executor memory, not to core
-  * count.
+  * Scale: build is embarrassingly parallel per shard. A store
+  * ([[graft.VectorStore.searchHnsw]]) reconstructs each shard graph
+  * from the persisted edges once per build, refresh or compaction and
+  * holds it on the executors ([[holdShards]], persisted MEMORY_ONLY);
+  * every search then touches ~ef·M nodes per shard, and writes since
+  * the hold reach the shards as a shadow bounded by the live delta
+  * tail. [[searchEdges]] reconstructs per call, holding nothing. What
+  * is held is what each query used to rebuild and drop: per shard its
+  * graph — a shard of s vectors holds ~s·(4·dim + 16·M levels) bytes
+  * (~110 MB at 10M rows / 32 parts / dim 64 / M=8) — plus its rows
+  * past the build watermark, so held memory is the corpus split
+  * `numPartitions` ways; size partitions to executor memory, not to
+  * core count. Under memory pressure Spark drops held blocks and
+  * recomputes them from lineage, which costs what a search cost
+  * before the hold. For serving-size corpora prefer IVF (O6) — this
+  * operator exists for capability parity and for in-memory-shard
+  * regimes.
   *
   * Measured quality knobs (ScaleProbe `hnsw_*`, uniform-random 64-dim —
   * the distance-concentration worst case; recall@10 vs exact over 10
@@ -82,6 +93,22 @@ object Hnsw {
       math.pow(perShard.toDouble / EfAnchorShardN, EfScaleExponent)).toInt
   }
 
+  /** L2 distance in double precision, summed left to right — the same
+    * operation sequence as [[Search.knnExact]]'s kernel, so a graph
+    * distance and an exact-scan distance of one pair are equal bits. */
+  private[operators] def l2(a: Array[Float], b: Array[Float]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1 }
+    math.sqrt(s)
+  }
+
+  /** A node's vector as one search sees it: null when the node is absent. */
+  private type View = Long => Array[Float]
+
+  /** Stands for "no shadow row" in a shadow lookup (a null row means absent). */
+  private val Unshadowed = new Array[Float](0)
+  private val NoLinks = Array.empty[mutable.ArrayBuffer[Long]]
+
   /** Partition-local HNSW graph (standard algorithm, double-precision
     * distances, (dist, id) tie-break everywhere). */
   final class LocalGraph(params: Params, rng: scala.util.Random) {
@@ -96,30 +123,28 @@ object Hnsw {
     var entryPoint: Long = -1L
     var maxLevel: Int = -1
 
-    private def dist(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1 }
-      math.sqrt(s)
-    }
-    private def distTo(q: Array[Float], id: Long): Double = dist(q, vectors(id))
-
     def size: Int = vectors.size
+
+    private val own: View = id => vectors.getOrNull(id)
+    private def links(id: Long) = neighbors.getOrElse(id, NoLinks)
+    private def levelOf(id: Long): Int = math.max(links(id).length - 1, 0)
 
     private def sampleLevel(): Int =
       math.floor(-math.log(rng.nextDouble() max Double.MinPositiveValue) * levelMult).toInt
 
     /** Greedy hill-climb at one level (upper-layer descent). */
-    private def greedyStep(q: Array[Float], start: Long, level: Int): Long = {
+    private def greedyStep(q: Array[Float], start: Long, level: Int, view: View): Long = {
       var curr = start
-      var currDist = distTo(q, curr)
+      var currDist = l2(q, view(curr))
       var improved = true
       while (improved) {
         improved = false
-        val ns = neighbors(curr)
+        val ns = links(curr)
         if (level < ns.length) {
           ns(level).foreach { nb =>
-            if (vectors.contains(nb)) {
-              val d = distTo(q, nb)
+            val v = view(nb)
+            if (v != null) {
+              val d = l2(q, v)
               if (d < currDist || (d == currDist && nb < curr)) {
                 curr = nb; currDist = d; improved = true
               }
@@ -132,24 +157,26 @@ object Hnsw {
 
     /** Best-first beam search of width ef at one level. Returns (dist, id)
       * ascending. */
-    private def searchLayer(q: Array[Float], entry: Long, ef: Int, level: Int): mutable.ArrayBuffer[(Double, Long)] = {
+    private def searchLayer(q: Array[Float], entry: Long, ef: Int, level: Int,
+                            view: View): mutable.ArrayBuffer[(Double, Long)] = {
       val visited = mutable.HashSet[Long](entry)
       implicit val ord: Ordering[(Double, Long)] = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
       val candidates = mutable.PriorityQueue.empty[(Double, Long)](ord.reverse) // min-heap
       val results = mutable.PriorityQueue.empty[(Double, Long)](ord)           // max-heap of best ef
-      val d0 = distTo(q, entry)
+      val d0 = l2(q, view(entry))
       candidates.enqueue((d0, entry)); results.enqueue((d0, entry))
       while (candidates.nonEmpty) {
         val (cd, cid) = candidates.dequeue()
         if (cd > results.head._1 && results.size >= ef) {
           candidates.clear() // early termination: next candidate can't improve
         } else {
-          val ns = neighbors(cid)
+          val ns = links(cid)
           if (level < ns.length) {
             ns(level).foreach { nb =>
-              if (!visited.contains(nb) && vectors.contains(nb)) {
+              val v = if (visited.contains(nb)) null else view(nb)
+              if (v != null) {
                 visited += nb
-                val d = distTo(q, nb)
+                val d = l2(q, v)
                 if (results.size < ef || d < results.head._1) {
                   candidates.enqueue((d, nb))
                   results.enqueue((d, nb))
@@ -174,20 +201,21 @@ object Hnsw {
       * candidate is present and the filter is a no-op. */
     private def selectNeighbors(q: Array[Float], cands: Seq[Long], count: Int): Seq[Long] =
       cands.distinct.filter(vectors.contains)
-        .map(c => (distTo(q, c), c)).sorted.take(count).map(_._2)
+        .map(c => (l2(q, vectors(c)), c)).sorted.take(count).map(_._2)
 
     def insert(id: Long, vec: Array[Float]): Unit = {
       if (vectors.contains(id)) return // idempotent re-insert (hnsw.py:152-155)
+      ranked = null
       val level = sampleLevel()
       vectors(id) = vec
       neighbors(id) = Array.fill(level + 1)(mutable.ArrayBuffer.empty[Long])
       if (entryPoint < 0) { entryPoint = id; maxLevel = level; return }
       var curr = entryPoint
       var l = maxLevel
-      while (l > level) { curr = greedyStep(vec, curr, l); l -= 1 }
+      while (l > level) { curr = greedyStep(vec, curr, l, own); l -= 1 }
       l = math.min(level, maxLevel)
       while (l >= 0) {
-        val cands = searchLayer(vec, curr, params.efConstruction, l)
+        val cands = searchLayer(vec, curr, params.efConstruction, l, own)
         val selected = selectNeighbors(vec, cands.map(_._2).toSeq, m)
         val cap = if (l == 0) maxM0 else maxM
         selected.foreach { nb =>
@@ -207,12 +235,56 @@ object Hnsw {
       if (level > maxLevel) { maxLevel = level; entryPoint = id }
     }
 
-    def search(q: Array[Float], k: Int, ef: Int): Seq[(Long, Double)] = {
-      if (entryPoint < 0) return Seq.empty
-      var curr = entryPoint
-      var l = maxLevel
-      while (l > 0) { curr = greedyStep(q, curr, l); l -= 1 }
-      searchLayer(q, curr, math.max(ef, k), 0)
+    /** The vectors' ids by entry rank — highest level first, lowest id on
+      * ties — computed on the first shadowed search, dropped by insert. */
+    @volatile private var ranked: Array[Long] = null
+    private def rankedIds: Array[Long] = {
+      var r = ranked
+      if (r == null) {
+        r = vectors.keysIterator.toArray
+          .sortBy(id => (-levelOf(id), id))(Ordering.Tuple2(Ordering.Int, Ordering.Long))
+        ranked = r
+      }
+      r
+    }
+
+    /** Top-k by (dist, id). The walk sees the graph through `shadow`: a
+      * row there replaces its id's vector, or removes the id when null,
+      * and may bring in an id with adjacency but no vector here. The
+      * entry point is the present node of highest level, lowest id on
+      * ties (the reference's re-election rule, hnsw.py:250-269) — with
+      * no shadow that is the entry point the build or [[reconstruct]]
+      * left. */
+    def search(q: Array[Float], k: Int, ef: Int,
+               shadow: mutable.LongMap[Array[Float]] = mutable.LongMap.empty): Seq[(Long, Double)] = {
+      val view: View =
+        if (shadow.isEmpty) own
+        else id => {
+          val s = shadow.getOrElse(id, Unshadowed)
+          if (s eq Unshadowed) vectors.getOrNull(id) else s
+        }
+      var entry = -1L
+      var top = -1
+      if (shadow.isEmpty) { entry = entryPoint; top = maxLevel }
+      else {
+        val r = rankedIds
+        var i = 0
+        while (entry < 0 && i < r.length) {
+          if (view(r(i)) != null) { entry = r(i); top = levelOf(entry) }
+          i += 1
+        }
+        shadow.foreachEntry { (id, v) =>
+          if (v != null && !vectors.contains(id)) {
+            val l = levelOf(id)
+            if (l > top || (l == top && (entry < 0 || id < entry))) { entry = id; top = l }
+          }
+        }
+      }
+      if (entry < 0) return Seq.empty
+      var curr = entry
+      var l = top
+      while (l > 0) { curr = greedyStep(q, curr, l, view); l -= 1 }
+      searchLayer(q, curr, math.max(ef, k), 0, view)
         .take(k).map { case (d, id) => (id, d) }.toSeq
     }
   }
@@ -224,10 +296,9 @@ object Hnsw {
                  params: Params = Params(), numPartitions: Int = 0): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism
-    // the shard id is an EXPLICIT column — pmod(murmur3(long id), parts),
-    // the exact mapping [[searchEdges]]/[[insertEdges]] re-derive — and
+    val parts = partsOr(spark, numPartitions)
+    // the shard id is an EXPLICIT column — [[shardOf]], the exact
+    // mapping [[holdShards]]/[[insertEdges]] re-derive — and
     // the graph builder reads pid OFF THE ROWS, never from
     // TaskContext.getPartitionId: when an upstream exchange already
     // satisfies hashpartitioning(pid, parts) the repartition may elide
@@ -241,7 +312,7 @@ object Hnsw {
     // columnar exchange AND the explicit label; per-shard rng and
     // sorted-id insert order are unchanged, so the graph is
     // bit-identical).
-    df.select(pmod(hash(col(idCol).cast("long")), lit(parts)).as("pid"),
+    df.select(shardOf(col(idCol), parts).as("pid"),
         col(idCol).cast("long").as("id"), col(embCol).as("emb"))
       .repartition(parts, col("pid"))
       .mapPartitions { rows =>
@@ -281,8 +352,7 @@ object Hnsw {
                   filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism
+    val parts = partsOr(spark, numPartitions)
     val bq = spark.sparkContext.broadcast(queries)
     // pre-filtering (the reference's exclusion semantics,
     // test_search_api.py:149-172: non-matching docs must NEVER appear):
@@ -323,12 +393,12 @@ object Hnsw {
 
   /** O3 over a PERSISTED index (the B11 load path): reconstruct each
     * shard's graph from the edges table emitted by [[buildEdges]] plus
-    * the vector table, search without re-running graph construction.
+    * the vector table ([[holdShards]], not persisted here), search
+    * without re-running graph construction.
     *
     * `numPartitions` must be the value used at build time: vectors are
     * re-keyed to their shard with the same hash partitioning
-    * (pmod(murmur3(id), parts) — exactly HashPartitioning's id
-    * expression), so each shard's adjacency meets its own vectors.
+    * ([[shardOf]]), so each shard's adjacency meets its own vectors.
     * The per-shard entry point is re-elected as the node with the
     * highest level (lowest id on ties) — the reference's re-election
     * rule (hnsw.py:250-269). Dangling edge targets are skipped by the
@@ -339,37 +409,145 @@ object Hnsw {
                   params: Params = Params()): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism
     val bq = spark.sparkContext.broadcast(queries)
-    // hash the CASTED long, not the raw column: buildEdges repartitions
-    // on the post-cast long id, and murmur3 hashes int vs long inputs
-    // differently — hashing the raw column would strand every vector of
-    // a non-bigint id column in the wrong shard (adjacency/vector
-    // mismatch → silently degraded results)
-    val vds = vectors
-      .select(pmod(hash(col(idCol).cast("long")), lit(parts)).as("pid"),
-        col(idCol).cast("long").as("id"), col(embCol).as("emb"))
-      .as[(Int, Long, Seq[Float])]
-    val eds = edges.select(col("partition_id").cast("int"),
-        col("src").cast("long"), col("level").cast("int"), col("dst").cast("long"))
-      .as[(Int, Long, Int, Long)]
-    val local = vds.groupByKey(_._1).cogroup(eds.groupByKey(_._1)) {
-      (pid, vs, es) =>
-        val g = reconstruct(pid, params,
-          vs.map { case (_, id, emb) => (id, emb.toArray) },
-          es.map { case (_, src, level, dst) => (src, level, dst) })
+    val local = holdShards(edges, vectors, idCol, embCol, numPartitions, params)
+      .flatMap { s =>
         bq.value.iterator.flatMap { case (qid, qv) =>
-          g.search(qv, k, ef).iterator.map { case (id, d) => (qid, id, d) }
+          s.graph.search(qv, k, ef).iterator.map { case (id, d) => (qid, id, d) }
         }
-    }.toDF("query_id", "id", "dist")
+      }.toDF("query_id", "id", "dist")
     val w = Window.partitionBy(col("query_id")).orderBy(col("dist").asc, col("id").asc)
     local.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** Rebuild one shard's graph from its vectors + persisted adjacency;
-    * entry point re-elected as the highest-level node, lowest id on ties
-    * (the reference's re-election rule, hnsw.py:250-269). */
+  /** The shard of an id: pmod(murmur3(long id), parts) — exactly
+    * HashPartitioning's id expression. It hashes the CASTED long, as
+    * [[buildEdges]] does: murmur3 hashes int and long inputs
+    * differently, and hashing the raw column would strand every vector
+    * of a non-bigint id column in the wrong shard (adjacency/vector
+    * mismatch → silently degraded results). */
+  private def shardOf(id: Column, parts: Int): Column =
+    pmod(hash(id.cast("long")), lit(parts))
+
+  private def partsOr(spark: SparkSession, numPartitions: Int): Int =
+    if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
+
+  /** One shard of a persisted graph, reconstructed once: the graph over
+    * the shard's vectors below `watermark` (with the adjacency of every
+    * persisted src) and the shard's rows at or above it, which a search
+    * scans exactly. */
+  final class Shard(val pid: Int, val graph: LocalGraph, watermark: Long,
+                    post: Array[(Long, Array[Float])]) {
+    /** The graph walk's top `kGraph` and the exact scan's top `kPost`,
+      * each (id, dist) ascending by (dist, id). Both see the shard
+      * through `shadow` — its rows of a store's live tail, a null vector
+      * marking the id absent: below the watermark a row replaces or
+      * removes a graph node ([[LocalGraph.search]]), at or above it a
+      * row replaces or removes a scanned row, or adds one. */
+    def search(q: Array[Float], kGraph: Int, ef: Int, kPost: Int,
+               shadow: Array[(Long, Array[Float])]): (Seq[(Long, Double)], Seq[(Long, Double)]) = {
+      val below = mutable.LongMap.empty[Array[Float]]
+      val above = mutable.LongMap.empty[Array[Float]]
+      shadow.foreach { case (id, v) => if (id < watermark) below(id) = v else above(id) = v }
+      val walked = if (kGraph > 0) graph.search(q, kGraph, ef, below) else Seq.empty
+      val scanned = post.iterator.filterNot(r => above.contains(r._1)) ++
+        above.iterator.filter(_._2 != null)
+      (walked, topK(scanned.map { case (id, v) => (id, l2(q, v)) }, kPost))
+    }
+  }
+
+  private val ByDistId: Ordering[(Long, Double)] =
+    Ordering.by[(Long, Double), (Double, Long)](h => (h._2, h._1))(
+      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+
+  /** The `k` least (id, dist) hits by (dist, id), ascending. */
+  private[graft] def topK(hits: Iterator[(Long, Double)], k: Int): Seq[(Long, Double)] = {
+    val heap = mutable.PriorityQueue.empty[(Long, Double)](ByDistId)
+    hits.foreach { h =>
+      if (heap.size < k) heap.enqueue(h)
+      else if (k > 0 && ByDistId.lt(h, heap.head)) { heap.dequeue(); heap.enqueue(h) }
+    }
+    heap.toSeq.sorted(ByDistId)
+  }
+
+  /** Reconstruct every shard of a persisted graph, once: vector rows
+    * (keyed by [[shardOf]]), edge rows (keyed by their partition_id)
+    * and one marker row per shard id go through ONE exchange on the
+    * shard id and are grouped by it inside each partition. Each
+    * adjacency list keeps its persisted order, and every shard id in
+    * [0, numPartitions) gets a [[Shard]], even one with no rows yet.
+    * Vector rows below `watermark` are graph nodes, the rest the
+    * shard's exact-scan list. Nothing is persisted here: a caller that
+    * searches many times persists the result. */
+  def holdShards(edges: DataFrame, vectors: DataFrame, idCol: String,
+                 embCol: String, numPartitions: Int = 0, params: Params = Params(),
+                 watermark: Long = Long.MaxValue): RDD[Shard] = {
+    val spark = vectors.sparkSession
+    val parts = partsOr(spark, numPartitions)
+    val none = lit(null)
+    val vs = vectors.select(shardOf(col(idCol), parts).as("pid"),
+      col(idCol).cast("long").as("id"), col(embCol).cast("array<float>").as("emb"),
+      none.cast("int").as("level"), none.cast("long").as("dst"))
+    val es = edges.select(col("partition_id").cast("int").as("pid"),
+      col("src").cast("long").as("id"), none.cast("array<float>").as("emb"),
+      col("level").cast("int").as("level"), col("dst").cast("long").as("dst"))
+    val marks = spark.range(parts).select(col("id").cast("int").as("pid"),
+      none.cast("long").as("id"), none.cast("array<float>").as("emb"),
+      none.cast("int").as("level"), none.cast("long").as("dst"))
+    vs.unionByName(es).unionByName(marks)
+      .repartition(parts, col("pid")).rdd
+      .mapPartitions { rows =>
+        val byPid = mutable.HashMap.empty[Int,
+          (mutable.ArrayBuffer[(Long, Array[Float])], mutable.ArrayBuffer[(Long, Int, Long)])]
+        rows.foreach { r =>
+          val (vecs, adj) = byPid.getOrElseUpdate(r.getInt(0),
+            (mutable.ArrayBuffer.empty, mutable.ArrayBuffer.empty))
+          if (!r.isNullAt(3)) adj += ((r.getLong(1), r.getInt(3), r.getLong(4)))
+          else if (!r.isNullAt(1)) vecs += ((r.getLong(1), r.getSeq[Float](2).toArray))
+        }
+        byPid.iterator.map { case (pid, (vecs, adj)) =>
+          val (below, post) = vecs.partition(_._1 < watermark)
+          new Shard(pid, reconstruct(pid, params, below.iterator, adj.iterator),
+            watermark, post.toArray)
+        }
+      }
+  }
+
+  /** Rows that shadow held shards, by shard id: (id, vector), a null
+    * vector marking the id absent. */
+  private[graft] type Shadow = Map[Int, Array[(Long, Array[Float])]]
+
+  /** Collect `rows` (`idCol`, `embCol`; a null embedding marks the id
+    * absent) to the Spark driver as a [[Shadow]] over `numPartitions`
+    * shards. The driver holds exactly these rows, so callers bound them. */
+  private[graft] def collectShadow(rows: DataFrame, idCol: String, embCol: String,
+                    numPartitions: Int): Shadow =
+    rows.select(shardOf(col(idCol), numPartitions), col(idCol).cast("long"),
+        col(embCol)).collect()
+      .groupBy(_.getInt(0)).map { case (pid, rs) =>
+        pid -> rs.map(r => (r.getLong(1),
+          if (r.isNullAt(2)) null else r.getSeq[Float](2).toArray))
+      }
+
+  /** One job over `shards` ([[holdShards]]) seen through `shadow`: the
+    * graph side's global top `kGraph` and the exact-scan side's global
+    * top `kPost`, each (id, dist) ascending by (dist, id) — the
+    * per-shard tops of [[Shard.search]], merged on the Spark driver. */
+  private[graft] def searchShards(shards: RDD[Shard], shadow: Broadcast[Shadow],
+                   query: Array[Float], kGraph: Int, ef: Int,
+                   kPost: Int): (Seq[(Long, Double)], Seq[(Long, Double)]) = {
+    val hits = shards.map { s =>
+      s.search(query, kGraph, ef, kPost, shadow.value.getOrElse(s.pid, Array.empty))
+    }.collect()
+    (topK(hits.iterator.flatMap(_._1), kGraph), topK(hits.iterator.flatMap(_._2), kPost))
+  }
+
+  /** Rebuild one shard's graph from its vectors + persisted adjacency.
+    * Every src keeps its adjacency, with or without a vector here (a
+    * search's shadow may bring the vector in); a vector without
+    * adjacency is a level-0 node with no links. The entry point is
+    * re-elected among the vectors as the highest-level node, lowest id
+    * on ties (the reference's re-election rule, hnsw.py:250-269). */
   private def reconstruct(pid: Int, params: Params,
                           vecs: Iterator[(Long, Array[Float])],
                           es: Iterator[(Long, Int, Long)]): LocalGraph = {
@@ -380,11 +558,13 @@ object Hnsw {
       adj.getOrElseUpdate(src, mutable.Map.empty)
         .getOrElseUpdate(level, mutable.ArrayBuffer.empty) += dst
     }
-    g.vectors.keysIterator.foreach { id =>
-      val byLevel = adj.getOrElse(id, mutable.Map.empty)
-      val maxL = if (byLevel.isEmpty) 0 else byLevel.keysIterator.max + 1
-      g.neighbors(id) = Array.tabulate(math.max(maxL, 1))(l =>
+    adj.foreachEntry { (id, byLevel) =>
+      g.neighbors(id) = Array.tabulate(byLevel.keysIterator.max + 1)(l =>
         byLevel.getOrElse(l, mutable.ArrayBuffer.empty))
+    }
+    g.vectors.keysIterator.foreach { id =>
+      if (!g.neighbors.contains(id))
+        g.neighbors(id) = Array(mutable.ArrayBuffer.empty[Long])
     }
     if (g.vectors.nonEmpty) {
       val (ep, lvl) = g.vectors.keysIterator
@@ -416,10 +596,9 @@ object Hnsw {
                   params: Params = Params()): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism
+    val parts = partsOr(spark, numPartitions)
     def keyed(df: DataFrame, isNew: Boolean) = df
-      .select(pmod(hash(col(idCol).cast("long")), lit(parts)).as("pid"),
+      .select(shardOf(col(idCol), parts).as("pid"),
         col(idCol).cast("long").as("id"), col(embCol).as("emb"),
         lit(isNew).as("is_new"))
     val vds = keyed(vectors, isNew = false)
@@ -437,7 +616,8 @@ object Hnsw {
       val g = reconstruct(pid, params, existing.iterator,
         es.map { case (_, src, level, dst) => (src, level, dst) })
       fresh.sortInPlaceBy(_._1).foreach { case (id, v) => g.insert(id, v) }
-      g.neighbors.iterator.flatMap { case (src, levels) =>
+      // the adjacency of srcs whose vectors are gone is not re-emitted
+      g.neighbors.iterator.filter(e => g.vectors.contains(e._1)).flatMap { case (src, levels) =>
         levels.iterator.zipWithIndex.flatMap { case (nbs, level) =>
           nbs.iterator.map(dst => (pid, src, level, dst))
         }

@@ -2,11 +2,8 @@ package graft
 
 import graft.core.{DeltaLog, SnapshotIO}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** Append-only delta log: merge-on-read semantics, tombstones, cadence
   * compaction, and idempotence across every crash/replay point the
@@ -24,36 +21,6 @@ class DeltaLogSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     pairs.toDF("id", "v")
-  }
-
-  /** Spark jobs `body` launches, counted by a listener. The bus delivers
-    * events in order, so once a marker job started after `body` has been
-    * seen, every job of `body` has been counted. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"dlog-jobs-${System.nanoTime()}"
-    val counted = new AtomicInteger
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => counted.incrementAndGet(); ()
-          case Some(g) if g == s"$group-end" => marker.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      body
-      sc.setJobGroup(s"$group-end", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job never seen")
-      counted.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 
   test("append + readMerged: latest seq wins per id, base shadowed") {

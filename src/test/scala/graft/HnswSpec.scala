@@ -1,7 +1,10 @@
 package graft
 
+import graft.core.DeltaLog
 import graft.operators.{Hnsw, Search}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import java.nio.file.Files
 import scala.collection.mutable
 
 /** HNSW contracts from the reference's tests: self@dist<1e-6 + ordering
@@ -231,5 +234,149 @@ class HnswSpec extends SparkSpec {
     assert(Hnsw.scaledEf(50, 10000000L, 320) == 50)
     // degenerate partition counts clamp instead of dividing by zero
     assert(Hnsw.scaledEf(50, 31250L, 0) == 50)
+  }
+
+  /** Fingerprint of an edges table: its row count and a hash over its
+    * (partition_id, src, level) adjacency lists, each in stored order —
+    * the order a reconstructed graph walks them in. */
+  private def edgePrint(edges: DataFrame): (Int, Int) = {
+    val rows = edges.select("partition_id", "src", "level", "dst").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getInt(2), r.getLong(3)))
+    val lists = rows.groupBy(t => (t._1, t._2, t._3)).toSeq
+      .map { case (key, ts) => (key, ts.map(_._4).toSeq) }.sortBy(_._1)
+    (rows.length, scala.util.hashing.MurmurHash3.seqHash(lists))
+  }
+
+  test("buildHnsw and refreshHnsw write the pinned edge sets") {
+    // the values are the edges this corpus built and refreshed to
+    // before searches held the graph on the executors: holding must
+    // not change what is persisted
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("hnswpin").toString
+    val store = VectorStore.open(s, dir, dim = 8)
+    val data = corpus(360, 8, seed = 7L)
+    store.ingest(data.take(300).map { case (_, v) => Tuple1(v) }.toDF("embedding"))
+    store.compact()
+    store.buildHnsw(m = 8, efConstruction = 40, numPartitions = 4)
+    assert(edgePrint(s.read.parquet(s"$dir/hnsw_edges")) == ((3909, 1915533279)))
+    store.ingest(data.drop(300).map { case (_, v) => Tuple1(v) }.toDF("embedding"))
+    store.delete(Seq(3L, 150L, 299L))
+    store.refreshHnsw()
+    assert(edgePrint(s.read.parquet(s"$dir/hnsw_edges")) == ((4718, -271998011)))
+  }
+
+  /** A persisted-graph search restated over the merged live rows:
+    * [[Hnsw.searchEdges]] over the rows below the build watermark, an
+    * exact scan of the rest, merged by (dist, id); under a metadata
+    * filter, the over-fetched graph side (window widened ×4 until k
+    * rows pass the filter) post-filtered. `ef` is explicit. */
+  private def persistedOracle(store: VectorStore, q: Array[Float], k: Int,
+                              ef: Int, filter: Map[String, String]): Seq[(Long, Double)] = {
+    val s = spark
+    val model = s.read.parquet(s"${store.path}/hnsw_model").head
+    val (wm, parts) = (model.getAs[Long]("built_next_id"), model.getAs[Int]("num_partitions"))
+    val params = Hnsw.Params(model.getAs[Int]("m"), model.getAs[Int]("ef_construction"),
+      seed = model.getAs[Long]("seed"))
+    val edges = s.read.parquet(s"${store.path}/hnsw_edges")
+    val live = store.snapshot().filter(!col("is_deleted"))
+    val matching = if (filter.isEmpty) live
+      else live.filter(Search.metadataFilter(col("metadata"), filter))
+    def graph(kf: Int, beam: Int) = Hnsw.searchEdges(edges, live.filter(col("id") < wm),
+        "id", "embedding", Seq((0L, q)), kf, beam, parts, params)
+      .select("id", "dist")
+    val graphSide =
+      if (filter.isEmpty) graph(k, ef)
+      else {
+        val (total, n) = (live.count(), matching.count())
+        val kFetch = math.max(k.toLong, math.ceil(2.0 * k * total / math.max(1L, n)).toLong).toInt
+        val maxKf = math.max(kFetch.toLong, total).toInt
+        def pass(kf: Int) = graph(kf, math.max(ef, kf)).join(matching.select("id"), "id")
+          .orderBy(col("dist").asc, col("id").asc).limit(k)
+        var kf = kFetch
+        while (pass(kf).count() < k && kf < maxKf) kf = math.min(maxKf.toLong, 4L * kf).toInt
+        pass(kf)
+      }
+    graphSide.unionByName(Search.knnExact(matching.filter(col("id") >= wm),
+        "id", "embedding", q.toSeq, k).select("id", "dist"))
+      .orderBy(col("dist").asc, col("id").asc).limit(k).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+  }
+
+  test("held graph: searchHnsw equals searchEdges over the merged live rows, bit for bit") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("hnswheld").toString
+    val store = VectorStore.open(s, dir, dim = 8)
+    val data = corpus(420, 8, seed = 11L)
+    def rows(xs: Seq[(Long, Array[Float])]) = xs.map { case (i, v) =>
+      (v, Map("g" -> (if (i % 10 == 0) "small" else "big"))) }.toDF("embedding", "metadata")
+    store.ingest(rows(data.take(300)))
+    store.compact()
+    store.buildHnsw(m = 6, efConstruction = 30, numPartitions = 4)
+    val vectors = s"$dir/vectors"
+    val rnd = new scala.util.Random(3L)
+    val queries = Seq.fill(6)(Array.fill(8)(rnd.nextFloat()))
+    /** Each shard's entry point: its highest-level src, lowest id on ties. */
+    def entryPoints(): Seq[Long] = s.read.parquet(s"$dir/hnsw_edges")
+      .groupBy("partition_id", "src").agg(max("level").as("top")).collect()
+      .groupBy(_.getInt(0)).values
+      .map(_.map(r => (-r.getInt(2), r.getLong(1))).min._2).toSeq
+    def upsert(id: Long, v: Array[Float]): Unit = DeltaLog.append(
+      Seq((id, v, "up", Map("g" -> "big"), "{}", false))
+        .toDF("id", "embedding", "content", "metadata", "metadata_json", "is_deleted"),
+      vectors, DeltaLog.nextSeq(s, vectors))
+    val moved = Array.fill(8)(0.5f)
+    var heldAt = Set.empty[Int]
+    // (case, what it writes, extra queries, metadata filter)
+    val cases = Seq[(String, () => Unit, Seq[Array[Float]], Map[String, String])](
+      ("fresh build", () => (), Nil, Map.empty),
+      ("deletes below the watermark, every shard's entry point among them",
+        () => store.delete(entryPoints() ++ Seq(12L, 40L, 41L)), Nil, Map.empty),
+      ("an upsert of a below-watermark id", () => upsert(77L, moved), Seq(moved), Map.empty),
+      ("a streaming tombstone row", () => DeltaLog.append(
+          Seq((77L, true), (78L, true)).toDF("id", DeltaLog.TombCol), vectors,
+          DeltaLog.nextSeq(s, vectors), tombstoneCol = Some(DeltaLog.TombCol)),
+        Seq(moved), Map.empty),
+      ("rows ingested after the build", () => { store.ingest(rows(data.slice(300, 380))); () },
+        Seq(data(310)._2, data(370)._2), Map.empty),
+      ("compact, which re-holds the graph", { () =>
+          heldAt = heldHnswGraphs(store); store.compact() }, Seq(data(310)._2), Map.empty),
+      ("writes after the compaction", { () =>
+          store.delete(Seq(5L, 305L)); upsert(6L, moved) }, Seq(moved), Map.empty),
+      ("refreshHnsw", { () =>
+          store.ingest(rows(data.drop(380))); store.refreshHnsw() },
+        Seq(data(400)._2), Map.empty),
+      ("a rebuild with another numPartitions", () =>
+          store.buildHnsw(m = 5, efConstruction = 25, numPartitions = 3),
+        Seq(data(400)._2), Map.empty),
+      ("the post-filter route", () => store.delete(Seq(100L, 401L)), Seq(moved),
+        Map("g" -> "big")))
+    cases.foreach { case (name, write, extra, filter) =>
+      withClue(s"$name: ") {
+        write()
+        // a narrow beam on the random queries; the case's own queries
+        // also with a beam past every shard, which reaches the rows the
+        // case wrote wherever they sit in the graph
+        (queries.map((_, 10)) ++ extra.flatMap(q => Seq((q, 10), (q, 200))))
+          .zipWithIndex.foreach { case ((q, ef), i) =>
+            val got = store.searchHnsw(q.toSeq, k = 8, ef, filter).collect()
+              .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+            val want = persistedOracle(store, q, 8, ef, filter)
+            assert(got.map { case (id, d) => (id, java.lang.Double.doubleToLongBits(d)) } ==
+              want.map { case (id, d) => (id, java.lang.Double.doubleToLongBits(d)) },
+              s"query $i (ef $ef): held $got, merged $want")
+          }
+        if (name.startsWith("compact"))
+          assert(heldHnswGraphs(store).nonEmpty && heldHnswGraphs(store) != heldAt,
+            "compact must re-hold the graph")
+        if (name.startsWith("an upsert")) {
+          // an exhaustive beam reaches the node wherever it now sits
+          val top = store.searchHnsw(moved.toSeq, k = 1, ef = 1000).collect().head
+          assert(top.getLong(0) == 77L && top.getDouble(1) == 0.0,
+            "the upserted vector must be the one searched")
+        }
+      }
+    }
   }
 }

@@ -486,6 +486,9 @@ class VectorStoreSpec extends SparkSpec {
     def hnsw(store: VectorStore) = store.searchHnsw(self, k = 5, ef = 1000).collect()
     def ivf(store: VectorStore, nProbe: Int) =
       store.searchIvf(self, nProbe = nProbe, k = 3).collect()
+    def ids(rows: Array[org.apache.spark.sql.Row]) = rows.map(_.getAs[Long]("id")).toSeq
+    var bTop = -1L
+    var bHeld = Set.empty[Int]
     def selfHit(rows: Array[org.apache.spark.sql.Row]) =
       rows.head.getAs[Double]("dist") < 1e-6
     // (what B serves first, what A writes, what B must then see)
@@ -511,6 +514,16 @@ class VectorStoreSpec extends SparkSpec {
           assert(got.map(_.getAs[Long]("id")).toSeq ==
             hnsw(a).map(_.getAs[Long]("id")).toSeq,
             "B searched A's new graph with the old shard count")
+        }),
+      ("HNSW held graph", { (a, b) =>
+          a.buildHnsw(m = 8, efConstruction = 50, numPartitions = 4)
+          bTop = ids(hnsw(b)).head
+          bHeld = heldHnswGraphs(b) },
+        { a => a.delete(Seq(bTop)); a.compact() },
+        { (_, b) =>
+          assert(!ids(hnsw(b)).contains(bTop), "B returned the id A deleted")
+          assert(heldHnswGraphs(b).nonEmpty && heldHnswGraphs(b) != bHeld,
+            "B kept the graph held before A's compaction")
         }),
       ("IVF serve model", { (a, b) =>
           a.buildIvf(12, hierarchical = Some(true)); ivf(b, 12) },
@@ -848,5 +861,55 @@ class VectorStoreSpec extends SparkSpec {
       .collect().map(_.getAs[Long]("id")).toSeq
     assert(got.toSet.intersect(exact.toSet).size >= 7,
       s"correlated-filter recall floor: got $got vs exact $exact")
+  }
+
+  test("held HNSW graph: one per store through its lifecycle, no edge reads " +
+      "while held, recomputed when its blocks are dropped") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("storehnswheld").toString
+    val store = VectorStore.open(s, dir, dim = 8)
+    val data = corpus(240, 8, seed = 5L)
+    store.ingest(data.map { case (_, v) => Tuple1(v) }.toDF("embedding"))
+    store.compact()
+    val q = data(17)._2.toSeq
+    def search() = store.searchHnsw(q, k = 5, ef = 1000).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    def exact() = store.search(q, 5).collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[Double]("dist"))).toSeq
+    Seq[(String, () => Unit)](
+      "build" -> (() => store.buildHnsw(m = 6, efConstruction = 30, numPartitions = 4)),
+      "delete" -> (() => store.delete(Seq(17L, 3L))),
+      "compact" -> (() => store.compact()),
+      "rebuild" -> (() => store.buildHnsw(m = 6, efConstruction = 30, numPartitions = 2))
+    ).foreach { case (step, write) =>
+      write()
+      // the beam covers every shard, so the walk is exhaustive
+      assert(search() == exact(), s"after $step")
+      assert(heldHnswGraphs(store).size == 1, s"held graphs after $step")
+    }
+    // blocks dropped from under the held graph: recomputed from lineage
+    val before = search()
+    heldHnswGraphs(store).foreach(org.apache.spark.BlockDrops.dropBlocks(s.sparkContext, _))
+    assert(search() == before)
+    // steady state: garble every edges part file in place, keeping its
+    // name, length and modification time — the held graph's key is
+    // unchanged, so a search that re-read the edges would fail
+    new java.io.File(s"$dir/hnsw_edges").listFiles()
+      .filter(_.getName.endsWith(".parquet")).foreach { part =>
+        val mtime = part.lastModified()
+        Files.write(part.toPath, Array.fill[Byte](part.length.toInt)(7))
+        assert(part.setLastModified(mtime))
+      }
+    store.delete(Seq(before.head._1))
+    // the exact read resolves and holds the new delta tail, which every
+    // read at this log version then shares
+    val want = exact()
+    var got = Seq.empty[(Long, Double)]
+    val jobs = jobsOf { got = search() }
+    assert(got == want)
+    // the shadow's collect over the held tail (its cache stage and the
+    // collect) and one walk over the held shards
+    assert(jobs <= 3, s"a steady-state search ran $jobs jobs")
   }
 }
