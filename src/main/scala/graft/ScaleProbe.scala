@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.DriverLocal
 import graft.functions.HashingEmbedder
 import graft.operators.{Dedup, Ivf, Pq, RangeJoin, Search}
 import org.apache.spark.sql.functions._
@@ -905,8 +906,8 @@ object ScaleProbe {
       val prEdges = spark.range(n).select(col("id").as("a"),
         pmod(col("id") * 48271L + 1L, lit(n)).as("b"))
         .filter(col("a") =!= col("b"))
-      t("pagerank_1m_edges_3it")(
-        graft.operators.PageRank.run(prEdges, iters = 3).count())
+      t("pagerank_1m_edges_3it")(DriverLocal.forcedDistributed(
+        graft.operators.PageRank.run(prEdges, iters = 3).count()))
 
       // bucketed time-range join: n events x n/10 orders, 30-bucket window
       val evs = spark.range(n).select(col("id").as("eid"),
@@ -1400,8 +1401,8 @@ object ScaleProbe {
       t("cc_chain_diameter_n") {
         val chain = spark.range(n - 1)
           .select(col("id").as("a"), (col("id") + 1).as("b"))
-        val c = Dedup.connectedComponents(chain, localThreshold = 0L)
-          .filter(col("comp") === 0L).count()
+        val c = DriverLocal.forcedDistributed(
+          Dedup.connectedComponents(chain).filter(col("comp") === 0L).count())
         println(s"        cc chain rounds=${Dedup.lastCcIterations} " +
           s"(log2(n)=${(math.log(n.toDouble) / math.log(2)).round})")
         c
@@ -1826,11 +1827,10 @@ object ScaleProbe {
       // exact quantiles by distributed selection: six bounded radix
       // passes over the cached 8-byte key column — the exact-cutoff
       // path; compare with the one-pass bounded sketch above
-      t("exact_quantiles_5p") {
+      t("exact_quantiles_5p")(DriverLocal.forcedDistributed(
         graft.operators.Sketch.exactQuantilesDisc(
           docs.select((pmod(xxhash64(col("id")), lit(1000000L)) / 7.0).as("v")),
-          col("v"), Seq(0.01, 0.25, 0.5, 0.9, 0.99)).head.getLong(0)
-      }
+          col("v"), Seq(0.01, 0.25, 0.5, 0.9, 0.99)).head.getLong(0)))
 
       // temperature-balanced mixture at a planted head: one stratum
       // holds half the corpus, 15 tail strata share the rest — the

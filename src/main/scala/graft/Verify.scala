@@ -18,7 +18,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    def writeAll(): Unit = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -36,6 +36,12 @@ object Verify {
         }
       }
     }
+    // SPARK_GRAFT_FORCE_DISTRIBUTED=1: the oracle pass over the
+    // distributed side of every driver-local twin (the gate corpora are
+    // small enough that the default pass only ever runs the local side)
+    if (sys.env.get("SPARK_GRAFT_FORCE_DISTRIBUTED").contains("1"))
+      graft.core.DriverLocal.forcedDistributed(writeAll())
+    else writeAll()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.DriverLocal
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -102,26 +103,32 @@ object Bpe {
     * 30k-50k merges, and the distributed loop costs one Spark job per
     * merge — corpus-size independent but merge-count bound (~32k
     * sequential jobs ≈ hours of pure scheduling latency). So when the
-    * minCount-bounded vocabulary fits on the driver (`localVocabThreshold`
-    * rows — the `Dedup.connectedComponents` / `PageRank.runLocal`
-    * discipline) the loop runs in-process over an inverted pair index
-    * with a lazy-deletion heap, bit-identical by construction: same
-    * corpus-weighted pair counts, same (count desc, left asc, right asc)
-    * argmax with UTF-8-byte string order (= Spark's binary UTF8String
-    * comparison), same leftmost non-overlapping merge application.
-    * Above the threshold the distributed loop is retained unchanged. */
+    * minCount-bounded vocabulary fits on the driver (the
+    * [[graft.core.DriverLocal]] twin: 224 B of driver heap per collected
+    * row plus twice its UTF-8 word bytes) the loop runs in-process over
+    * an inverted pair index with a lazy-deletion heap, bit-identical by
+    * construction: same corpus-weighted pair counts, same (count desc,
+    * left asc, right asc) argmax with UTF-8-byte string order (= Spark's
+    * binary UTF8String comparison), same leftmost non-overlapping merge
+    * application.
+    * Above the budget the distributed loop is retained unchanged. */
   def learnMerges(words: DataFrame, nMerges: Int,
                   minPairCount: Long = 2L,
-                  localVocabThreshold: Int = 4000000,
                   symbolizeLocal: String => Array[String] = codePointSymbols,
                   symbolizeDist: Column => Column = initSymbols): Seq[Merge] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     // one probe collect: if the vocab fits, we already hold all of it
-    // and the corpus is never touched again
+    // and the corpus is never touched again. The probe stops one row
+    // past Budget/224 rows, where even empty words fill the budget, so
+    // a huge vocabulary is never collected whole; inside the forcing
+    // scope it reads one row.
     val w = words.select(col("word"), col("cnt")).persist()
     try {
-      val probe = w.limit(localVocabThreshold + 1).collect()
-      if (probe.length <= localVocabThreshold)
+      val maxRows = if (DriverLocal.fits(0L)) (DriverLocal.Budget / 224).toInt else 0
+      val probe = w.limit(maxRows + 1).collect()
+      def bytes = probe.iterator
+        .map(r => 224L + 2L * r.getString(0).getBytes(StandardCharsets.UTF_8).length).sum
+      if (probe.length <= maxRows && DriverLocal.fits(bytes))
         learnMergesLocal(
           probe.map(r => (r.getString(0), r.getLong(1))), nMerges, minPairCount,
           symbolizeLocal)

@@ -76,9 +76,8 @@ object ByteBpe {
   /** Learn byte-level merges — [[Bpe.learnMerges]] with the hex-pair
     * symbolizers; local and distributed paths stay bit-identical. */
   def learnMerges(words: DataFrame, nMerges: Int,
-                  minPairCount: Long = 2L,
-                  localVocabThreshold: Int = 4000000): Seq[Bpe.Merge] =
-    Bpe.learnMerges(words, nMerges, minPairCount, localVocabThreshold,
+                  minPairCount: Long = 2L): Seq[Bpe.Merge] =
+    Bpe.learnMerges(words, nMerges, minPairCount,
       symbolizeLocal = hexPairSymbols, symbolizeDist = hexSymbols)
 
   /** End-to-end learned merge table (rank, left_sym, right_sym,

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.DriverLocal
 import graft.functions.ColumnOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -107,17 +108,16 @@ object Classifier {
     * @param lr    learning rate η; update is w −= η·(g/n) per step
     */
   def train(df: DataFrame, idCol: String, textCol: String, label: Column,
-            dim: Int, iters: Int, lr: Double,
-            localEntries: Long = 1L << 22): Model = {
+            dim: Int, iters: Int, lr: Double): Model = {
     require(dim >= 1 && iters >= 1 && lr > 0,
       s"bad hyperparameters: dim=$dim iters=$iters lr=$lr")
     // DRIVER-LOCAL iteration loop for small corpora (the
-    // [[PageRank.run]] localThreshold discipline): when
-    // docs × (dim + 1) ≤ localEntries (an upper bound on feature
-    // entries — ≤ ~64 MB collected at the default), the per-doc
-    // (bucket, count) table is collected in ONE kernel scan (the same
-    // single scan the distributed cache build pays) and the GD
-    // iterations run on the driver with ARITHMETIC-IDENTICAL steps:
+    // [[graft.core.DriverLocal]] twin): when docs × (dim + 1) feature
+    // entries (an upper bound; 128 B of driver heap each, an int
+    // bucket and a double count in a collected Row) fit the driver,
+    // the per-doc (bucket, count) table is collected in ONE kernel scan (the same single scan the
+    // distributed cache build pays) and the GD iterations run on the
+    // driver with ARITHMETIC-IDENTICAL steps:
     // the same double products, each contribution routed through
     // decimal(38,18) exactly as Spark's cast does (Double.toString-
     // valued BigDecimal, HALF_UP to scale 18), exact order-free sums,
@@ -127,7 +127,7 @@ object Classifier {
     // `iters` Spark jobs collapse into zero. The doc-count gate reads
     // parquet count metadata only — no extra corpus pass on the big
     // path, which runs unchanged below.
-    if (df.count() * (dim + 1L) <= localEntries)
+    if (DriverLocal.fits(df.count() * (dim + 1L) * 128L))
       return trainLocal(df, textCol, label, dim, iters, lr)
     val dec = DecimalType(38, 18)
     // per-doc (bucket, count) pairs — including the constant bias

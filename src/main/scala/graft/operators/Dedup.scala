@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.DriverLocal
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -1103,16 +1104,13 @@ object Dedup {
     * localCheckpoint every round so plans stay O(1) deep regardless of
     * iteration count.
     *
-    * Small graphs short-circuit to a driver-side union-find
-    * (`localThreshold` directed edges, default 1M ≈ 16 MB): near-dup
-    * pair graphs are tiny relative to their corpus — dup clusters are
-    * bounded — and the iterative path pays ~2 Spark jobs per round,
-    * which dwarfs the actual work below millions of edges. Identical
-    * output either way (min-id labels are algorithm-independent);
-    * pass 0 to force the distributed path. */
+    * A graph whose directed edges fit [[graft.core.DriverLocal]] (192 B
+    * of driver heap each) short-circuits to a driver-side union-find ([[ccLocal]]):
+    * near-dup pair graphs are tiny relative to their corpus, since dup
+    * clusters are bounded. Identical output either way (min-id labels
+    * are algorithm-independent). */
   def connectedComponents(pairs: DataFrame, aCol: String = "a",
-                          bCol: String = "b", maxIter: Int = 50,
-                          localThreshold: Long = 1000000L): DataFrame = {
+                          bCol: String = "b", maxIter: Int = 50): DataFrame = {
     // integral ids only: a blind cast would turn string ids into nulls
     // (distributed path) or 0 via null-unboxing (local path), silently
     // collapsing the whole graph into one bogus component. Scale-0
@@ -1141,7 +1139,7 @@ object Dedup {
     val edges = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().localCheckpoint()
     val nEdges = edges.count() // checkpoint is materialized — metadata-cheap
-    if (nEdges <= localThreshold) return ccLocal(edges)
+    if (DriverLocal.fits(nEdges * 192L)) return ccLocal(edges)
     // canonical orientation: one row per undirected edge, src > dst
     var cur = edges.filter(col("src") > col("dst"))
       .select("src", "dst").localCheckpoint()

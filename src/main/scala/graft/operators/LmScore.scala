@@ -35,8 +35,8 @@ object LmScore {
     * sides must hash-join so the corpus n-gram stream is never sorted
     * (measured: 69 → 59.6 s at 10M docs). Self-scoring entry points
     * pick the plan with a bounded `limit`-probe (or take it from the
-    * caller) — the `learnMergesLocal` / `localThreshold` two-regime
-    * discipline without its full corpus count. */
+    * caller) — a two-regime choice like [[graft.core.DriverLocal]]'s,
+    * without its full corpus count. */
   val ShuffleHashThreshold: Long = 1000000L
 
   private def hinted(model: DataFrame, big: Boolean): DataFrame =

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.DriverLocal
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -28,19 +29,11 @@ object PageRank {
   /** @param pairs undirected edges as (a, b) columns
     * @param iters fixed number of power iterations
     * @param damping classic damping factor d
-    * @param localThreshold edge count at or below which the whole power
-    *   iteration runs on the driver (same discipline as
-    *   [[Dedup.connectedComponents]]'s union-find shortcut): dedup pair
-    *   graphs are tiny relative to their corpus, and 5 iterations ×
-    *   (join + agg + checkpoint) of Spark jobs over a few thousand
-    *   edges is pure scheduling overhead. The local path reproduces the
-    *   distributed arithmetic BIT-EXACTLY (same double divisions, the
-    *   decimal(38,18) HALF_UP-rounded exact sum, same final double
-    *   fold), pinned by a PageRankSpec equality test — so the oracle
-    *   match is path-independent. Long ids only; other id types always
-    *   take the distributed path. */
-  def run(pairs: DataFrame, iters: Int, damping: Double = 0.85,
-          localThreshold: Long = 1000000L): DataFrame = {
+    *
+    * A graph whose directed edges fit [[graft.core.DriverLocal]] (192 B
+    * of driver heap each) runs the whole power iteration on the driver ([[runLocal]]).
+    * Long ids only; other id types always take the distributed path. */
+  def run(pairs: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     // null ids fail loudly (same contract as connectedComponents): a
@@ -62,7 +55,7 @@ object PageRank {
     require(nEdges > 0, "PageRank over an empty pair graph")
     val longIds = edges.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (nEdges <= localThreshold && longIds)
+    if (longIds && DriverLocal.fits(nEdges * 192L))
       return runLocal(edges, iters, damping)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val nodes = edges.select(col("src").as("id")).distinct()

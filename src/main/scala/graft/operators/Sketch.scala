@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.DriverLocal
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -919,13 +920,6 @@ object Sketch {
   // Exact quantiles by distributed selection (radix bisection)
   // ---------------------------------------------------------------
 
-  /** Value-count bound for [[exactQuantilesDisc]]'s local selection
-    * shortcut: ≤ this many surviving values are collected and selected
-    * on the driver (8 B/value → ≤ 8 MB, far under any maxResultSize)
-    * instead of paying five more histogram jobs. Purely a latency
-    * knob — both paths pick the identical order statistic. */
-  private[operators] val ExactQuantilesLocalN: Long = 1L << 20
-
   /** Inverse of the [[graft.expressions.DoubleOrderedBits]] key
     * transform: unsigned-ordered long → the original double. */
   private[operators] def orderedBitsToDouble(u: Long): Double = {
@@ -959,8 +953,7 @@ object Sketch {
     * the stated contract). Output: one row (n_rows, q0..q{T−1});
     * q_i null when n_rows = 0. */
   def exactQuantilesDisc(df: DataFrame, valueCol: Column,
-                         probs: Seq[Double],
-                         localThreshold: Long = ExactQuantilesLocalN): DataFrame = {
+                         probs: Seq[Double]): DataFrame = {
     require(probs.nonEmpty && probs.forall(p => p >= 0 && p <= 1),
       s"probs must be in [0,1], got $probs")
     val spark = df.sparkSession
@@ -984,17 +977,14 @@ object Sketch {
         return oneRowResult(spark, 0L, Seq.fill(T)(None))
       }
       val ranks = probs.map(p => math.max(1L, math.ceil(p * n).toLong))
-      // small-n local selection (the [[PageRank.run]] localThreshold
-      // discipline): once pass 1 has proven n is driver-sized, the five
-      // remaining histogram passes are pure job-scheduling overhead —
-      // collect the key column (8 B × n ≤ 8 MB at the threshold), sort
-      // it in the SAME unsigned key order the radix bisection selects
-      // in, and read the rank-th element directly. The selected keys —
-      // hence the decoded doubles — are identical by construction (both
-      // paths pick the rank-th smallest u in unsigned order; SketchSpec
-      // pins the equality). At corpus scale the distributed passes run
-      // unchanged.
-      if (n <= localThreshold) {
+      // local selection (the [[graft.core.DriverLocal]] twin): once
+      // pass 1 has proven the collected key column (160 B of driver
+      // heap per key) fits the driver, the five remaining histogram
+      // passes are pure job-scheduling overhead — collect the keys, sort them in the SAME unsigned key
+      // order the radix bisection selects in, and read the rank-th
+      // element directly. Both sides pick the rank-th smallest u in
+      // unsigned order, so the decoded doubles are identical.
+      if (DriverLocal.fits(n * 160L)) {
         val keys = u.collect().map(_.getLong(0) ^ java.lang.Long.MIN_VALUE)
         java.util.Arrays.sort(keys)
         return oneRowResult(spark, n, ranks.map(r =>
@@ -1051,8 +1041,7 @@ object Sketch {
     * excluded (same contract as NULL/NaN values). */
   def exactQuantilesDiscGrouped(df: DataFrame, groupCol: Column,
                                 valueCol: Column,
-                                probs: Seq[Double],
-                                localThreshold: Long = ExactQuantilesLocalN): DataFrame = {
+                                probs: Seq[Double]): DataFrame = {
     require(probs.nonEmpty && probs.forall(p => p >= 0 && p <= 1),
       s"probs must be in [0,1], got $probs")
     val spark = df.sparkSession
@@ -1091,12 +1080,14 @@ object Sketch {
       }
       val groups = h0.keys.toSeq.sorted
       val nOf = groups.map(g => g -> h0(g).map(_._2).sum).toMap
-      // small-n local selection — the ungrouped shortcut per group:
-      // when the TOTAL survivor count is driver-sized, collect (g, u)
-      // once and select each group's order statistics locally instead
-      // of five broadcast-join histogram jobs. Identical selections by
+      // local selection — the ungrouped shortcut per group: when the
+      // collected (g, u) rows fit the driver, collect them once and
+      // select each group's order statistics locally instead of five
+      // broadcast-join histogram jobs. Identical selections by
       // construction (rank-th smallest u per group in unsigned order).
-      if (nOf.values.sum <= localThreshold) {
+      val localBytes = groups.map(g =>
+        nOf(g) * (224L + 2L * g.getBytes(java.nio.charset.StandardCharsets.UTF_8).length)).sum
+      if (DriverLocal.fits(localBytes)) {
         val byG = keyed.collect()
           .groupBy(_.getString(0))
           .map { case (g, rs) =>

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.DriverLocal
 import graft.operators.Bpe
 import org.apache.spark.sql.functions._
 
@@ -109,9 +110,9 @@ class BpeSpec extends SparkSpec {
     val local = Bpe.learnMergesLocal(
       words.collect().map(r => (r.getString(0), r.getLong(1))), nMerges = 12)
     assert(local == dist)
-    // dispatch: local under the threshold, distributed when forced under 0
+    // dispatch: local by default, distributed under the forcing scope
     assert(Bpe.learnMerges(words, 12) == dist)
-    assert(Bpe.learnMerges(words, 12, localVocabThreshold = 0) == dist)
+    assert(DriverLocal.forcedDistributed(Bpe.learnMerges(words, 12)) == dist)
     // both run to exhaustion identically when asked for more than exists
     assert(Bpe.learnMergesLocal(
       words.collect().map(r => (r.getString(0), r.getLong(1))), 50) ==

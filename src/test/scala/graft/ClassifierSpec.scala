@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.DriverLocal
 import graft.functions.TextFunctions
 import graft.operators.Classifier
 import org.apache.spark.sql.functions._
@@ -60,11 +61,12 @@ class ClassifierSpec extends SparkSpec {
           .mkString(" ")
       (i.toLong, t, (i % 3 == 0).toString)
     }.toDF("id", "text", "lab")
-    // localEntries = 0 forces the distributed window loop; the default
+    // the forcing scope runs the distributed window loop; the default
     // takes the driver-local iterations — weights must agree bit for
     // bit (raw double bits), the PageRank local/distributed discipline
-    val dist = Classifier.train(docs, "id", "text", col("lab") === "true",
-      dim = 16, iters = 4, lr = 0.5, localEntries = 0L)
+    val dist = DriverLocal.forcedDistributed(
+      Classifier.train(docs, "id", "text", col("lab") === "true",
+        dim = 16, iters = 4, lr = 0.5))
     val loc = Classifier.train(docs, "id", "text", col("lab") === "true",
       dim = 16, iters = 4, lr = 0.5)
     assert(loc.dim == dist.dim)

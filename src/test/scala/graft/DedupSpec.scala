@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.DriverLocal
 import graft.operators.{Dedup, Ivf}
 import org.apache.spark.sql.functions._
 
@@ -382,7 +383,8 @@ class DedupSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L))
     // the distributed loop (forced past the small-graph shortcut)
     // produces the identical labeling
-    val dist = Dedup.connectedComponents(pairs, localThreshold = 0L).collect()
+    val dist = DriverLocal.forcedDistributed(
+      Dedup.connectedComponents(pairs).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist == comp)
   }
@@ -418,7 +420,8 @@ class DedupSpec extends SparkSpec {
     // worst case for one-hop propagation (diameter 79 > default maxIter);
     // force the distributed path — the log-round contract is its subject
     val chain = (0L until 79L).map(i => (i, i + 1)).toDF("a", "b")
-    val comp = Dedup.connectedComponents(chain, localThreshold = 0L).collect()
+    val comp = DriverLocal.forcedDistributed(
+      Dedup.connectedComponents(chain).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp.size == 80 && comp.values.forall(_ == 0L))
   }
@@ -434,7 +437,7 @@ class DedupSpec extends SparkSpec {
     // with margin, no maxIter override
     val n = 10000L
     val chain = s.range(n - 1).select(col("id").as("a"), (col("id") + 1).as("b"))
-    val comp = Dedup.connectedComponents(chain, localThreshold = 0L)
+    val comp = DriverLocal.forcedDistributed(Dedup.connectedComponents(chain))
     assert(comp.filter(col("comp") =!= 0L).count() == 0L,
       "every chain node must label to the minimum id 0")
     assert(comp.count() == n)
@@ -464,8 +467,8 @@ class DedupSpec extends SparkSpec {
         (a, b)
       } :+ ((n - 1).toLong, (n - 1).toLong) // one self-pair
       val df = pairs.toDF("a", "b")
-      val dist = Dedup.connectedComponents(df, localThreshold = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
+      val dist = DriverLocal.forcedDistributed(
+        Dedup.connectedComponents(df).collect()).map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
       val local = Dedup.connectedComponents(df)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
       assert(dist.toSeq == local.toSeq,

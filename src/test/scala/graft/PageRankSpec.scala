@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.DriverLocal
 import graft.operators.PageRank
 import org.apache.spark.sql.functions._
 
@@ -53,8 +54,8 @@ class PageRankSpec extends SparkSpec {
       .toDF("a", "b")
     val local = PageRank.run(es, iters = 5)
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
-    val dist = PageRank.run(es, iters = 5, localThreshold = 0L)
-      .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
+    val dist = DriverLocal.forcedDistributed(PageRank.run(es, iters = 5)
+      .collect()).map(x => x.getLong(0) -> x.getDouble(1)).toMap
     assert(local.keySet == dist.keySet)
     // raw bits, not approximate equality — the whole point is that the
     // oracle match is path-independent

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.DriverLocal
 import graft.operators.Sketch
 import org.apache.spark.sql.functions._
 
@@ -595,11 +596,11 @@ class SketchSpec extends SparkSpec {
       (1 to 3000).map(_ => (rnd.nextDouble() - 0.5) * 1e12)
     val df = vals.toDF("v").repartition(9)
     val probs = Seq(0.0, 0.1, 0.5, 0.9, 1.0)
-    // localThreshold = 0 forces the six-pass radix path; the default
+    // the forcing scope runs the six-pass radix path; the default
     // takes the driver-side selection — same order statistics, bit for
     // bit (the PageRank local/distributed equality discipline)
-    val dist = graft.operators.Sketch
-      .exactQuantilesDisc(df, col("v"), probs, localThreshold = 0L).head
+    val dist = DriverLocal.forcedDistributed(graft.operators.Sketch
+      .exactQuantilesDisc(df, col("v"), probs).head)
     val loc = graft.operators.Sketch.exactQuantilesDisc(df, col("v"), probs).head
     assert(dist.getLong(0) == loc.getLong(0))
     probs.indices.foreach { i =>
@@ -611,10 +612,9 @@ class SketchSpec extends SparkSpec {
     val gdf = (1 to 2000).map { i =>
       (Seq("a", "b", "c")(i % 3), (rnd.nextDouble() - 0.5) * 1e6)
     }.toDF("g", "v").repartition(7)
-    val gDist = graft.operators.Sketch
-      .exactQuantilesDiscGrouped(gdf, col("g"), col("v"), probs,
-        localThreshold = 0L)
-      .collect().map(r => r.getString(0) -> r.toSeq).toMap
+    val gDist = DriverLocal.forcedDistributed(graft.operators.Sketch
+      .exactQuantilesDiscGrouped(gdf, col("g"), col("v"), probs)
+      .collect()).map(r => r.getString(0) -> r.toSeq).toMap
     val gLoc = graft.operators.Sketch
       .exactQuantilesDiscGrouped(gdf, col("g"), col("v"), probs)
       .collect().map(r => r.getString(0) -> r.toSeq).toMap
