@@ -1280,10 +1280,11 @@ object ScaleProbe {
       }
 
       // round-15 delete-heavy regime: deleteIds on 10% of the n-row
-      // store with BOTH sidecar tiers live, every tier searched green
-      // (no tombstoned id surfaces), then compact() folds the sidecars
-      // into the index tables and the searches stay green with the
-      // sidecars gone. Prints the sidecar size the anti-join's build
+      // store with both IVF tiers live (IVF reads the deletes from the
+      // delta tail, IVF-PQ from its sidecar), every tier searched green
+      // (no tombstoned id surfaces), then compact() folds them into the
+      // index tables and the searches stay green with the tail and the
+      // sidecar gone. Prints the sidecar size the anti-join's build
       // side carried (the 64 MB broadcast ceiling decides hint vs
       // shuffle anti-join) and the delete/search/compact walls.
       tp("facade_delete10pct") {

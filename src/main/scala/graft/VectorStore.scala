@@ -19,7 +19,9 @@ import org.apache.spark.sql.functions._
   * few derived values memoized on what is on disk ([[memo]]): the live
   * row count and per-filter BQ thresholds on the log version, the HNSW
   * build row on the files of `hnsw_model`, the IVF serve model (flat
-  * or hierarchical) on the files of `ivf_model` and `ivf_supers`.
+  * or hierarchical) on the files of `ivf_model` and `ivf_supers`, the
+  * IVF layout relation and its layout seq on the files of
+  * `vectors_by_cluster`.
   *
   * Executor-side state is the persisted HNSW graph: its shards,
   * reconstructed from the delta-log base and `hnsw_edges`
@@ -30,7 +32,9 @@ import org.apache.spark.sql.functions._
   * held per dir, and the first search that sees another key releases
   * it and holds the new one — so the first search after a build,
   * refresh or compaction pays the reconstruction, and later ones only
-  * apply the live delta tail as a shadow. Mutations
+  * apply the live delta tail as a shadow. The IVF layout likewise
+  * changes only in [[buildIvf]] and [[compact]], and its searches
+  * overlay the tail ([[searchIvf]]). Mutations
   * (ingest/delete) are O(batch) delta appends — the reference's save
   * is likewise an O(1) slot write (storage.py:198-230) — and
   * [[compact]] folds the tail on the caller's cadence. Pre-delta
@@ -45,23 +49,28 @@ class VectorStore private (val spark: SparkSession, val path: String,
   private def ivfSupersPath = s"$path/ivf_supers"
   private def ivfDataPath = s"$path/vectors_by_cluster"
 
-  // Tombstone SIDECARS for the persisted index tables: the IVF /
-  // IVF-PQ layouts keep materialized rows, so a delete must reach
-  // them too — but re-deriving the tombstone set from the corpus per
-  // query would cost a linear id scan, defeating the tiers'
-  // partition-pruned sublinearity. Instead each delete appends its id
-  // list (O(|ids|) bytes) to a per-tier sidecar that searches
-  // anti-join against (broadcast — sized by deletes since the last
-  // build, not by the corpus); each build starts a fresh table and
-  // clears its sidecar.
+  /** The highest delta seq the IVF layout's rows reflect (the layout
+    * seq), in a `_`-prefixed file parquet readers skip. Written into the
+    * layout dir before it is swapped in, so rows and seq publish
+    * together ([[swapIndexTable]]). */
+  private def ivfLayoutSeqFile = "_layout_seq"
+
+  // Tombstone SIDECAR for the persisted IVF-PQ code table: the codes
+  // are materialized rows, so a delete must reach them too — but
+  // re-deriving the tombstone set from the corpus per query would cost
+  // a linear id scan, defeating the tier's partition-pruned
+  // sublinearity. Instead each delete appends its id list (O(|ids|)
+  // bytes) to a sidecar that searches anti-join against (broadcast —
+  // sized by deletes since the last compact, not by the corpus); each
+  // build starts a fresh table and clears its sidecar. The IVF layout
+  // keeps no sidecar: its searches overlay the delta tail instead
+  // ([[searchIvf]]). `ivf_tombstones` is a leftover of stores that
+  // kept one: searches ignore it, the next fold removes it, and
+  // [[fallbackNextId]] still maxes against it while it exists.
   private def ivfTombPath = s"$path/ivf_tombstones"
   private def ivfPqTombPath = s"$path/ivfpq_tombstones"
-  private def appendIndexTombstones(ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    lazy val df = ids.toDF("id")
-    if (indexSuccessAt(ivfDataPath)) df.write.mode("append").parquet(ivfTombPath)
-    if (indexSuccessAt(ivfPqDataPath)) df.write.mode("append").parquet(ivfPqTombPath)
-  }
+  private def appendIvfPqTombstones(ids: => DataFrame): Unit =
+    if (indexSuccessAt(ivfPqDataPath)) ids.write.mode("append").parquet(ivfPqTombPath)
   /** Broadcast ceiling for the sidecar anti-join's build side: below it
     * the tombstone set ships to every task (no shuffle of the index
     * table); above it — a delete-heavy backlog, e.g. a curation pass
@@ -100,23 +109,22 @@ class VectorStore private (val spark: SparkSession, val path: String,
   }
 
   // -----------------------------------------------------------------
-  // Compact-time sidecar fold: [[compact]] rewrites each persisted
-  // index table without its tombstoned ids and clears the sidecar —
-  // the same amortization the delta log applies to the vector log, so
-  // sidecars are bounded by deletes SINCE THE LAST COMPACT, not since
-  // the last build. The fold's tombstone set is the sidecar UNION the
-  // merged log's is_deleted ids, which also heals the delete() crash
-  // window (delta landed, sidecar append lost → the id would resurface
-  // from the IVF tiers forever; here it is dropped at the next
-  // compact). Swap protocol (single-writer, crash-resumable):
-  //   1. write kept rows → dataDir__fold (+_SUCCESS)
+  // Index-table swap: the IVF layout and the IVF-PQ code table are
+  // only ever replaced whole. [[buildIvf]] publishes a fresh layout;
+  // [[compact]] rewrites the layout with the delta tail folded in
+  // ([[foldIvfLayout]]) and the code table without its tombstoned ids
+  // ([[foldIvfPq]]) — the same amortization the delta log applies to
+  // the vector log, so the IVF-PQ sidecar is bounded by deletes SINCE
+  // THE LAST COMPACT and the IVF overlay by writes since then. Swap
+  // protocol (single-writer, crash-resumable):
+  //   1. write rows → dataDir__fold (+_SUCCESS, then the layout seq)
   //   2. rename dataDir → dataDir__dropped
   //   3. rename dataDir__fold → dataDir
-  //   4. delete dataDir__dropped, clear sidecar
+  //   4. delete dataDir__dropped
   // [[recoverIndexFold]] resumes: dataDir absent + complete __fold ⇒
   // redo step 3; dataDir present ⇒ drop leftovers (a pre-step-2 crash
-  // left the sidecar in place, so the next compact refolds —
-  // idempotent).
+  // left the old table, its seq and the sidecar in place, so the next
+  // compact refolds — idempotent).
   // -----------------------------------------------------------------
   private def recoverIndexFold(dataDir: String): Unit = {
     val f = new org.apache.hadoop.fs.Path(dataDir)
@@ -137,35 +145,52 @@ class VectorStore private (val spark: SparkSession, val path: String,
     recoverIndexFold(dataDir)
     successAt(dataDir)
   }
-  private def foldIndexTable(dataDir: String, tombDir: String,
-                             deleted: DataFrame): Unit = {
-    recoverIndexFold(dataDir)
-    if (!successAt(dataDir)) return
+  /** Publish `rows` as the cluster-partitioned table at `dataDir`
+    * through the swap above, with `layoutSeq` recorded in it. */
+  private def swapIndexTable(dataDir: String, rows: DataFrame,
+                             layoutSeq: Option[Long]): Unit = {
     val f = new org.apache.hadoop.fs.Path(dataDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def q(s: String) = f.makeQualified(new org.apache.hadoop.fs.Path(s))
-    val hasSidecar = f.exists(q(tombDir))
-    val tombs = (if (hasSidecar)
-        spark.read.parquet(tombDir).select(col("id").cast("long").as("id"))
-          .unionByName(deleted)
-      else deleted).distinct()
-    if (tombs.isEmpty) { if (hasSidecar) clearDir(tombDir); return }
-    val kept = spark.read.parquet(dataDir)
-      .join(tombs.select(col("id").as("__tomb_id")),
-        col("id") === col("__tomb_id"), "left_anti")
+    recoverIndexFold(dataDir) // no swap leftovers in the way
     val tmp = s"${dataDir}__fold"
     // same pre-shuffle as Ivf.writePartitioned: bounds the file count
     // by (writer-task × held-cluster), and the rewrite doubles as the
-    // OPTIMIZE pass for incremental-append small files
-    kept.repartition(col(Ivf.ClusterCol))
-      .write.mode("overwrite").partitionBy(Ivf.ClusterCol).parquet(tmp)
-    if (!f.rename(q(dataDir), q(s"${dataDir}__dropped")) &&
+    // OPTIMIZE pass for small files
+    Ivf.writePartitioned(rows, tmp)
+    layoutSeq.foreach { seq =>
+      val out = f.create(q(s"$tmp/$ivfLayoutSeqFile"), true)
+      try out.write(seq.toString.getBytes("UTF-8")) finally out.close()
+    }
+    if (f.exists(q(dataDir)) && !f.rename(q(dataDir), q(s"${dataDir}__dropped")) &&
         f.exists(q(dataDir)))
       throw new java.io.IOException(s"rename $dataDir aside failed")
     if (!f.rename(q(tmp), q(dataDir)) && !f.exists(q(dataDir)))
       throw new java.io.IOException(s"rename $tmp -> $dataDir failed")
     f.delete(q(s"${dataDir}__dropped"), true)
-    if (hasSidecar) clearDir(tombDir)
+    ()
+  }
+
+  /** The IVF-PQ fold: the code table without the ids in its sidecar or
+    * flagged deleted in the merged log (`deleted`) — which also heals
+    * the delete() crash window (delta landed, sidecar append lost → the
+    * id would resurface from the tier forever; here it is dropped at
+    * the next compact) — and the sidecar cleared. */
+  private def foldIvfPq(deleted: DataFrame): Unit = {
+    recoverIndexFold(ivfPqDataPath)
+    if (!successAt(ivfPqDataPath)) return
+    val f = new org.apache.hadoop.fs.Path(ivfPqTombPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hasSidecar = f.exists(f.makeQualified(new org.apache.hadoop.fs.Path(ivfPqTombPath)))
+    val tombs = (if (hasSidecar)
+        spark.read.parquet(ivfPqTombPath).select(col("id").cast("long").as("id"))
+          .unionByName(deleted)
+      else deleted).distinct()
+    if (!tombs.isEmpty)
+      swapIndexTable(ivfPqDataPath, spark.read.parquet(ivfPqDataPath)
+        .join(tombs.select(col("id").as("__tomb_id")),
+          col("id") === col("__tomb_id"), "left_anti"), layoutSeq = None)
+    if (hasSidecar) clearDir(ivfPqTombPath)
   }
 
   /** Current merged state (empty on a fresh store): the delta-log base
@@ -200,10 +225,11 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * the merged snapshot, ALSO maxed against the index sidecars and the
     * LSH signature table — after delete()+compact() the snapshot max can
     * shrink below ids still recorded there, and re-issuing one of those
-    * ids would silently anti-join the new row out of the IVF tiers (its
-    * id sits in a tombstone sidecar) or duplicate it in the signature
-    * table. One bounded max-aggregation per small table, paid only on
-    * the no-marker path. */
+    * ids would silently anti-join the new row out of the IVF-PQ tier
+    * (its id sits in a tombstone sidecar; a leftover `ivf_tombstones`
+    * counts too) or duplicate it in the signature table. One bounded
+    * max-aggregation per small table, paid only on the no-marker
+    * path. */
   private def fallbackNextId(): Long = {
     var next = Crud.nextId(snapshot(), "id")
     def bump(dir: String): Unit = {
@@ -281,13 +307,16 @@ class VectorStore private (val spark: SparkSession, val path: String,
         "metadata_json", "is_deleted")
       val seq = graft.core.DeltaLog.nextSeq(spark, dataPath)
       graft.core.DeltaLog.append(ordered, dataPath, seq)
-      // incremental index maintenance: every persisted tier stays
-      // fresh across ingests by deriving index rows for the NEW batch
-      // only (read back from the delta that just landed, so index ids
-      // match persisted ids exactly) and appending — no full rebuild.
-      // A crash between the delta append and an index append leaves
-      // that batch invisible to the affected tier until its next
-      // build — recall-only staleness, never wrong distances.
+      // incremental index maintenance for the tiers that keep
+      // materialized rows beside the log (LSH signatures, IVF-PQ
+      // codes): derive index rows for the NEW batch only (read back
+      // from the delta that just landed, so index ids match persisted
+      // ids exactly) and append — no full rebuild. A crash between the
+      // delta append and an index append leaves that batch invisible to
+      // the affected tier until its next build — recall-only staleness,
+      // never wrong distances. The IVF and HNSW tiers read the batch
+      // from the delta tail instead (searchIvf, searchHnsw), so an
+      // ingest writes nothing for them.
       lazy val landed = spark.read.parquet(
         graft.core.DeltaLog.deltaPath(dataPath, seq))
       // LSH: signatures for the new rows (assign-new-only discipline)
@@ -296,27 +325,6 @@ class VectorStore private (val spark: SparkSession, val path: String,
         Lsh.assign(landed, "embedding", m)
           .select(col("id"), col(Lsh.SigsCol))
           .write.mode("append").parquet(lshSigPath)
-      }
-      // IVF: stale-centroid assignment (B5 semantics) appended into
-      // the cluster-partitioned layout — searches pick the new files
-      // up through partition discovery
-      if (successAt(ivfModelPath) && indexSuccessAt(ivfDataPath)) {
-        val proj = landed.select("id", "embedding", "content", "metadata",
-          "metadata_json", "is_deleted")
-        // a hierarchical model assigns through the two-level kernel
-        // (O(2·√k·dim)/row) — the flat O(k·dim) scan would be the
-        // exact per-row cliff the hierarchy exists to remove. A lazy
-        // (large-k) serve model holds only some child blocks, so the
-        // assignment loads the whole model
-        val assignedNew = ivfServeModel() match {
-          case Left(flat) => Ivf.assign(proj, flat)
-          case Right(hm: Ivf.HierModel) => Ivf.assignHier(proj, hm)
-          case Right(_) => Ivf.assignHier(proj,
-            Ivf.loadHier(spark, ivfModelPath, ivfSupersPath, "embedding"))
-        }
-        assignedNew
-          .repartition(col(Ivf.ClusterCol))
-          .write.mode("append").partitionBy(Ivf.ClusterCol).parquet(ivfDataPath)
       }
       // IVF-PQ: encode the new rows through the persisted two-level
       // model and append to the code table (same schema as the build).
@@ -515,19 +523,21 @@ class VectorStore private (val spark: SparkSession, val path: String,
         base.filter(!col("is_deleted")), "id", "embedding", m.parts, m.params,
         m.watermark)
     }
-    // the merged view's liveness: a tombstone or an is_deleted row
-    // makes its id absent (null embedding), any other row is the id's
-    // vector. A tail of tombstone-only deltas carries neither column
+    // an absent id (presentIn) shadows with a null embedding, any
+    // other row is the id's vector
     val shadow = sides.tail.fold(Map.empty: Hnsw.Shadow) { t =>
-      def colOrNull(c: String) = if (t.columns.contains(c)) col(c) else lit(null)
-      val present = coalesce(!col(DeltaLog.TombCol) && !colOrNull("is_deleted"),
-        lit(false))
       Hnsw.collectShadow(
-        t.select(col("id"), when(present, colOrNull("embedding")).as("embedding")),
+        t.select(col("id"), when(presentIn(t), tryCol(t, "embedding")).as("embedding")),
         "id", "embedding", m.parts)
     }
     (shards, spark.sparkContext.broadcast(shadow))
   }
+
+  /** Whether a resolved tail row is its id's live row in the merged
+    * view: a tombstone or an is_deleted row makes its id absent. A tail
+    * of tombstone-only deltas carries no is_deleted column. */
+  private def presentIn(tail: DataFrame): Column =
+    coalesce(!col(DeltaLog.TombCol) && !tryCol(tail, "is_deleted"), lit(false))
 
   /** Persisted HNSW build params + watermark, memoized on the model
     * dir's files — `searchHnsw` would otherwise re-read the one-row
@@ -681,9 +691,12 @@ class VectorStore private (val spark: SparkSession, val path: String,
   def buildIvf(k: Int, seed: Long = 42L,
                maxClusterFraction: Double = Double.NaN,
                hierarchical: Option[Boolean] = None): Ivf.Model = {
+    // read before the rows: a write landing meanwhile is then overlaid
+    // by searches (harmless), never missed
+    val layoutSeq = DeltaLog.version(spark, dataPath).seq
     val live = snapshot().filter(!col("is_deleted"))
     val useHier = hierarchical.getOrElse(k > Ivf.FlatBuildMaxK)
-    if (useHier) {
+    val model = if (useHier) {
       // two-level quantizer: the only build path that can DELIVER the
       // 10·√N-list geometry past ~1B rows (flat throws for
       // k > sampleSize and flat assign is O(k·dim)/row). Skew is
@@ -692,8 +705,7 @@ class VectorStore private (val spark: SparkSession, val path: String,
       // flat path isn't needed here.
       val (assigned, hm) = Ivf.buildHier(live, "embedding", k, seed)
       Ivf.saveHier(hm, ivfModelPath, ivfSupersPath)
-      Ivf.writePartitioned(assigned, ivfDataPath)
-      clearDir(ivfTombPath) // fresh table is built from live rows only
+      swapIndexTable(ivfDataPath, assigned, Some(layoutSeq))
       hm.flat
     } else {
       val frac =
@@ -704,18 +716,35 @@ class VectorStore private (val spark: SparkSession, val path: String,
         else Ivf.buildBalanced(live, "embedding", k, seed,
           maxClusterFraction = frac)
       Ivf.save(model, ivfModelPath)
-      Ivf.writePartitioned(assigned, ivfDataPath)
-      clearDir(ivfTombPath) // fresh table is built from live rows only
+      swapIndexTable(ivfDataPath, assigned, Some(layoutSeq))
       // a flat rebuild over an earlier hierarchical one must not leave
-      // the stale super table steering ingest-time assignment
+      // the stale super table steering compact-time assignment
       clearDir(ivfSupersPath)
+      ivfServeModel(built = Some(model))
       model
     }
+    clearDir(ivfTombPath) // a leftover sidecar (class scaladoc)
+    model
   }
 
-  /** O6: n_probe pruned search over the partitioned IVF table (probing
+  /** O6: n_probe pruned search over the partitioned IVF layout (probing
     * is parquet partition pruning; the metadata filter pushes down below
-    * the probe filter).
+    * the probe filter), merged on read with the delta tail: the layout
+    * rows of the probed lists, minus every id the held resolved tail
+    * holds at a seq above the layout seq, plus the tail's live rows that
+    * pass the filter, all ranked exactly — the tail contract of
+    * [[searchHnsw]]. Writes since the layout was built or folded reach
+    * the answer this way (an upsert or tombstone appended straight to
+    * the log as well), so ingest and delete write nothing for this
+    * tier; [[compact]] folds the tail into the layout, and its cadence
+    * bounds the tail. The layout relation and its seq are memoized on
+    * the layout's files, so a call lists and infers nothing. When the
+    * log has folded deltas the layout never saw (its watermark passed
+    * the layout seq — a `DeltaLog.compact` outside [[compact]], e.g.
+    * the streaming path's `compactEvery`), the answer comes from the
+    * exact path ([[search]]) until the next [[compact]] or [[buildIvf]]
+    * re-derives the layout. A layout with no recorded seq takes the
+    * log watermark as its seq.
     *
     * `nProbe <= 0` (the auto default) = scale-aware probing: the config
     * default n_probe=10 (GraftConfig.nProbe, mirroring api/models.py:20)
@@ -727,46 +756,112 @@ class VectorStore private (val spark: SparkSession, val path: String,
   def searchIvf(query: Seq[Float], nProbe: Int, k: Int,
                 metadataFilter: Map[String, String] = Map.empty): DataFrame = {
     recoverIndexFold(ivfDataPath) // resume a crashed compact-fold swap
-    val assigned = dropSidecarTombs(
-      spark.read.parquet(ivfDataPath), ivfTombPath)
-    val pred = if (metadataFilter.isEmpty) None
-      else Some(Search.metadataFilter(col("metadata"), metadataFilter))
+    val (layout, recorded) = ivfLayout()
     // a hierarchical store serves through the GROUPED model: probe
     // ranking scores √k supers then only the top supers' children
     // (O((√k + β·nProbe)·dim)/query, Ivf.probeClustersHier) instead of
     // the flat O(k·dim) driver scan — the serve-side twin of the
     // two-level build (14.8× rank cost at k = 316k, ScaleProbe
     // ivf_probe_rank_316k). Stores at or below FlatBuildMaxK lists
-    // keep the exact flat ranking (searchHier routes internally).
-    ivfServeModel() match {
-      case Right(hm) =>
-        val np = if (nProbe > 0) nProbe
-          else Ivf.scaledNProbe(sessionConfig.nProbe, hm.k,
-            sessionConfig.ivfProbeFraction)
-        Ivf.searchHier(assigned, hm, "id", query, np, k, pred)
-      case Left(model) =>
-        val np = if (nProbe > 0) nProbe
-          else Ivf.scaledNProbe(sessionConfig.nProbe, model.k,
-            sessionConfig.ivfProbeFraction)
-        Ivf.search(assigned, model, "id", query, np, k, pred)
+    // keep the exact flat ranking (probedHier routes internally).
+    def np(lists: Int) = if (nProbe > 0) nProbe
+      else Ivf.scaledNProbe(sessionConfig.nProbe, lists, sessionConfig.ivfProbeFraction)
+    val probed = ivfServeModel() match {
+      case Right(hm) => Ivf.probedHier(hm, query, np(hm.k))
+      case Left(model) => Ivf.probed(model, query, np(model.k))
     }
+    val (log, tail) = DeltaLog.readTail(spark, dataPath, "id")
+    val layoutSeq = recorded.getOrElse(log.watermark)
+    if (log.watermark > layoutSeq) return search(query, k, metadataFilter)
+    val rows = overlay(layout.filter(col(Ivf.ClusterCol).isin(probed: _*))
+      .drop(Ivf.ClusterCol), tail, log, layoutSeq)(identity)
+    val pred = if (metadataFilter.isEmpty) None
+      else Some(Search.metadataFilter(col("metadata"), metadataFilter))
+    Search.knnExact(rows, "id", "embedding", query, k, pred)
+  }
+
+  /** `layoutRows` merged with the tail rows above `layoutSeq`: every id
+    * those rows hold is dropped from `layoutRows`, and their live rows,
+    * projected to its columns and passed through `place`, are added. */
+  private def overlay(layoutRows: DataFrame, tail: Option[DataFrame],
+                      log: DeltaLog.Version, layoutSeq: Long)(
+      place: DataFrame => DataFrame): DataFrame =
+    tail.filter(_ => log.seq > layoutSeq).fold(layoutRows) { t =>
+      val over = t.filter(col(DeltaLog.SeqCol) > layoutSeq)
+      val cols = layoutRows.columns.filter(_ != Ivf.ClusterCol)
+      val live = over.filter(presentIn(over)).select(cols.map(c =>
+        tryCol(over, c).cast(layoutRows.schema(c).dataType).as(c)): _*)
+      layoutRows
+        .join(over.select(col("id").as("__over_id")),
+          col("id") === col("__over_id"), "left_anti")
+        .unionByName(place(live))
+    }
+
+  /** The IVF layout as one relation and its recorded layout seq,
+    * memoized on the layout dir's files. */
+  private def ivfLayout(): (DataFrame, Option[Long]) =
+    memo("ivf layout", stamps(ivfDataPath)) {
+      val seqFile = new org.apache.hadoop.fs.Path(ivfDataPath, ivfLayoutSeqFile)
+      val f = seqFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val seq = if (!f.exists(seqFile)) None else {
+        val in = f.open(seqFile)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLongOption
+        finally in.close()
+      }
+      (spark.read.parquet(ivfDataPath), seq)
+    }
+
+  /** The IVF fold [[compact]] runs before the log compacts: the layout
+    * with the tail above its layout seq folded in — its ids dropped,
+    * its live rows assigned to the current lists — published with the
+    * log's seq as the new layout seq. A layout the log has outrun is
+    * re-derived from every live row instead. A leftover
+    * `ivf_tombstones` is removed. */
+  private def foldIvfLayout(): Unit = {
+    if (indexSuccessAt(ivfDataPath) && successAt(ivfModelPath)) {
+      val (layout, recorded) = ivfLayout()
+      val (log, tail) = DeltaLog.readTail(spark, dataPath, "id")
+      val layoutSeq = recorded.getOrElse(log.watermark)
+      if (log.watermark > layoutSeq)
+        swapIndexTable(ivfDataPath, assignToLists(snapshot()
+          .filter(!col("is_deleted")).select(layout.columns
+            .filter(_ != Ivf.ClusterCol).map(col): _*)), Some(log.seq))
+      else if (log.seq > layoutSeq)
+        swapIndexTable(ivfDataPath,
+          overlay(layout, tail, log, layoutSeq)(assignToLists), Some(log.seq))
+    }
+    clearDir(ivfTombPath)
+  }
+
+  /** Rows with their IVF list under the persisted model. A hierarchical
+    * model assigns through the two-level kernel (O(2·√k·dim)/row) — the
+    * flat O(k·dim) scan would be the exact per-row cliff the hierarchy
+    * exists to remove. A lazy (large-k) serve model holds only some
+    * child blocks, so the assignment loads the whole model. */
+  private def assignToLists(rows: DataFrame): DataFrame = ivfServeModel() match {
+    case Left(flat) => Ivf.assign(rows, flat)
+    case Right(hm: Ivf.HierModel) => Ivf.assignHier(rows, hm)
+    case Right(_) => Ivf.assignHier(rows,
+      Ivf.loadHier(spark, ivfModelPath, ivfSupersPath, "embedding"))
   }
 
   /** Serve-side IVF model — Left for a flat model, Right for a
     * hierarchical one — memoized on the model and super dirs' files:
-    * `searchIvf` and `ingest` would otherwise re-read it on every call
+    * `searchIvf` and `compact` would otherwise re-read it on every call
     * (one job for the flat centroid table, the WHOLE child-centroid
     * table for a hierarchical one). `openHier` additionally keeps
     * large-k models lazy (counts resident, child blocks LRU-bounded by
     * `graft.ivf.residentModelBytes` — the r16 driver-residency
-    * perf-weak). */
-  private def ivfServeModel(): Either[Ivf.Model, Ivf.HierProbe] = {
+    * perf-weak). A flat build passes the model it just saved as
+    * `built`, so the first search after it reads no model. */
+  private def ivfServeModel(built: Option[Ivf.Model] = None)
+      : Either[Ivf.Model, Ivf.HierProbe] = {
     val (model, supers) = (stamps(ivfModelPath), stamps(ivfSupersPath))
     memo("ivf", (model, supers)) {
       if (Seq(model, supers).forall(_.exists(_.name == "_SUCCESS")))
         Right(Ivf.openHier(spark, ivfModelPath, ivfSupersPath, "embedding",
           sessionConfig.ivfResidentModelBytes))
-      else Left(Ivf.load(spark, ivfModelPath, "embedding"))
+      else Left(built.getOrElse(Ivf.load(spark, ivfModelPath, "embedding")))
     }
   }
 
@@ -1024,14 +1119,17 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * shape re-published the whole snapshot to flip one flag. The
     * tombstoned rows stay visible in [[snapshot]] with
     * `is_deleted = true` (reference dangling-id tolerance) until
-    * [[compact]] physically drops them. No ids, no write: an empty
-    * call appends no delta and no sidecar rows. */
+    * [[compact]] physically drops them. The IVF and HNSW tiers read
+    * the delete from the delta tail; only the IVF-PQ sidecar gets the
+    * ids. No ids, no write: an empty call appends no delta and no
+    * sidecar rows. */
   def delete(ids: Seq[Long]): Unit = if (ids.nonEmpty) {
     val hit = snapshot().filter(col("id").isin(ids: _*))
       .withColumn("is_deleted", lit(true))
     graft.core.DeltaLog.append(hit, dataPath,
       graft.core.DeltaLog.nextSeq(spark, dataPath))
-    appendIndexTombstones(ids)
+    import spark.implicits._
+    appendIvfPqTombstones(ids.toDF("id"))
   }
 
   /** Bulk [[delete]]: the ids arrive as a one-column DataFrame (any
@@ -1051,15 +1149,10 @@ class VectorStore private (val spark: SparkSession, val path: String,
     // sidecar tombstones derive from the delta that actually LANDED
     // (read back, like ingest's index appends) — a non-deterministic
     // ids source (sample, unordered limit) evaluated twice could
-    // otherwise tombstone a different id set in the index sidecars
-    // than in the delta log
-    if (indexSuccessAt(ivfDataPath) || indexSuccessAt(ivfPqDataPath)) {
-      val tombs = spark.read.parquet(
-        graft.core.DeltaLog.deltaPath(dataPath, seq)).select("id")
-      if (successAt(ivfDataPath)) tombs.write.mode("append").parquet(ivfTombPath)
-      if (successAt(ivfPqDataPath))
-        tombs.write.mode("append").parquet(ivfPqTombPath)
-    }
+    // otherwise tombstone a different id set in the sidecar than in
+    // the delta log
+    appendIvfPqTombstones(spark.read.parquet(
+      graft.core.DeltaLog.deltaPath(dataPath, seq)).select("id"))
   }
 
   /** Compaction: fold the delta tail into the base AND physically drop
@@ -1073,15 +1166,15 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * `SnapshotIO.readGeneration(spark, s"$path/vectors/base", g)` for
     * rollback and [[graft.operators.Crud.snapshotDiff]] audits. */
   def compact(retainGenerations: Int = 0): Unit = {
-    // fold the index-tier tombstone sidecars FIRST, while the merged
-    // log still carries the is_deleted flags the fold unions in (the
-    // delta compact below drops those rows) — bounds each sidecar by
-    // deletes since the last compact and heals the delete-crash window
-    // (see the fold scaladoc above)
-    val deleted = snapshot().filter(col("is_deleted"))
-      .select(col("id").cast("long").as("id"))
-    foldIndexTable(ivfDataPath, ivfTombPath, deleted)
-    foldIndexTable(ivfPqDataPath, ivfPqTombPath, deleted)
+    // fold the index tables FIRST, while the log still holds the tail
+    // the IVF fold reads and the is_deleted flags the IVF-PQ fold
+    // unions in (the delta compact below drops both) — the layout seq
+    // then already covers what the log folds, and the IVF-PQ sidecar
+    // stays bounded by deletes since the last compact (see the swap
+    // block above)
+    foldIvfLayout()
+    foldIvfPq(snapshot().filter(col("is_deleted"))
+      .select(col("id").cast("long").as("id")))
     graft.core.DeltaLog.compact(spark, dataPath, "id",
       retainGenerations = retainGenerations,
       transform = m => Crud.compact(m).withColumn("is_deleted", lit(false)),

@@ -38,11 +38,12 @@ import org.apache.spark.sql.functions._
   * Spark lists them in one parallel listing job, still one).
   *
   * Held tail: the RESOLVED tail (latest-seq-wins rows, tombstones
-  * included) is persisted and held for the log version it was resolved
-  * at ([[version]]), keyed on the session, the qualified dir and the id
-  * column besides. Every later read at that version reuses it, so
-  * consecutive searches between two writes resolve the tail once; the
-  * first read that sees another version releases it (unpersist), and
+  * included, each with its seq in [[SeqCol]]) is persisted and held for
+  * the log version it was resolved at ([[version]]), keyed on the
+  * session, the qualified dir and the id column besides. Every later
+  * read at that version reuses it, so consecutive searches between two
+  * writes resolve the tail once; the first read that sees another
+  * version releases it (unpersist), and
   * [[compact]] releases it once the fold it fed is durable. At most
   * one tail is held per store dir, and it is no larger than the live
   * tail — which the compaction cadence already bounds for the
@@ -72,7 +73,8 @@ object DeltaLog {
 
   /** Tombstone marker column in delta rows (absent from base). */
   val TombCol = "__tomb"
-  private val SeqCol = "__delta_seq"
+  /** The seq of the delta a held tail row was resolved from. */
+  val SeqCol = "__delta_seq"
   private val DirPattern = """^d(\d+)$""".r
   /** The seq of the delta dir a part file sits in, from its path. */
   private val SeqInPath = """/d(\d+)/[^/]+$"""
@@ -265,7 +267,10 @@ object DeltaLog {
     }.sortBy(_.seq)
 
   /** A log version: what the merged state of a dir is derived from. */
-  final case class Version(watermark: Long, baseMtime: Long, live: Seq[Delta])
+  final case class Version(watermark: Long, baseMtime: Long, live: Seq[Delta]) {
+    /** The highest seq a read at this version reflects. */
+    def seq: Long = live.lastOption.fold(watermark)(_.seq)
+  }
 
   /** The log version on disk: the watermark, the modification time of
     * the base's `_SUCCESS` (−1 before the first publish) and every live
@@ -309,9 +314,9 @@ object DeltaLog {
       h.tail.unpersist(blocking = false)
 
   /** The resolved live tail at log version `log` (read by the caller)
-    * — latest-seq-wins rows, [[TombCol]] kept — or None when no delta
-    * is live. A tail held at that version is reused; any other held
-    * tail for the dir is released. `hold`
+    * — latest-seq-wins rows, [[TombCol]] and [[SeqCol]] kept — or None
+    * when no delta is live. A tail held at that version is reused; any
+    * other held tail for the dir is released. `hold`
     * persists and holds a freshly resolved tail ([[compact]] passes
     * false: it retires the version it reads). */
   private def resolvedTail(spark: SparkSession, dir: String, idCol: String,
@@ -342,7 +347,7 @@ object DeltaLog {
             val resolved = scanTail(spark, live)
               .repartition(parts, col(idCol))
               .withColumn("__rn", row_number().over(win))
-              .filter(col("__rn") === 1).drop("__rn", SeqCol)
+              .filter(col("__rn") === 1).drop("__rn")
             if (hold) {
               resolved.persist()
               held(key) = Held(at, resolved)
@@ -379,9 +384,10 @@ object DeltaLog {
 
   /** The two sides a merged read combines, at one log version: the base
     * (None before the first publish) and the resolved live tail —
-    * latest-seq-wins rows with [[TombCol]] kept, None when no delta is
-    * live — held as [[readMerged]] holds it. For readers that keep
-    * state derived from the base and apply the tail per read. */
+    * latest-seq-wins rows with [[TombCol]] and [[SeqCol]] kept, None
+    * when no delta is live — held as [[readMerged]] holds it. For
+    * readers that keep state derived from the base and apply the tail
+    * per read. */
   private[graft] final case class Sides(version: Version,
                                         base: Option[DataFrame],
                                         tail: Option[DataFrame])
@@ -390,19 +396,30 @@ object DeltaLog {
                                idCol: String): Sides =
     sides(spark, dir, idCol, hold = true)
 
-  private def sides(spark: SparkSession, dir: String, idCol: String,
-                    hold: Boolean): Sides = {
+  /** [[readSides]] without the base: the log version and the held
+    * resolved tail at it. Reads no base file. */
+  private[graft] def readTail(spark: SparkSession, dir: String,
+                              idCol: String): (Version, Option[DataFrame]) =
+    tail(spark, dir, idCol, hold = true)
+
+  private def tail(spark: SparkSession, dir: String, idCol: String,
+                   hold: Boolean): (Version, Option[DataFrame]) = {
     adoptIfLegacy(spark, dir)
     val log = version(spark, dir)
-    Sides(log, SnapshotIO.read(spark, basePath(dir)),
-      resolvedTail(spark, dir, idCol, hold, log))
+    (log, resolvedTail(spark, dir, idCol, hold, log))
+  }
+
+  private def sides(spark: SparkSession, dir: String, idCol: String,
+                    hold: Boolean): Sides = {
+    val (log, t) = tail(spark, dir, idCol, hold)
+    Sides(log, SnapshotIO.read(spark, basePath(dir)), t)
   }
 
   private def merged(spark: SparkSession, dir: String, idCol: String,
                      hold: Boolean): Option[DataFrame] = {
     val Sides(_, base, tail) = sides(spark, dir, idCol, hold)
     tail.map { resolved =>
-      val alive = resolved.filter(!col(TombCol)).drop(TombCol)
+      val alive = resolved.filter(!col(TombCol)).drop(TombCol, SeqCol)
       base match {
         case None => alive
         case Some(b) =>

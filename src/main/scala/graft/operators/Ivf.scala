@@ -589,11 +589,15 @@ object Ivf {
   def search(assigned: DataFrame, model: Model, idCol: String,
              query: Seq[Float], nProbe: Int, topK: Int,
              filter: Option[Column] = None): DataFrame = {
+    val base = assigned.filter(col(ClusterCol).isin(probed(model, query, nProbe): _*))
+    Search.knnExact(base, idCol, model.embCol, query, topK, filter)
+  }
+
+  /** The lists [[search]] probes: the n_probe nearest, range-checked. */
+  def probed(model: Model, query: Seq[Float], nProbe: Int): Seq[Int] = {
     require(nProbe >= 1 && nProbe <= model.k,
       s"n_probe must be between 1 and ${model.k}, got $nProbe")
-    val probed = probeClusters(model, query, nProbe)
-    val base = assigned.filter(col(ClusterCol).isin(probed: _*))
-    Search.knnExact(base, idCol, model.embCol, query, topK, filter)
+    probeClusters(model, query, nProbe)
   }
 
   private def l2sqTo(query: Array[Double])(a: Array[Float]): Double = {
@@ -684,13 +688,17 @@ object Ivf {
   def searchHier(assigned: DataFrame, model: HierProbe, idCol: String,
                  query: Seq[Float], nProbe: Int, topK: Int,
                  filter: Option[Column] = None): DataFrame = {
+    val base = assigned.filter(col(ClusterCol).isin(probedHier(model, query, nProbe): _*))
+    Search.knnExact(base, idCol, model.embCol, query, topK, filter)
+  }
+
+  /** The lists [[searchHier]] probes, range-checked: ranked flat at or
+    * below [[FlatBuildMaxK]] lists, hierarchically above. */
+  def probedHier(model: HierProbe, query: Seq[Float], nProbe: Int): Seq[Int] = {
     require(nProbe >= 1 && nProbe <= model.k,
       s"n_probe must be between 1 and ${model.k}, got $nProbe")
-    val probed =
-      if (model.k <= FlatBuildMaxK) probeClusters(model.flat, query, nProbe)
-      else probeClustersHier(model, query, nProbe)
-    val base = assigned.filter(col(ClusterCol).isin(probed: _*))
-    Search.knnExact(base, idCol, model.embCol, query, topK, filter)
+    if (model.k <= FlatBuildMaxK) probeClusters(model.flat, query, nProbe)
+    else probeClustersHier(model, query, nProbe)
   }
 
   /** Centroid-drift metric for streaming maintenance: mean L2 distance

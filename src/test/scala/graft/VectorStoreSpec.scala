@@ -426,7 +426,8 @@ class VectorStoreSpec extends SparkSpec {
     val pqHit = store.searchIvfPq(newSelf, nProbe = 4, k = 3, rerank = 60).collect()
     assert(pqHit.head.getAs[Double]("dist") < 1e-6,
       "a row ingested after buildIvfPq must be findable without a rebuild")
-    // delete AFTER the builds: the sidecar must drop it from both tiers
+    // delete AFTER the builds: the delta tail drops it from the IVF
+    // tier, the sidecar from the IVF-PQ tier
     val gone = ivfHit.head.getAs[Long]("id")
     store.delete(Seq(gone))
     assert(!store.searchIvf(newSelf, nProbe = 4, k = 5).collect()
@@ -556,7 +557,9 @@ class VectorStoreSpec extends SparkSpec {
     store.delete(Seq(7L, 8L, 9L))
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    assert(f.exists(new org.apache.hadoop.fs.Path(s"$dir/ivf_tombstones")))
+    // the IVF tier reads deletes from the delta tail: no sidecar
+    assert(!f.exists(new org.apache.hadoop.fs.Path(s"$dir/ivf_tombstones")),
+      "a delete must append no IVF sidecar")
     assert(f.exists(new org.apache.hadoop.fs.Path(s"$dir/ivfpq_tombstones")))
     store.compact()
     // sidecars are folded INTO the tables and cleared
@@ -592,19 +595,18 @@ class VectorStoreSpec extends SparkSpec {
     store.ingest(data.map { case (_, v) => Tuple1(v) }.toDF("embedding"))
     store.buildIvf(4)
     store.delete(Seq(5L))
-    // simulate the crash window: the delete delta landed but the
-    // sidecar append was lost (pre-fix this id resurfaced from
-    // searchIvf until the next full build)
+    // the IVF tier keeps no sidecar a crash could lose: the delete
+    // reaches it as the delta that landed, before and after the fold
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    f.delete(new org.apache.hadoop.fs.Path(s"$dir/ivf_tombstones"), true)
-    assert(store.searchIvf(data(5)._2.toSeq, nProbe = 4, k = 3).collect()
-      .map(_.getAs[Long]("id")).contains(5L),
-      "precondition: with the sidecar lost, the ghost row resurfaces")
-    store.compact() // the fold unions the merged log's is_deleted ids
+    assert(!f.exists(new org.apache.hadoop.fs.Path(s"$dir/ivf_tombstones")))
     assert(!store.searchIvf(data(5)._2.toSeq, nProbe = 4, k = 10).collect()
       .map(_.getAs[Long]("id")).contains(5L),
-      "compact must heal the lost-sidecar ghost")
+      "the deleted id must not surface before compact")
+    store.compact()
+    assert(!store.searchIvf(data(5)._2.toSeq, nProbe = 4, k = 10).collect()
+      .map(_.getAs[Long]("id")).contains(5L),
+      "the deleted id must not surface after compact")
   }
 
   test("next-id fallback never re-issues ids still in the LSH signature table") {
@@ -644,17 +646,21 @@ class VectorStoreSpec extends SparkSpec {
     val self = data(37)._2.toSeq
     val hit = store.searchIvf(self, nProbe = model.k, k = 3).collect()
     assert(hit.head.getAs[Double]("dist") < 1e-6)
-    // ingest AFTER the hier build: assignment runs through the two-level
-    // model and the new row surfaces without a rebuild
+    // ingest AFTER the hier build: the new row surfaces without a
+    // rebuild (from the delta tail), and compact assigns it through
+    // the two-level model
     store.ingest(data.drop(150).map { case (_, v) => Tuple1(v) }.toDF("embedding"))
     val newSelf = data(170)._2.toSeq
     val hit2 = store.searchIvf(newSelf, nProbe = model.k, k = 3).collect()
     assert(hit2.head.getAs[Double]("dist") < 1e-6,
       "a row ingested after the hier build must be findable")
-    // appended cluster ids must stay within the hier model's range
+    store.compact()
+    // folded cluster ids must stay within the hier model's range
     val maxCid = s.read.parquet(s"$dir/vectors_by_cluster")
       .agg(max(col(graft.operators.Ivf.ClusterCol))).head.getInt(0)
-    assert(maxCid < model.k, s"appended cluster id $maxCid out of range")
+    assert(maxCid < model.k, s"folded cluster id $maxCid out of range")
+    assert(s.read.parquet(s"$dir/vectors_by_cluster").filter(col("id") === 170L)
+      .count() == 1L, "compact must fold the ingested row into the layout")
     // a FLAT rebuild must clear the stale hierarchy
     store.buildIvf(4)
     assert(!f.exists(new org.apache.hadoop.fs.Path(s"$dir/ivf_supers")),
