@@ -1280,13 +1280,11 @@ object ScaleProbe {
       }
 
       // round-15 delete-heavy regime: deleteIds on 10% of the n-row
-      // store with both IVF tiers live (IVF reads the deletes from the
-      // delta tail, IVF-PQ from its sidecar), every tier searched green
-      // (no tombstoned id surfaces), then compact() folds them into the
-      // index tables and the searches stay green with the tail and the
-      // sidecar gone. Prints the sidecar size the anti-join's build
-      // side carried (the 64 MB broadcast ceiling decides hint vs
-      // shuffle anti-join) and the delete/search/compact walls.
+      // store with both IVF tiers live (both read the deletes from the
+      // delta tail), every tier searched green (no tombstoned id
+      // surfaces), then compact() folds them into the index tables and
+      // the searches stay green with the tail gone. Prints the
+      // delete/search/compact walls.
       tp("facade_delete10pct") {
         val st = graft.VectorStore.open(spark, s"$sdir/fstore", 8)
         if (st.size() == 0L) {
@@ -1307,10 +1305,6 @@ object ScaleProbe {
         val t0 = System.nanoTime()
         st.deleteIds(spark.range(n / 10).select((col("id") * 10).as("id")))
         val wDel = (System.nanoTime() - t0) / 1e9
-        val scBytes = Seq("ivf_tombstones", "ivfpq_tombstones").map { d =>
-          val dir = new java.io.File(s"$sdir/fstore/$d")
-          Option(dir.listFiles()).map(_.map(_.length()).sum).getOrElse(0L)
-        }.sum
         def tierGreen(name: String)(rows: => Array[org.apache.spark.sql.Row]): Double = {
           val s0 = System.nanoTime()
           val r = rows
@@ -1326,13 +1320,11 @@ object ScaleProbe {
         val tc = System.nanoTime()
         st.compact()
         val wCompact = (System.nanoTime() - tc) / 1e9
-        require(!new java.io.File(s"$sdir/fstore/ivf_tombstones").exists(),
-          "compact must clear the IVF sidecar")
         val wIvf2 = tierGreen("ivf_postfold")(st.searchIvf(qv, 0, 10).collect())
         val wPq2 = tierGreen("ivfpq_postfold")(
           st.searchIvfPq(qv, 0, 10, rerank = 30).collect())
-        println(f"        delete10pct: delete=$wDel%.1f s sidecar=${scBytes / 1e6}%.1f MB " +
-          f"(broadcast<=64MB) ivf=$wIvf%.1f/$wIvf2%.1f s ivfpq=$wPq%.1f/$wPq2%.1f s " +
+        println(f"        delete10pct: delete=$wDel%.1f s " +
+          f"ivf=$wIvf%.1f/$wIvf2%.1f s ivfpq=$wPq%.1f/$wPq2%.1f s " +
           f"compact_fold=$wCompact%.1f s")
         st.size()
       }

@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   * row count and per-filter BQ thresholds on the log version, the HNSW
   * build row on the files of `hnsw_model`, the IVF serve model (flat
   * or hierarchical) on the files of `ivf_model` and `ivf_supers`, the
-  * IVF layout relation and its layout seq on the files of
-  * `vectors_by_cluster`.
+  * IVF-PQ and LSH models and each index table's relation and table seq
+  * on the files of their dirs.
   *
   * Executor-side state is the persisted HNSW graph: its shards,
   * reconstructed from the delta-log base and `hnsw_edges`
@@ -32,14 +32,15 @@ import org.apache.spark.sql.functions._
   * held per dir, and the first search that sees another key releases
   * it and holds the new one — so the first search after a build,
   * refresh or compaction pays the reconstruction, and later ones only
-  * apply the live delta tail as a shadow. The IVF layout likewise
-  * changes only in [[buildIvf]] and [[compact]], and its searches
-  * overlay the tail ([[searchIvf]]). Mutations
-  * (ingest/delete) are O(batch) delta appends — the reference's save
-  * is likewise an O(1) slot write (storage.py:198-230) — and
-  * [[compact]] folds the tail on the caller's cadence. Pre-delta
-  * stores (plain snapshot at the vectors root) are adopted by renames
-  * on first read.
+  * apply the live delta tail as a shadow. The three index tables kept
+  * beside the log — the IVF layout, the IVF-PQ code table and the LSH
+  * signature table — likewise change only at their build and at
+  * [[compact]]'s fold, and their searches overlay the tail (the swap
+  * block). Mutations (ingest/delete) are each ONE O(batch) delta
+  * append — the reference's save is likewise an O(1) slot write
+  * (storage.py:198-230) — and [[compact]] folds the tail on the
+  * caller's cadence. Pre-delta stores (plain snapshot at the vectors
+  * root) are adopted by renames on first read.
   */
 class VectorStore private (val spark: SparkSession, val path: String,
                            val dim: Int) {
@@ -49,59 +50,18 @@ class VectorStore private (val spark: SparkSession, val path: String,
   private def ivfSupersPath = s"$path/ivf_supers"
   private def ivfDataPath = s"$path/vectors_by_cluster"
 
-  /** The highest delta seq the IVF layout's rows reflect (the layout
+  /** The highest delta seq an index table's rows reflect (its table
     * seq), in a `_`-prefixed file parquet readers skip. Written into the
-    * layout dir before it is swapped in, so rows and seq publish
+    * table dir before it is swapped in, so rows and seq publish
     * together ([[swapIndexTable]]). */
-  private def ivfLayoutSeqFile = "_layout_seq"
+  private def tableSeqFile = "_layout_seq"
 
-  // Tombstone SIDECAR for the persisted IVF-PQ code table: the codes
-  // are materialized rows, so a delete must reach them too — but
-  // re-deriving the tombstone set from the corpus per query would cost
-  // a linear id scan, defeating the tier's partition-pruned
-  // sublinearity. Instead each delete appends its id list (O(|ids|)
-  // bytes) to a sidecar that searches anti-join against (broadcast —
-  // sized by deletes since the last compact, not by the corpus); each
-  // build starts a fresh table and clears its sidecar. The IVF layout
-  // keeps no sidecar: its searches overlay the delta tail instead
-  // ([[searchIvf]]). `ivf_tombstones` is a leftover of stores that
-  // kept one: searches ignore it, the next fold removes it, and
-  // [[fallbackNextId]] still maxes against it while it exists.
-  private def ivfTombPath = s"$path/ivf_tombstones"
-  private def ivfPqTombPath = s"$path/ivfpq_tombstones"
-  private def appendIvfPqTombstones(ids: => DataFrame): Unit =
-    if (indexSuccessAt(ivfPqDataPath)) ids.write.mode("append").parquet(ivfPqTombPath)
-  /** Broadcast ceiling for the sidecar anti-join's build side: below it
-    * the tombstone set ships to every task (no shuffle of the index
-    * table); above it — a delete-heavy backlog, e.g. a curation pass
-    * tombstoning 10% of a 10¹⁰-row corpus — forcing the hint would OOM
-    * the driver/executors, so the join falls back to a shuffle
-    * anti-join and lets AQE plan it. Compaction ([[compact]]) folds the
-    * backlog away, so the big-sidecar regime is transient.
-    *
-    * The gate compares the sidecar's COMPRESSED on-disk bytes, but the
-    * broadcast build side is the decoded distinct-long hash relation —
-    * ~16 B/id plus relation overhead, several × the parquet footprint
-    * (delta/dict-encoded ids compress hard). 16 MB on-disk therefore
-    * bounds the materialized broadcast to low-hundreds-of-MB worst
-    * case (r15 ADVICE: the previous 64 MB ceiling admitted multi-
-    * hundred-MB broadcasts just under the line). */
-  private val SidecarBroadcastMaxBytes = 16L * 1024 * 1024
-  private def dropSidecarTombs(table: DataFrame, tombPath: String,
-                               idCol: String = "id"): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(tombPath)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(f.makeQualified(p))) table
-    else {
-      val tombs = spark.read.parquet(tombPath)
-        .select(col("id").as("__tomb_id")).distinct()
-      val side =
-        if (f.getContentSummary(f.makeQualified(p)).getLength
-              <= SidecarBroadcastMaxBytes) broadcast(tombs)
-        else tombs
-      table.join(side, col(idCol) === col("__tomb_id"), "left_anti")
-    }
-  }
+  /** Tombstone sidecars earlier stores kept beside the IVF layout and
+    * the IVF-PQ code table. Searches ignore them, the next fold or
+    * build removes them, and [[fallbackNextId]] still maxes against
+    * them while they exist. */
+  private def leftoverSidecars =
+    Seq("ivf_tombstones", "ivfpq_tombstones").map(d => s"$path/$d")
   private def clearDir(dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
@@ -109,22 +69,23 @@ class VectorStore private (val spark: SparkSession, val path: String,
   }
 
   // -----------------------------------------------------------------
-  // Index-table swap: the IVF layout and the IVF-PQ code table are
-  // only ever replaced whole. [[buildIvf]] publishes a fresh layout;
-  // [[compact]] rewrites the layout with the delta tail folded in
-  // ([[foldIvfLayout]]) and the code table without its tombstoned ids
-  // ([[foldIvfPq]]) — the same amortization the delta log applies to
-  // the vector log, so the IVF-PQ sidecar is bounded by deletes SINCE
-  // THE LAST COMPACT and the IVF overlay by writes since then. Swap
-  // protocol (single-writer, crash-resumable):
-  //   1. write rows → dataDir__fold (+_SUCCESS, then the layout seq)
+  // Index tables beside the log: the IVF layout (`vectors_by_cluster`),
+  // the IVF-PQ code table (`codes_by_cluster`) and the LSH signature
+  // table (`lsh_signatures`). Each changes only at its build
+  // ([[buildIvf]], [[buildIvfPq]], [[trainLsh]]) and at [[compact]]'s
+  // fold ([[foldIndexTables]]), and is only ever replaced whole, with
+  // its table seq recorded in it. Ingest and delete write nothing
+  // here: a search reads the table merged with the delta tail above
+  // its seq ([[indexView]], [[overlay]]), and the compaction cadence
+  // bounds that tail. Swap protocol (single-writer, crash-resumable):
+  //   1. write rows → dataDir__fold (+_SUCCESS, then the table seq)
   //   2. rename dataDir → dataDir__dropped
   //   3. rename dataDir__fold → dataDir
   //   4. delete dataDir__dropped
   // [[recoverIndexFold]] resumes: dataDir absent + complete __fold ⇒
   // redo step 3; dataDir present ⇒ drop leftovers (a pre-step-2 crash
-  // left the old table, its seq and the sidecar in place, so the next
-  // compact refolds — idempotent).
+  // left the old table and its seq in place, so the next compact
+  // refolds — idempotent).
   // -----------------------------------------------------------------
   private def recoverIndexFold(dataDir: String): Unit = {
     val f = new org.apache.hadoop.fs.Path(dataDir)
@@ -145,52 +106,115 @@ class VectorStore private (val spark: SparkSession, val path: String,
     recoverIndexFold(dataDir)
     successAt(dataDir)
   }
-  /** Publish `rows` as the cluster-partitioned table at `dataDir`
-    * through the swap above, with `layoutSeq` recorded in it. */
+  /** Publish `rows` as the table at `dataDir` through the swap above,
+    * with `tableSeq` recorded in it, and remove any leftover sidecar. A
+    * table with a cluster column is written partitioned by it. */
   private def swapIndexTable(dataDir: String, rows: DataFrame,
-                             layoutSeq: Option[Long]): Unit = {
+                             tableSeq: Long): Unit = {
     val f = new org.apache.hadoop.fs.Path(dataDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def q(s: String) = f.makeQualified(new org.apache.hadoop.fs.Path(s))
     recoverIndexFold(dataDir) // no swap leftovers in the way
     val tmp = s"${dataDir}__fold"
-    // same pre-shuffle as Ivf.writePartitioned: bounds the file count
-    // by (writer-task × held-cluster), and the rewrite doubles as the
-    // OPTIMIZE pass for small files
-    Ivf.writePartitioned(rows, tmp)
-    layoutSeq.foreach { seq =>
-      val out = f.create(q(s"$tmp/$ivfLayoutSeqFile"), true)
-      try out.write(seq.toString.getBytes("UTF-8")) finally out.close()
-    }
+    // a partitioned table takes Ivf.writePartitioned's pre-shuffle:
+    // it bounds the file count by (writer-task × held-cluster), and the
+    // rewrite doubles as the OPTIMIZE pass for small files
+    if (rows.columns.contains(Ivf.ClusterCol)) Ivf.writePartitioned(rows, tmp)
+    else rows.write.mode("overwrite").parquet(tmp)
+    val out = f.create(q(s"$tmp/$tableSeqFile"), true)
+    try out.write(tableSeq.toString.getBytes("UTF-8")) finally out.close()
     if (f.exists(q(dataDir)) && !f.rename(q(dataDir), q(s"${dataDir}__dropped")) &&
         f.exists(q(dataDir)))
       throw new java.io.IOException(s"rename $dataDir aside failed")
     if (!f.rename(q(tmp), q(dataDir)) && !f.exists(q(dataDir)))
       throw new java.io.IOException(s"rename $tmp -> $dataDir failed")
     f.delete(q(s"${dataDir}__dropped"), true)
-    ()
+    leftoverSidecars.foreach(clearDir)
   }
 
-  /** The IVF-PQ fold: the code table without the ids in its sidecar or
-    * flagged deleted in the merged log (`deleted`) — which also heals
-    * the delete() crash window (delta landed, sidecar append lost → the
-    * id would resurface from the tier forever; here it is dropped at
-    * the next compact) — and the sidecar cleared. */
-  private def foldIvfPq(deleted: DataFrame): Unit = {
-    recoverIndexFold(ivfPqDataPath)
-    if (!successAt(ivfPqDataPath)) return
-    val f = new org.apache.hadoop.fs.Path(ivfPqTombPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasSidecar = f.exists(f.makeQualified(new org.apache.hadoop.fs.Path(ivfPqTombPath)))
-    val tombs = (if (hasSidecar)
-        spark.read.parquet(ivfPqTombPath).select(col("id").cast("long").as("id"))
-          .unionByName(deleted)
-      else deleted).distinct()
-    if (!tombs.isEmpty)
-      swapIndexTable(ivfPqDataPath, spark.read.parquet(ivfPqDataPath)
-        .join(tombs.select(col("id").as("__tomb_id")),
-          col("id") === col("__tomb_id"), "left_anti"), layoutSeq = None)
-    if (hasSidecar) clearDir(ivfPqTombPath)
+  /** The columns each index table holds. */
+  private def ivfCols = Seq("id", "embedding", "metadata", Ivf.ClusterCol)
+  private def ivfPqCols = Seq("id", Ivf.ClusterCol, IvfPq.CodeCol, "metadata")
+  private def lshCols = Seq("id", Lsh.SigsCol)
+
+  /** The index table at `dir` as one relation and its recorded table
+    * seq, memoized on the dir's files. */
+  private def indexTable(dir: String): (DataFrame, Option[Long]) =
+    memo(s"table $dir", stamps(dir)) {
+      val seqFile = new org.apache.hadoop.fs.Path(dir, tableSeqFile)
+      val f = seqFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val seq = if (!f.exists(seqFile)) None else {
+        val in = f.open(seqFile)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLongOption
+        finally in.close()
+      }
+      (spark.read.parquet(dir), seq)
+    }
+
+  /** The index table at `dir` read against the log: its rows, the held
+    * resolved tail's rows above its table seq (None when the tail holds
+    * none) and the log's seq. None when the log watermark has passed
+    * the table seq — the log folded deltas the table never saw (a
+    * `DeltaLog.compact` outside [[compact]], e.g. the streaming path's
+    * `compactEvery`), so only the exact path can answer until the next
+    * fold or build. A table with no recorded seq takes the log
+    * watermark as its seq. */
+  private def indexView(dir: String): Option[(DataFrame, Option[DataFrame], Long)] = {
+    recoverIndexFold(dir) // resume a crashed fold swap
+    val (table, recorded) = indexTable(dir)
+    val (log, tail) = DeltaLog.readTail(spark, dataPath, "id")
+    val seq = recorded.getOrElse(log.watermark)
+    if (log.watermark > seq) None
+    else Some((table, tail.filter(_ => log.seq > seq)
+      .map(t => t.filter(col(DeltaLog.SeqCol) > seq)), log.seq))
+  }
+
+  /** Merge-on-read of index rows: `rows` minus every id the tail rows
+    * `over` hold, and over's live rows as (id, embedding, metadata) —
+    * None without tail rows. */
+  private def overlay(rows: DataFrame, over: Option[DataFrame])
+      : (DataFrame, Option[DataFrame]) =
+    over.fold((rows, Option.empty[DataFrame])) { o =>
+      (rows.join(o.select(col("id").as("__over_id")),
+          col("id") === col("__over_id"), "left_anti"),
+        Some(o.filter(presentIn(o)).select(col("id"),
+          tryCol(o, "embedding").cast("array<float>").as("embedding"),
+          tryCol(o, "metadata").cast("map<string,string>").as("metadata"))))
+    }
+
+  /** [[overlay]]'s two sides as one relation of `rows`' columns: the
+    * live tail rows pass through `place`, which derives those columns
+    * from (id, embedding, metadata). */
+  private def overlaid(rows: DataFrame, over: Option[DataFrame])(
+      place: DataFrame => DataFrame): DataFrame = overlay(rows, over) match {
+    case (kept, None) => kept
+    case (kept, Some(live)) =>
+      kept.unionByName(place(live).select(kept.columns.toSeq.map(col): _*))
+  }
+
+  /** The fold [[compact]] runs before the log compacts, one pass over
+    * every built index table: the table with the tail above its seq
+    * folded in — the tail's ids dropped, its live rows placed by the
+    * table's `place` (IVF list assignment, IVF-PQ encoding, LSH
+    * signatures) — published with the log's seq as the new table seq.
+    * A table the log has outrun is re-derived from every live row.
+    * Leftover sidecars are removed even when no table changes. */
+  private def foldIndexTables(): Unit = {
+    val tables = Seq[(String, Seq[String], Boolean, DataFrame => DataFrame)](
+      (ivfDataPath, ivfCols, successAt(ivfModelPath), assignToLists),
+      (ivfPqDataPath, ivfPqCols, ivfPqModelAt, IvfPq.encode(_, "embedding", ivfPqModel())),
+      (lshSigPath, lshCols, successAt(lshModelPath), Lsh.assign(_, "embedding", lshModel())))
+    for ((dir, cols, modeled, place) <- tables if modeled && indexSuccessAt(dir))
+      indexView(dir) match {
+        case None =>
+          val logSeq = DeltaLog.version(spark, dataPath).seq
+          swapIndexTable(dir, place(live(Map.empty).select("id", "embedding", "metadata"))
+            .select(cols.map(col): _*), logSeq)
+        case Some((table, over @ Some(_), logSeq)) =>
+          swapIndexTable(dir, overlaid(table.select(cols.map(col): _*), over)(place), logSeq)
+        case Some((_, None, _)) => ()
+      }
+    leftoverSidecars.foreach(clearDir)
   }
 
   /** Current merged state (empty on a fresh store): the delta-log base
@@ -222,14 +246,14 @@ class VectorStore private (val spark: SparkSession, val path: String,
   private def nextIdPath = new org.apache.hadoop.fs.Path(s"$path/next_id")
   private def hfs = nextIdPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
   /** Fallback when the high-water marker is absent/torn: max(id)+1 over
-    * the merged snapshot, ALSO maxed against the index sidecars and the
-    * LSH signature table — after delete()+compact() the snapshot max can
-    * shrink below ids still recorded there, and re-issuing one of those
-    * ids would silently anti-join the new row out of the IVF-PQ tier
-    * (its id sits in a tombstone sidecar; a leftover `ivf_tombstones`
-    * counts too) or duplicate it in the signature table. One bounded
-    * max-aggregation per small table, paid only on the no-marker
-    * path. */
+    * the merged snapshot, ALSO maxed against any leftover tombstone
+    * sidecar — after delete()+compact() the snapshot max can shrink
+    * below ids recorded there, and re-issuing one of those ids would
+    * let an older build that still reads the sidecar drop the new
+    * row. One bounded max-aggregation per sidecar, paid only on the
+    * no-marker path. The index tables need no such bump: each folds
+    * deletes away at [[compact]], and a re-issued id above a table's
+    * seq is read from the tail. */
   private def fallbackNextId(): Long = {
     var next = Crud.nextId(snapshot(), "id")
     def bump(dir: String): Unit = {
@@ -241,7 +265,7 @@ class VectorStore private (val spark: SparkSession, val path: String,
           case _ => ()
         }
     }
-    Seq(ivfTombPath, ivfPqTombPath, lshSigPath).foreach(bump)
+    leftoverSidecars.foreach(bump)
     // the persisted HNSW graph covers every id below its build
     // watermark (r15 ADVICE: after delete()+compact() with a torn
     // marker, re-issuing an id still present in hnsw_edges would serve
@@ -278,9 +302,10 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * next-id high-water mark, append ONE delta (mmap_vector_store.py:
     * 83-125 — whose save is likewise an O(1) slot write, storage.py:
     * 198-230, not a store rewrite). Per-call I/O is O(batch): the
-    * corpus is never read or rewritten; folding happens in [[compact]]
-    * on the caller's cadence. Rows: (embedding, content?, metadata?).
-    * Returns the first assigned id. */
+    * corpus is never read or rewritten, and no index table is touched —
+    * every tier reads the batch from the delta tail until [[compact]]
+    * folds it on the caller's cadence. Rows: (embedding, content?,
+    * metadata?). Returns the first assigned id. */
   def ingest(rows: DataFrame, embCol: String = "embedding"): Long = {
     val validated = Tables.validateDim(rows, embCol, dim)
     val full = validated
@@ -303,42 +328,9 @@ class VectorStore private (val spark: SparkSession, val path: String,
       val (withIds, n) = Crud.assignIdsRange(full, start)
       // reserve the exact range BEFORE the delta lands (crash ⇒ gap)
       writeNextId(start + n)
-      val ordered = withIds.select("id", "embedding", "content", "metadata",
-        "metadata_json", "is_deleted")
-      val seq = graft.core.DeltaLog.nextSeq(spark, dataPath)
-      graft.core.DeltaLog.append(ordered, dataPath, seq)
-      // incremental index maintenance for the tiers that keep
-      // materialized rows beside the log (LSH signatures, IVF-PQ
-      // codes): derive index rows for the NEW batch only (read back
-      // from the delta that just landed, so index ids match persisted
-      // ids exactly) and append — no full rebuild. A crash between the
-      // delta append and an index append leaves that batch invisible to
-      // the affected tier until its next build — recall-only staleness,
-      // never wrong distances. The IVF and HNSW tiers read the batch
-      // from the delta tail instead (searchIvf, searchHnsw), so an
-      // ingest writes nothing for them.
-      lazy val landed = spark.read.parquet(
-        graft.core.DeltaLog.deltaPath(dataPath, seq))
-      // LSH: signatures for the new rows (assign-new-only discipline)
-      if (successAt(lshModelPath) && successAt(lshSigPath)) {
-        val m = Lsh.load(spark, lshModelPath)
-        Lsh.assign(landed, "embedding", m)
-          .select(col("id"), col(Lsh.SigsCol))
-          .write.mode("append").parquet(lshSigPath)
-      }
-      // IVF-PQ: encode the new rows through the persisted two-level
-      // model and append to the code table (same schema as the build).
-      // The model persists as ivf/ + pq/ SUBDIRS — gate on the inner
-      // markers, the model root itself carries no _SUCCESS
-      if (successAt(s"$ivfPqModelPath/ivf") && successAt(s"$ivfPqModelPath/pq") &&
-          indexSuccessAt(ivfPqDataPath)) {
-        val m = IvfPq.load(spark, ivfPqModelPath, "embedding")
-        IvfPq.encode(landed, "embedding", m)
-          .select(col("id"), col(Ivf.ClusterCol), col(IvfPq.CodeCol),
-            col("metadata"))
-          .repartition(col(Ivf.ClusterCol))
-          .write.mode("append").partitionBy(Ivf.ClusterCol).parquet(ivfPqDataPath)
-      }
+      graft.core.DeltaLog.append(withIds.select("id", "embedding", "content",
+        "metadata", "metadata_json", "is_deleted"), dataPath,
+        graft.core.DeltaLog.nextSeq(spark, dataPath))
       start
     } finally { full.unpersist(); () }
   }
@@ -629,18 +621,19 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * repeated [[searchLsh]] calls filter the compact signature table
     * instead of recomputing every row's L·b plane dots per query (the
     * measured bill at 10M rows was ~75 s/query, almost all signature
-    * recompute). The table stays FRESH across mutations: [[ingest]]
-    * appends signatures for each new batch (assign-new-only, the
-    * incremental-LSH discipline) and deleted rows are dropped by the
-    * live-join at query time — a full re-train is only needed to
-    * change the plane geometry (bits/tables) or to recover the one
-    * crash window between ingest's data and signature appends. */
+    * recompute). The table is an index table beside the log (the swap
+    * block): it changes only here and at [[compact]]'s fold, which
+    * signs the tail's live rows under the persisted planes, and
+    * searches read writes since then from the delta tail. Re-train only
+    * to change the plane geometry (bits/tables). */
   def trainLsh(bitsPerTable: Int = 8, nTables: Int = 16): Lsh.Model = {
     val m = Lsh.fitBanded(dim, bitsPerTable, nTables)
+    // read before the rows: a write landing meanwhile is then overlaid
+    // by searches (harmless), never missed
+    val tableSeq = DeltaLog.version(spark, dataPath).seq
     Lsh.save(m, lshModelPath, spark)
-    Lsh.assign(live(Map.empty), "embedding", m)
-      .select(col("id"), col(Lsh.SigsCol))
-      .write.mode("overwrite").parquet(lshSigPath)
+    swapIndexTable(lshSigPath, Lsh.assign(live(Map.empty), "embedding", m)
+      .select(lshCols.map(col): _*), tableSeq)
     m
   }
 
@@ -650,22 +643,31 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * collision is a function of angle, not corpus size — and the
     * `lsh_recall_sweep` probe is the measured check (16 tables × 8
     * bits, probeBits = 2: 10/10 at 1M). After [[trainLsh]], the probe
-    * cut runs over the PERSISTED signature table and only the
-    * candidate ids join back to the snapshot (a point-join on a small
-    * set) — per-query cost is a bytes-small signature scan. Without
-    * it, signatures derive on scan per call (train-free, fine for
-    * one-shot queries; persist for repeated ones). */
+    * cut runs over the PERSISTED signature table merged on read with
+    * the delta tail: the candidates are the probed signature rows
+    * minus every id the tail holds above the table seq, plus the
+    * tail's live ids, and only they join back to the snapshot (a
+    * point-join on a small set) for the exact rerank — per-query cost
+    * is a bytes-small signature scan plus the tail, which the
+    * [[compact]] cadence bounds. When the log watermark has passed the
+    * table seq the answer comes from the exact path ([[search]]) until
+    * the next [[compact]] or [[trainLsh]]. Without a trained model,
+    * signatures derive on scan per call (train-free, fine for one-shot
+    * queries; persist for repeated ones). */
   def searchLsh(query: Seq[Float], k: Int, probeBits: Int = 2,
                 metadataFilter: Map[String, String] = Map.empty): DataFrame =
-    if (successAt(lshModelPath) && successAt(lshSigPath)) {
-      val model = Lsh.load(spark, lshModelPath)
-      val cand = spark.read.parquet(lshSigPath)
-        .filter(Lsh.probeCondition(model, query, probeBits))
-        .select("id")
-      // live-join drops tombstoned/compacted ids; the metadata filter
-      // composes on the snapshot side, same contract as the direct path
-      Search.knnExact(live(metadataFilter).join(cand, "id"),
-        "id", "embedding", query, k)
+    if (successAt(lshModelPath) && indexSuccessAt(lshSigPath)) {
+      val model = lshModel()
+      indexView(lshSigPath) match {
+        case None => search(query, k, metadataFilter)
+        case Some((sigs, over, _)) =>
+          val cand = overlaid(sigs.filter(Lsh.probeCondition(model, query, probeBits))
+            .select("id"), over)(identity)
+          // the metadata filter composes on the snapshot side, same
+          // contract as the direct path
+          Search.knnExact(live(metadataFilter).join(cand, "id"),
+            "id", "embedding", query, k)
+      }
     } else {
       val model = Lsh.fitBanded(dim, bitsPerTable = 8, nTables = 16)
       Lsh.search(Lsh.assign(live(metadataFilter), "embedding", model), model,
@@ -693,10 +695,12 @@ class VectorStore private (val spark: SparkSession, val path: String,
                hierarchical: Option[Boolean] = None): Ivf.Model = {
     // read before the rows: a write landing meanwhile is then overlaid
     // by searches (harmless), never missed
-    val layoutSeq = DeltaLog.version(spark, dataPath).seq
+    val tableSeq = DeltaLog.version(spark, dataPath).seq
     val live = snapshot().filter(!col("is_deleted"))
+    def publish(assigned: DataFrame): Unit =
+      swapIndexTable(ivfDataPath, assigned.select(ivfCols.map(col): _*), tableSeq)
     val useHier = hierarchical.getOrElse(k > Ivf.FlatBuildMaxK)
-    val model = if (useHier) {
+    if (useHier) {
       // two-level quantizer: the only build path that can DELIVER the
       // 10·√N-list geometry past ~1B rows (flat throws for
       // k > sampleSize and flat assign is O(k·dim)/row). Skew is
@@ -705,7 +709,7 @@ class VectorStore private (val spark: SparkSession, val path: String,
       // flat path isn't needed here.
       val (assigned, hm) = Ivf.buildHier(live, "embedding", k, seed)
       Ivf.saveHier(hm, ivfModelPath, ivfSupersPath)
-      swapIndexTable(ivfDataPath, assigned, Some(layoutSeq))
+      publish(assigned)
       hm.flat
     } else {
       val frac =
@@ -716,35 +720,30 @@ class VectorStore private (val spark: SparkSession, val path: String,
         else Ivf.buildBalanced(live, "embedding", k, seed,
           maxClusterFraction = frac)
       Ivf.save(model, ivfModelPath)
-      swapIndexTable(ivfDataPath, assigned, Some(layoutSeq))
+      publish(assigned)
       // a flat rebuild over an earlier hierarchical one must not leave
       // the stale super table steering compact-time assignment
       clearDir(ivfSupersPath)
       ivfServeModel(built = Some(model))
       model
     }
-    clearDir(ivfTombPath) // a leftover sidecar (class scaladoc)
-    model
   }
 
   /** O6: n_probe pruned search over the partitioned IVF layout (probing
     * is parquet partition pruning; the metadata filter pushes down below
     * the probe filter), merged on read with the delta tail: the layout
     * rows of the probed lists, minus every id the held resolved tail
-    * holds at a seq above the layout seq, plus the tail's live rows that
+    * holds at a seq above the table seq, plus the tail's live rows that
     * pass the filter, all ranked exactly — the tail contract of
-    * [[searchHnsw]]. Writes since the layout was built or folded reach
-    * the answer this way (an upsert or tombstone appended straight to
-    * the log as well), so ingest and delete write nothing for this
-    * tier; [[compact]] folds the tail into the layout, and its cadence
-    * bounds the tail. The layout relation and its seq are memoized on
-    * the layout's files, so a call lists and infers nothing. When the
-    * log has folded deltas the layout never saw (its watermark passed
-    * the layout seq — a `DeltaLog.compact` outside [[compact]], e.g.
-    * the streaming path's `compactEvery`), the answer comes from the
+    * [[searchHnsw]], shared by every index table (the swap block).
+    * Writes since the layout was built or folded reach the answer this
+    * way (an upsert or tombstone appended straight to the log as well);
+    * [[compact]] folds the tail into the layout, and its cadence bounds
+    * the tail. The layout relation and its seq are memoized on the
+    * layout's files, so a call lists and infers nothing. When the log
+    * watermark has passed the table seq, the answer comes from the
     * exact path ([[search]]) until the next [[compact]] or [[buildIvf]]
-    * re-derives the layout. A layout with no recorded seq takes the
-    * log watermark as its seq.
+    * re-derives the layout. Hits carry (id, embedding, metadata, dist).
     *
     * `nProbe <= 0` (the auto default) = scale-aware probing: the config
     * default n_probe=10 (GraftConfig.nProbe, mirroring api/models.py:20)
@@ -755,8 +754,6 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * explicit `nProbe > 0` passes through unscaled. */
   def searchIvf(query: Seq[Float], nProbe: Int, k: Int,
                 metadataFilter: Map[String, String] = Map.empty): DataFrame = {
-    recoverIndexFold(ivfDataPath) // resume a crashed compact-fold swap
-    val (layout, recorded) = ivfLayout()
     // a hierarchical store serves through the GROUPED model: probe
     // ranking scores √k supers then only the top supers' children
     // (O((√k + β·nProbe)·dim)/query, Ivf.probeClustersHier) instead of
@@ -770,67 +767,15 @@ class VectorStore private (val spark: SparkSession, val path: String,
       case Right(hm) => Ivf.probedHier(hm, query, np(hm.k))
       case Left(model) => Ivf.probed(model, query, np(model.k))
     }
-    val (log, tail) = DeltaLog.readTail(spark, dataPath, "id")
-    val layoutSeq = recorded.getOrElse(log.watermark)
-    if (log.watermark > layoutSeq) return search(query, k, metadataFilter)
-    val rows = overlay(layout.filter(col(Ivf.ClusterCol).isin(probed: _*))
-      .drop(Ivf.ClusterCol), tail, log, layoutSeq)(identity)
-    val pred = if (metadataFilter.isEmpty) None
-      else Some(Search.metadataFilter(col("metadata"), metadataFilter))
-    Search.knnExact(rows, "id", "embedding", query, k, pred)
-  }
-
-  /** `layoutRows` merged with the tail rows above `layoutSeq`: every id
-    * those rows hold is dropped from `layoutRows`, and their live rows,
-    * projected to its columns and passed through `place`, are added. */
-  private def overlay(layoutRows: DataFrame, tail: Option[DataFrame],
-                      log: DeltaLog.Version, layoutSeq: Long)(
-      place: DataFrame => DataFrame): DataFrame =
-    tail.filter(_ => log.seq > layoutSeq).fold(layoutRows) { t =>
-      val over = t.filter(col(DeltaLog.SeqCol) > layoutSeq)
-      val cols = layoutRows.columns.filter(_ != Ivf.ClusterCol)
-      val live = over.filter(presentIn(over)).select(cols.map(c =>
-        tryCol(over, c).cast(layoutRows.schema(c).dataType).as(c)): _*)
-      layoutRows
-        .join(over.select(col("id").as("__over_id")),
-          col("id") === col("__over_id"), "left_anti")
-        .unionByName(place(live))
+    indexView(ivfDataPath) match {
+      case None => search(query, k, metadataFilter)
+      case Some((layout, over, _)) =>
+        val rows = overlaid(layout.filter(col(Ivf.ClusterCol).isin(probed: _*))
+          .select("id", "embedding", "metadata"), over)(identity)
+        val pred = if (metadataFilter.isEmpty) None
+          else Some(Search.metadataFilter(col("metadata"), metadataFilter))
+        Search.knnExact(rows, "id", "embedding", query, k, pred)
     }
-
-  /** The IVF layout as one relation and its recorded layout seq,
-    * memoized on the layout dir's files. */
-  private def ivfLayout(): (DataFrame, Option[Long]) =
-    memo("ivf layout", stamps(ivfDataPath)) {
-      val seqFile = new org.apache.hadoop.fs.Path(ivfDataPath, ivfLayoutSeqFile)
-      val f = seqFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val seq = if (!f.exists(seqFile)) None else {
-        val in = f.open(seqFile)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLongOption
-        finally in.close()
-      }
-      (spark.read.parquet(ivfDataPath), seq)
-    }
-
-  /** The IVF fold [[compact]] runs before the log compacts: the layout
-    * with the tail above its layout seq folded in — its ids dropped,
-    * its live rows assigned to the current lists — published with the
-    * log's seq as the new layout seq. A layout the log has outrun is
-    * re-derived from every live row instead. A leftover
-    * `ivf_tombstones` is removed. */
-  private def foldIvfLayout(): Unit = {
-    if (indexSuccessAt(ivfDataPath) && successAt(ivfModelPath)) {
-      val (layout, recorded) = ivfLayout()
-      val (log, tail) = DeltaLog.readTail(spark, dataPath, "id")
-      val layoutSeq = recorded.getOrElse(log.watermark)
-      if (log.watermark > layoutSeq)
-        swapIndexTable(ivfDataPath, assignToLists(snapshot()
-          .filter(!col("is_deleted")).select(layout.columns
-            .filter(_ != Ivf.ClusterCol).map(col): _*)), Some(log.seq))
-      else if (log.seq > layoutSeq)
-        swapIndexTable(ivfDataPath,
-          overlay(layout, tail, log, layoutSeq)(assignToLists), Some(log.seq))
-    }
-    clearDir(ivfTombPath)
   }
 
   /** Rows with their IVF list under the persisted model. A hierarchical
@@ -867,65 +812,99 @@ class VectorStore private (val spark: SparkSession, val path: String,
 
   private def ivfPqModelPath = s"$path/ivfpq_model"
   private def ivfPqDataPath = s"$path/codes_by_cluster"
+  /** The model persists as ivf/ + pq/ SUBDIRS — gate on the inner
+    * markers, the model root itself carries no _SUCCESS. */
+  private def ivfPqModelAt =
+    successAt(s"$ivfPqModelPath/ivf") && successAt(s"$ivfPqModelPath/pq")
+  /** The IVF-PQ and LSH models, memoized on their dirs' files as the
+    * IVF serve model is: a search or fold reads no model table while
+    * they are unchanged. */
+  private def ivfPqModel(): IvfPq.Model =
+    memo("ivfpq", Seq("ivf", "pq", "supers").map(d => stamps(s"$ivfPqModelPath/$d")))(
+      IvfPq.load(spark, ivfPqModelPath, "embedding"))
+  private def lshModel(): Lsh.Model =
+    memo("lsh", stamps(lshModelPath))(Lsh.load(spark, lshModelPath))
 
   /** IVF-PQ composite build: persists both model levels plus the
     * cluster-partitioned CODE table — (id, cluster_id, pq_code,
     * metadata), no raw vectors, the ~32× compressed layout that makes
-    * the composite the 100 TB ANN path. */
+    * the composite the 100 TB ANN path. The code table is an index
+    * table beside the log (the swap block): it changes only here and at
+    * [[compact]]'s fold, which encodes the tail's live rows through the
+    * persisted model, and searches read writes since then from the
+    * delta tail ([[searchIvfPq]]). */
   def buildIvfPq(kClusters: Int, chunks: Int, kCodes: Int,
                  seed: Long = 42L): IvfPq.Model = {
+    // read before the rows: a write landing meanwhile is then overlaid
+    // by searches (harmless), never missed
+    val tableSeq = DeltaLog.version(spark, dataPath).seq
     val (encoded, model) = IvfPq.build(snapshot().filter(!col("is_deleted")),
       "embedding", kClusters, chunks, kCodes, seed)
     IvfPq.save(model, ivfPqModelPath)
-    Ivf.writePartitioned(
-      encoded.select(col("id"), col(Ivf.ClusterCol), col(IvfPq.CodeCol),
-        col("metadata")), ivfPqDataPath)
-    clearDir(ivfPqTombPath) // fresh table is built from live rows only
+    swapIndexTable(ivfPqDataPath, encoded.select(ivfPqCols.map(col): _*), tableSeq)
     model
   }
 
   /** IVF-PQ search over the persisted code table: cluster probe =
-    * partition pruning, ADC over codes only. `rerank` > 0 fetches the
-    * shortlist's raw vectors from the snapshot (a point-join on a
-    * fixed-size id set) and re-scores exactly — the standard two-stage
-    * deployment. */
+    * partition pruning, ADC over codes only, merged on read with the
+    * delta tail as every index table is (the swap block). The code rows
+    * are the probed lists minus every id the held tail holds above the
+    * table seq; the tail's live rows that pass the filter are ranked
+    * exactly, as the IVF and HNSW tiers rank theirs — encoding them per
+    * call would cost O(tail · k · dim), an exact distance O(tail · dim).
+    *  - `rerank = 0`: the code rows' ADC top-k and the tail rows' exact
+    *    top-k, merged by (dist, id). A tail row's distance is exact
+    *    while a code row's carries the quantization error, so the one
+    *    ranking mixes both kinds of distance until [[compact]] encodes
+    *    the tail. Hits carry (id, dist).
+    *  - `rerank` > 0 re-scores the ADC top-`rerank` of the code rows
+    *    together with the tail's live rows exactly, fetching their raw
+    *    vectors from the snapshot (a point-join on a small id set) — the
+    *    standard two-stage deployment.
+    * When the log watermark has passed the table seq the answer comes
+    * from the exact path ([[search]]) until the next [[compact]] or
+    * [[buildIvfPq]]. */
   def searchIvfPq(query: Seq[Float], nProbe: Int, k: Int, rerank: Int = 0,
                   metadataFilter: Map[String, String] = Map.empty): DataFrame = {
     // mirror IvfPq.search's guard: this path re-purposes `rerank` as the
     // shortlist size, which would otherwise silently truncate top_k
     require(rerank <= 0 || rerank >= k,
       s"rerank ($rerank) must be 0 (off), < 0 (auto), or >= k ($k)")
-    val model = IvfPq.load(spark, ivfPqModelPath, "embedding")
+    val model = ivfPqModel()
     // nProbe <= 0 = the same scale-aware auto probing as searchIvf —
     // the coarse quantizer is the same IVF geometry, so the measured
     // 10%-of-lists rule transfers
     val np = if (nProbe > 0) nProbe
       else Ivf.scaledNProbe(sessionConfig.nProbe, model.ivf.k,
         sessionConfig.ivfProbeFraction)
-    recoverIndexFold(ivfPqDataPath) // resume a crashed compact-fold swap
-    val table = dropSidecarTombs(
-      spark.read.parquet(ivfPqDataPath), ivfPqTombPath)
     // rerank < 0 = the same scale-aware auto window as searchAdc: the
     // residual-PQ ADC ranking within the probed lists carries the same
     // quantization error the pq_recall_sweep measured at 0/10, so the
     // auto window sizes over the memoized live count — the same
     // scale-rule memo every other auto default uses — instead of
     // pricing a code-table count() (a full file listing on a 100 TB
-    // table) per query. The code table can hold slightly MORE rows
-    // (deletes since the last build sit in the sidecar), but √N-window
-    // sizing is insensitive to that margin.
+    // table) per query.
     val w = if (rerank >= 0) rerank
       else Pq.scaledRerank(k, liveCount(), sessionConfig.pqRerankFactor)
     val pred = if (metadataFilter.isEmpty) None
       else Some(Search.metadataFilter(col("metadata"), metadataFilter))
-    if (w == 0)
-      IvfPq.search(table, model, "id", query, np, k, 0, pred)
-    else {
-      val short = IvfPq.search(table, model, "id", query, np, w, 0, pred)
-        .select("id")
-      Search.knnExact(
-        snapshot().filter(!col("is_deleted")).join(short, "id"),
-        "id", "embedding", query, k)
+    indexView(ivfPqDataPath) match {
+      case None => search(query, k, metadataFilter)
+      case Some((table, over, _)) =>
+        val (codes, tail) = overlay(table, over)
+        if (w == 0) {
+          val adc = IvfPq.search(codes, model, "id", query, np, k, 0, pred)
+            .select("id", "dist")
+          tail.fold(adc)(t => adc.unionByName(
+              Search.knnExact(t, "id", "embedding", query, k, pred).select("id", "dist")))
+            .orderBy(col("dist").asc, col("id").asc).limit(k)
+        } else {
+          val short = IvfPq.search(codes, model, "id", query, np, w, 0, pred)
+            .select("id")
+          Search.knnExact(live(metadataFilter)
+            .join(tail.fold(short)(t => short.unionByName(t.select("id"))), "id"),
+            "id", "embedding", query, k)
+        }
     }
   }
 
@@ -1119,17 +1098,14 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * shape re-published the whole snapshot to flip one flag. The
     * tombstoned rows stay visible in [[snapshot]] with
     * `is_deleted = true` (reference dangling-id tolerance) until
-    * [[compact]] physically drops them. The IVF and HNSW tiers read
-    * the delete from the delta tail; only the IVF-PQ sidecar gets the
-    * ids. No ids, no write: an empty call appends no delta and no
-    * sidecar rows. */
+    * [[compact]] physically drops them. Every tier reads the delete
+    * from the delta tail; no index table is touched. No ids, no write:
+    * an empty call appends no delta. */
   def delete(ids: Seq[Long]): Unit = if (ids.nonEmpty) {
     val hit = snapshot().filter(col("id").isin(ids: _*))
       .withColumn("is_deleted", lit(true))
     graft.core.DeltaLog.append(hit, dataPath,
       graft.core.DeltaLog.nextSeq(spark, dataPath))
-    import spark.implicits._
-    appendIvfPqTombstones(ids.toDF("id"))
   }
 
   /** Bulk [[delete]]: the ids arrive as a one-column DataFrame (any
@@ -1144,15 +1120,8 @@ class VectorStore private (val spark: SparkSession, val path: String,
     val keyed = ids.select(col(ids.columns.head).cast("long").as("__del_id"))
     val hit = snapshot().join(keyed, col("id") === col("__del_id"), "left_semi")
       .withColumn("is_deleted", lit(true))
-    val seq = graft.core.DeltaLog.nextSeq(spark, dataPath)
-    graft.core.DeltaLog.append(hit, dataPath, seq)
-    // sidecar tombstones derive from the delta that actually LANDED
-    // (read back, like ingest's index appends) — a non-deterministic
-    // ids source (sample, unordered limit) evaluated twice could
-    // otherwise tombstone a different id set in the sidecar than in
-    // the delta log
-    appendIvfPqTombstones(spark.read.parquet(
-      graft.core.DeltaLog.deltaPath(dataPath, seq)).select("id"))
+    graft.core.DeltaLog.append(hit, dataPath,
+      graft.core.DeltaLog.nextSeq(spark, dataPath))
   }
 
   /** Compaction: fold the delta tail into the base AND physically drop
@@ -1167,14 +1136,9 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * rollback and [[graft.operators.Crud.snapshotDiff]] audits. */
   def compact(retainGenerations: Int = 0): Unit = {
     // fold the index tables FIRST, while the log still holds the tail
-    // the IVF fold reads and the is_deleted flags the IVF-PQ fold
-    // unions in (the delta compact below drops both) — the layout seq
-    // then already covers what the log folds, and the IVF-PQ sidecar
-    // stays bounded by deletes since the last compact (see the swap
-    // block above)
-    foldIvfLayout()
-    foldIvfPq(snapshot().filter(col("is_deleted"))
-      .select(col("id").cast("long").as("id")))
+    // they read (the delta compact below drops it) — each table seq then
+    // already covers what the log folds
+    foldIndexTables()
     graft.core.DeltaLog.compact(spark, dataPath, "id",
       retainGenerations = retainGenerations,
       transform = m => Crud.compact(m).withColumn("is_deleted", lit(false)),

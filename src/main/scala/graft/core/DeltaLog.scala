@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   *
   *  - `dir/base`   — the compacted snapshot, published through
   *                   [[SnapshotIO]]'s crash-safe rename protocol.
-  *  - `dir/delta/d<seq>` — one parquet dir per flush (seq = the
-  *                   checkpointed streaming batchId), rows carrying a
-  *                   `__tomb` boolean (true = delete this id).
+  *  - `dir/delta/d<seq>` — one parquet dir per flush (a streaming
+  *                   flush's seq is its checkpoint's seq offset plus
+  *                   its batchId), rows carrying a `__tomb` boolean
+  *                   (true = delete this id).
   *  - `dir/_watermark` — highest seq already folded into base; deltas
   *                   at or below it are logically dead.
   *

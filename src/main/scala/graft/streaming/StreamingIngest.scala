@@ -47,10 +47,13 @@ object StreamingIngest {
     * storage.py:198-230). Rows with `tombstoneCol` true are deletions
     * (S5 in-stream). `trigger` defaults to AvailableNow (drain the
     * backlog and stop — the replay shape); pass a processing-time
-    * trigger for continuous ingest. Crash/replay: the checkpoint
-    * replays a batch by rewriting its own delta dir (overwrite by
-    * batchId) — idempotent against every compaction crash point
-    * (DeltaLog scaladoc).
+    * trigger for continuous ingest. Each batch lands as delta
+    * `offset + batchId`, the checkpoint's seq offset fixed at its first
+    * batch ([[batchSeq]]): a first attempt lands above everything the
+    * log already holds, even in a store compacted before the stream
+    * started, and a replay rewrites its own delta dir (overwrite by
+    * seq) — idempotent against every compaction crash point (DeltaLog
+    * scaladoc).
     *
     * Cost note: the default (no threshold) pays NOTHING beyond the
     * append — per-batch I/O is strictly O(batch). A finite
@@ -84,7 +87,8 @@ object StreamingIngest {
           case Some(v) => Crud.upsertVersioned(batch, idCol, v)
           case None => batch.dropDuplicates(idCol)
         }
-        graft.core.DeltaLog.append(batchOne, targetDir, batchId, tombstoneCol)
+        val seq = batchSeq(spark, checkpointDir, targetDir, batchId)
+        graft.core.DeltaLog.append(batchOne, targetDir, seq, tombstoneCol)
         // cadence keyed on the checkpointed batchId so a restart
         // resumes the same compaction rhythm
         val compacted = compactEvery > 0 && (batchId + 1) % compactEvery == 0
@@ -101,7 +105,7 @@ object StreamingIngest {
             // O(batch): count the non-tombstone rows of the delta that
             // just landed (duplicate ids overcount — it's a bound)
             upper += spark.read
-              .parquet(graft.core.DeltaLog.deltaPath(targetDir, batchId))
+              .parquet(graft.core.DeltaLog.deltaPath(targetDir, seq))
               .filter(!org.apache.spark.sql.functions.col(
                 graft.core.DeltaLog.TombCol)).count()
           if (upper >= flushThreshold) {
@@ -115,6 +119,36 @@ object StreamingIngest {
         ()
       }
       .start()
+  }
+
+  /** The delta seq batch `batchId` of the stream checkpointed at
+    * `checkpointDir` lands at: the checkpoint's seq offset plus the
+    * batchId. The offset is fixed once, at the checkpoint's first batch,
+    * as the log's next seq there less that batchId, and persisted beside
+    * the checkpoint (tmp + rename), so every later batch lands above the
+    * log's seq on its first attempt and a replay of a batch writes the
+    * seq its first attempt wrote. An unreadable offset file is fixed
+    * afresh; a replayed batch then lands once more above the log, which
+    * latest-seq-wins resolves to the same rows. */
+  private def batchSeq(spark: SparkSession, checkpointDir: String,
+                       targetDir: String, batchId: Long): Long = {
+    val p = new org.apache.hadoop.fs.Path(checkpointDir, "graft_seq_offset")
+    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stored = if (!f.exists(p)) None else {
+      val in = f.open(p)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLongOption
+      finally in.close()
+    }
+    stored.getOrElse {
+      val offset = graft.core.DeltaLog.nextSeq(spark, targetDir) - batchId
+      val tmp = new org.apache.hadoop.fs.Path(checkpointDir, "graft_seq_offset.tmp")
+      val out = f.create(tmp, true)
+      try out.write(offset.toString.getBytes("UTF-8")) finally out.close()
+      f.delete(p, false)
+      if (!f.rename(tmp, p) && !f.exists(p))
+        throw new java.io.IOException(s"rename $tmp -> $p failed")
+      offset
+    } + batchId
   }
 
   /** Streaming near-duplicate maintenance: keep a cross-batch LSH pair

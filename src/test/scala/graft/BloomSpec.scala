@@ -79,29 +79,19 @@ class BloomSpec extends SparkSpec {
     import s.implicits._
     val corpus = (0L until 500L).map(i => (i, s"k-$i")).toDF("id", "k")
     val blocklist = (0L until 500L by 5L).map(i => s"k-$i").toDF("bk")
-    def jobs: Int = s.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    // statusTracker is listener-backed: settle = no growth for 300ms
-    def settled(): Int = {
-      var last = jobs
-      var stableSince = System.nanoTime()
-      val deadline = System.nanoTime() + 5000000000L
-      while (System.nanoTime() - stableSince < 300000000L && System.nanoTime() < deadline) {
-        Thread.sleep(20)
-        val cur = jobs
-        if (cur != last) { last = cur; stableSince = System.nanoTime() }
-      }
-      last
-    }
-    val base = settled()
-    Bloom.fit(blocklist, col("bk"), expectedKeys = 1 << 12, fpp = 0.01)
-    val fitJobs = settled() - base // AQE may split the fold into >1 job
+    // counted by a listener: the status tracker's job list is trimmed
+    // once the session has retained spark.ui.retainedJobs jobs, so a
+    // difference of its lengths can fall negative mid-suite
+    val fitJobs = jobsOf {
+      Bloom.fit(blocklist, col("bk"), expectedKeys = 1 << 12, fpp = 0.01); ()
+    } // AQE may split the fold into >1 job
     assert(fitJobs >= 1, "fit ran no job?")
-    val before = settled()
     // plan construction: the ONLY action is the internal fit() — an
     // eager sizing count() over either table would add jobs here
-    Bloom.subtractByKey(corpus, col("k"), blocklist, col("bk"),
-      expectedKeys = 1 << 12, fpp = 0.01)
-    val constructionJobs = settled() - before
+    val constructionJobs = jobsOf {
+      Bloom.subtractByKey(corpus, col("k"), blocklist, col("bk"),
+        expectedKeys = 1 << 12, fpp = 0.01); ()
+    }
     assert(constructionJobs == fitJobs,
       s"subtractByKey construction ran $constructionJobs jobs vs $fitJobs for fit alone — extra sizing job?")
   }

@@ -1,31 +1,36 @@
 package graft
 
 import graft.core.DeltaLog
-import graft.operators.{Ivf, Search}
+import graft.operators.{Ivf, IvfPq, Lsh, Search}
 import graft.streaming.StreamingIngest
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
-/** The IVF tier reads the delta tail through merge-on-read: a search
-  * answers from the layout rows of the probed lists, minus every id the
-  * tail holds at a seq above the layout seq, plus the tail's live rows
-  * — or from the exact path once the log has folded deltas the layout
-  * never saw. Every answer is checked bit for bit against that formula
-  * computed here from what is on disk, through two store instances
-  * over one dir. */
+/** The index tables beside the log — the IVF layout, the IVF-PQ code
+  * table and the LSH signature table — are read through merge-on-read:
+  * a search answers from the table's rows minus every id the tail holds
+  * at a seq above the table seq, plus the tail's live rows — or from
+  * the exact path once the log has folded deltas the table never saw.
+  * Every answer of every tier is checked bit for bit against that
+  * formula computed here from what is on disk, through two store
+  * instances over one dir. */
 class IvfTailSpec extends SparkSpec {
 
   private val K = 6
   private val NProbe = 3
+  /** The IVF-PQ rerank window of the two-stage tier. */
+  private val W = 12
   private type Hits = Seq[(Long, Long)] // (id, dist bits)
+  private val Tables = Seq("vectors_by_cluster", "codes_by_cluster", "lsh_signatures")
 
-  /** The layout seq the layout dir records, else the log watermark. */
-  private def layoutSeq(dir: String): Long = {
-    val f = Paths.get(s"$dir/vectors_by_cluster/_layout_seq")
+  /** The table seq a table dir records, else the log watermark. */
+  private def tableSeq(dir: String, table: String): Long = {
+    val f = Paths.get(s"$dir/$table/_layout_seq")
     if (Files.exists(f)) Files.readString(f).trim.toLong
     else DeltaLog.watermark(spark, s"$dir/vectors")
   }
+  private def layoutSeq(dir: String): Long = tableSeq(dir, "vectors_by_cluster")
 
   /** The delta rows above `seq`, the latest per id: its vector and
     * metadata when live, None when a tombstone or an is_deleted row. */
@@ -55,47 +60,92 @@ class IvfTailSpec extends SparkSpec {
   private def hits(df: DataFrame): Hits = df.select("id", "dist").collect().toSeq
     .map(r => (r.getLong(0), java.lang.Double.doubleToLongBits(r.getDouble(1))))
 
-  /** The answer the contract defines: the exact top-k over (probed
-    * layout rows − overlaid ids) ∪ overlaid live rows, or over the live
-    * rows once the log watermark passed the layout seq. */
-  private def oracle(store: VectorStore, q: Array[Float],
-                     filter: Map[String, String]): Hits = {
+  /** Every tier's answer, in the order [[oracle]] gives its own. */
+  private def served(store: VectorStore, q: Array[Float],
+                     filter: Map[String, String] = Map.empty): Seq[(String, Hits)] = Seq(
+    "searchIvf" -> hits(store.searchIvf(q.toSeq, NProbe, K, filter)),
+    "searchIvfPq(rerank = 0)" -> hits(store.searchIvfPq(q.toSeq, NProbe, K, 0, filter)),
+    s"searchIvfPq(rerank = $W)" -> hits(store.searchIvfPq(q.toSeq, NProbe, K, W, filter)),
+    "searchLsh" -> hits(store.searchLsh(q.toSeq, K, 2, filter)))
+
+  /** The answers the contract defines. Per table, the rows are (table
+    * rows − overlaid ids) ∪ overlaid live rows, or the live rows once
+    * the log watermark passed the table seq; then
+    *  - IVF: the exact top-k of the probed part;
+    *  - IVF-PQ, rerank 0: the code rows' ADC top-k and the overlaid
+    *    rows' exact top-k, merged by (dist, id);
+    *  - IVF-PQ, rerank W: the exact top-k over the ADC top-W code rows'
+    *    ids and the overlaid live ids;
+    *  - LSH: the exact top-k over the probed signature rows' ids and
+    *    the overlaid live ids. */
+  private def oracle(store: VectorStore,
+                     filter: Map[String, String]): Array[Float] => Seq[Hits] = {
     val s = spark
     import s.implicits._
     val dir = store.path
-    val seq = layoutSeq(dir)
-    val rows =
-      if (DeltaLog.watermark(s, s"$dir/vectors") > seq)
-        store.snapshot().filter(!col("is_deleted")).select("id", "embedding", "metadata")
-      else {
-        val over = overlaid(dir, seq)
-        val layout = s.read.parquet(s"$dir/vectors_by_cluster")
-          .filter(col(Ivf.ClusterCol).isin(probed(dir, q): _*))
-          .select("id", "embedding", "metadata")
-        val kept = if (over.isEmpty) layout else layout.filter(!col("id").isin(over.keys.toSeq: _*))
-        kept.unionByName(over.toSeq.collect { case (id, Some((v, m))) => (id, v, m) }
-          .toDF("id", "embedding", "metadata"))
-      }
     val pred = if (filter.isEmpty) None
       else Some(Search.metadataFilter(col("metadata"), filter))
-    hits(Search.knnExact(rows, "id", "embedding", q.toSeq, K, pred))
+    val liveRows = store.snapshot().filter(!col("is_deleted"))
+      .select("id", "embedding", "metadata")
+    /** (table rows − overlaid ids, overlaid live rows), None when outrun. */
+    def view(table: String): Option[(DataFrame, DataFrame)] = {
+      val seq = tableSeq(dir, table)
+      if (DeltaLog.watermark(s, s"$dir/vectors") > seq) None
+      else {
+        val over = overlaid(dir, seq)
+        val rows = s.read.parquet(s"$dir/$table")
+        Some((if (over.isEmpty) rows else rows.filter(!col("id").isin(over.keys.toSeq: _*)),
+          over.toSeq.collect { case (id, Some((v, m))) => (id, v, m) }
+            .toDF("id", "embedding", "metadata")))
+      }
+    }
+    val (layout, codes, sigs) =
+      (view("vectors_by_cluster"), view("codes_by_cluster"), view("lsh_signatures"))
+    val pqModel = IvfPq.load(s, s"$dir/ivfpq_model", "embedding")
+    val lshModel = Lsh.load(s, s"$dir/lsh_model")
+    val byDist = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+    q => {
+      def exact(rows: DataFrame): Hits =
+        hits(Search.knnExact(rows, "id", "embedding", q.toSeq, K, pred))
+      def rerank(ids: DataFrame): Hits = exact(liveRows.join(ids, "id"))
+      val ivf = layout.fold(exact(liveRows)) { case (kept, tail) =>
+        exact(kept.filter(col(Ivf.ClusterCol).isin(probed(dir, q): _*))
+          .select("id", "embedding", "metadata").unionByName(tail))
+      }
+      val pq0 = codes.fold(exact(liveRows)) { case (kept, tail) =>
+        (hits(IvfPq.search(kept, pqModel, "id", q.toSeq, NProbe, K, 0, pred)) ++ exact(tail))
+          .sortBy { case (id, bits) => (java.lang.Double.longBitsToDouble(bits), id) }(byDist)
+          .take(K)
+      }
+      val pqW = codes.fold(exact(liveRows)) { case (kept, tail) =>
+        rerank(IvfPq.search(kept, pqModel, "id", q.toSeq, NProbe, W, 0, pred).select("id")
+          .unionByName(tail.select("id")))
+      }
+      val lsh = sigs.fold(exact(liveRows)) { case (kept, tail) =>
+        rerank(kept.filter(Lsh.probeCondition(lshModel, q.toSeq, 2)).select("id")
+          .unionByName(tail.select("id")))
+      }
+      Seq(ivf, pq0, pqW, lsh)
+    }
   }
 
-  /** Every store answers every query as [[oracle]] does, and never with
-    * a dead id or one the filter excludes. */
+  /** Every store answers every query on every tier as [[oracle]] does,
+    * and never with a dead id or one the filter excludes. */
   private def assertServes(stores: Seq[VectorStore], queries: Seq[Array[Float]],
                            filter: Map[String, String] = Map.empty): Unit = {
     val live = stores.head.snapshot().filter(!col("is_deleted"))
       .select("id", "metadata").collect()
       .map(r => r.getLong(0) -> Option(r.getMap[String, String](1)).map(_.toMap)
         .getOrElse(Map.empty[String, String])).toMap
-    for ((store, si) <- stores.zipWithIndex; (q, qi) <- queries.zipWithIndex) {
-      val got = hits(store.searchIvf(q.toSeq, NProbe, K, filter))
-      val want = oracle(store, q, filter)
-      assert(got == want, s"store $si, query $qi: searchIvf $got, contract $want")
-      got.foreach { case (id, _) =>
-        assert(live.get(id).exists(m => filter.forall { case (k, v) => m.get(k).contains(v) }),
-          s"store $si, query $qi: id $id is dead or fails the filter")
+    val contract = oracle(stores.head, filter)
+    for ((q, qi) <- queries.zipWithIndex; want = contract(q);
+         (store, si) <- stores.zipWithIndex) {
+      served(store, q, filter).zip(want).foreach { case ((tier, got), w) =>
+        assert(got == w, s"store $si, query $qi: $tier $got, contract $w")
+        got.foreach { case (id, _) =>
+          assert(live.get(id).exists(m => filter.forall { case (k, v) => m.get(k).contains(v) }),
+            s"store $si, query $qi: $tier served id $id, dead or failing the filter")
+        }
       }
     }
   }
@@ -123,9 +173,27 @@ class IvfTailSpec extends SparkSpec {
       tombstoneCol = Some(DeltaLog.TombCol))
   }
 
+  /** Every index the tables belong to, built over the store's rows. */
+  private def buildAll(store: VectorStore, ivfLists: Int): Unit = {
+    store.buildIvf(ivfLists)
+    store.buildIvfPq(kClusters = 6, chunks = 4, kCodes = 8)
+    store.trainLsh()
+    ()
+  }
+
   private val moved = Array.fill(8)(0.5f)
-  private def top(store: VectorStore, q: Array[Float]): Hits =
-    hits(store.searchIvf(q.toSeq, NProbe, K))
+  private val inserted = Array.fill(8)(0.25f)
+  private val zero = java.lang.Double.doubleToLongBits(0.0)
+  /** `ok` holds for the hits of every tier `tiers` names. An ADC
+    * ranking need not put a code row's own vector first, so checks of
+    * a row the table holds name the exactly ranked tiers. */
+  private def everyTier(store: VectorStore, q: Array[Float],
+                        tiers: String => Boolean = _ => true)(ok: Hits => Boolean,
+                                                              what: String): Unit =
+    served(store, q).filter(t => tiers(t._1)).foreach { case (tier, h) =>
+      assert(ok(h), s"$tier: $what: $h")
+    }
+  private def exactlyRanked(tier: String) = !tier.startsWith("searchIvfPq")
 
   test("searchIvf equals (probed layout rows − overlaid ids) ∪ overlaid live rows, bit for bit") {
     val dir = Files.createTempDirectory("ivftail").toString
@@ -134,34 +202,36 @@ class IvfTailSpec extends SparkSpec {
     val data = corpus(420, 8, seed = 13L)
     a.ingest(rows(data.take(300)))
     a.compact()
-    a.buildIvf(8)
+    buildAll(a, 8)
     val rnd = new scala.util.Random(5L)
     val queries = Seq.fill(4)(Array.fill(8)(rnd.nextFloat()))
-    val zero = java.lang.Double.doubleToLongBits(0.0)
     // (case, what A writes, extra queries, metadata filter, what else
     // must hold). Every row searches through A and then B, so each is
-    // also a case of B serving a layout and a tail A wrote after B's
+    // also a case of B serving a table and a tail A wrote after B's
     // last search.
     val cases = Seq[(String, () => Unit, Seq[Array[Float]], Map[String, String], () => Unit)](
       ("fresh build", () => (), Nil, Map.empty, () => ()),
-      ("ingest after buildIvf", () => { a.ingest(rows(data.slice(300, 340))); () },
+      ("ingest after the builds", () => { a.ingest(rows(data.slice(300, 340))); () },
         Seq(data(310)._2, data(335)._2), Map.empty,
-        () => assert(top(b, data(310)._2).head == ((310L, zero)),
+        () => everyTier(b, data(310)._2)(_.head == ((310L, zero)),
           "a row ingested after the build must be its own top-1")),
       ("VectorStore.delete, a just-ingested id among them",
         () => a.delete(Seq(5L, 12L, 310L)), Seq(data(5)._2, data(310)._2), Map.empty,
-        () => assert(!top(b, data(310)._2).exists(_._1 == 310L))),
+        () => everyTier(b, data(310)._2)(!_.exists(_._1 == 310L), "the deleted id was served")),
       ("a raw upsert that moves a vector", () => upsert(dir, 11L, moved),
         Seq(data(11)._2, moved), Map.empty, { () =>
-          assert(top(b, moved).head == ((11L, zero)), "the upserted vector must be searched")
-          assert(!top(b, data(11)._2).contains((11L, zero)),
+          everyTier(b, moved)(_.head == ((11L, zero)), "the upserted vector must be searched")
+          everyTier(b, data(11)._2)(!_.contains((11L, zero)),
             "the upserted id must not be served at its old vector")
         }),
       ("a raw __tomb row", () => tomb(dir, 10L), Seq(data(10)._2), Map.empty,
-        () => assert(!top(b, data(10)._2).exists(_._1 == 10L), "the tombstoned id was served")),
-      ("compact", () => a.compact(), Seq(data(10)._2, data(11)._2, moved, data(335)._2),
-        Map.empty, () => assert(layoutSeq(dir) == DeltaLog.watermark(spark, s"$dir/vectors"),
-          "compact must advance the layout seq to the folded log")),
+        () => everyTier(b, data(10)._2)(!_.exists(_._1 == 10L), "the tombstoned id was served")),
+      ("a raw insert of a new id", () => upsert(dir, 1000L, inserted), Seq(inserted), Map.empty,
+        () => everyTier(b, inserted)(_.head == ((1000L, zero)), "the inserted row must be its own top-1")),
+      ("compact", () => a.compact(),
+        Seq(data(10)._2, data(11)._2, moved, inserted, data(335)._2), Map.empty,
+        () => Tables.foreach(t => assert(tableSeq(dir, t) == DeltaLog.watermark(spark, s"$dir/vectors"),
+          s"compact must advance the $t seq to the folded log"))),
       ("writes after the compact", { () =>
           a.ingest(rows(data.slice(340, 360))); a.delete(Seq(20L, 345L)); upsert(dir, 21L, moved) },
         Seq(data(350)._2, data(345)._2, moved), Map.empty, () => ()),
@@ -172,6 +242,13 @@ class IvfTailSpec extends SparkSpec {
           a.buildIvf(6); a.ingest(rows(data.slice(360, 380))); a.delete(Seq(41L)) },
         Seq(data(370)._2, data(41)._2), Map.empty,
         () => assert(overlaid(dir, layoutSeq(dir)).keySet == (360L until 380L).toSet + 41L)),
+      ("buildIvfPq and trainLsh over a non-empty tail", { () =>
+          a.buildIvfPq(kClusters = 5, chunks = 4, kCodes = 8); a.trainLsh(bitsPerTable = 6)
+          a.delete(Seq(42L)) },
+        Seq(data(42)._2, data(375)._2), Map.empty, { () =>
+          assert(overlaid(dir, tableSeq(dir, "codes_by_cluster")).keySet == Set(42L))
+          assert(overlaid(dir, tableSeq(dir, "lsh_signatures")).keySet == Set(42L))
+        }),
       ("a hierarchical model", { () =>
           a.buildIvf(12, hierarchical = Some(true)); a.ingest(rows(data.slice(380, 400)))
           upsert(dir, 50L, moved); tomb(dir, 51L) },
@@ -182,8 +259,9 @@ class IvfTailSpec extends SparkSpec {
           .agg(max(col(Ivf.ClusterCol))).head.getInt(0)
         assert(maxCid < lists, s"folded cluster id $maxCid out of range")
       }),
-      ("cross-instance: B serves, A rebuilds flat and writes", { () =>
-          top(b, moved); a.buildIvf(8); a.ingest(rows(data.drop(400))); a.delete(Seq(60L)) },
+      ("cross-instance: B serves, A rebuilds and writes", { () =>
+          served(b, moved); buildAll(a, 8); a.ingest(rows(data.drop(400))); a.delete(Seq(60L))
+          upsert(dir, 1000L, moved) },
         Seq(data(410)._2, moved, data(60)._2), Map.empty, () => ()))
     cases.foreach { case (name, write, extra, filter, check) =>
       withClue(s"$name: ") {
@@ -201,18 +279,19 @@ class IvfTailSpec extends SparkSpec {
     val rnd = new scala.util.Random(9L)
     val queries = Seq.fill(3)(Array.fill(8)(rnd.nextFloat()))
     def exists(p: String) = Files.exists(Paths.get(p))
-    def outrun(dir: String) = DeltaLog.watermark(s, s"$dir/vectors") > layoutSeq(dir)
-    def rederived(store: VectorStore): Unit = {
-      assert(!outrun(store.path), "compact must re-derive the outrun layout")
-      assert(s.read.parquet(s"${store.path}/vectors_by_cluster").select("id")
+    def outrun(dir: String) = Tables.forall(t => DeltaLog.watermark(s, s"$dir/vectors") > tableSeq(dir, t))
+    def rederived(store: VectorStore): Unit = Tables.foreach { t =>
+      assert(DeltaLog.watermark(s, s"${store.path}/vectors") <= tableSeq(store.path, t),
+        s"compact must re-derive the outrun $t")
+      assert(s.read.parquet(s"${store.path}/$t").select("id")
         .as[Long].collect().sorted.toSeq ==
         store.snapshot().filter(!col("is_deleted")).select("id").as[Long].collect().sorted.toSeq,
-        "the re-derived layout must hold exactly the live rows")
+        s"the re-derived $t must hold exactly the live rows")
     }
     def indexed(dir: String): VectorStore = {
       val store = VectorStore.open(s, dir, dim = 8)
       store.ingest(rows(data.take(200)))
-      store.buildIvf(6)
+      buildAll(store, 6)
       store
     }
     // (case, its steps on a fresh store; every step is followed by the
@@ -231,15 +310,15 @@ class IvfTailSpec extends SparkSpec {
           val a = VectorStore.open(s, dir, dim = 8)
           a.ingest(rows(data.slice(220, 230))); a.delete(Seq(6L)) }))),
       ("StreamingIngest's compactEvery", Seq(
-        ("two streamed batches, then buildIvf", { dir =>
+        ("two streamed batches, then the builds", { dir =>
           Seq(data.take(150), data.slice(150, 200)).zipWithIndex.foreach { case (xs, i) =>
             xs.map { case (id, v) => (id, v, s"doc $id", Map("g" -> "big"), "{}", false) }
               .toDF("id", "embedding", "content", "metadata", "metadata_json", "is_deleted")
               .write.parquet(s"$dir/in/f$i")
           }
           stream(dir, compactEvery = 0)
-          VectorStore.open(s, dir, dim = 8).buildIvf(6)
-          assert(!outrun(dir))
+          buildAll(VectorStore.open(s, dir, dim = 8), 6)
+          assert(!Tables.exists(t => DeltaLog.watermark(s, s"$dir/vectors") > tableSeq(dir, t)))
         }),
         ("a streamed batch whose flush compacts the log", { dir =>
           (Seq((5L, moved)) ++ data.slice(200, 210))
@@ -251,31 +330,36 @@ class IvfTailSpec extends SparkSpec {
         }),
         ("compact", { dir =>
           val a = VectorStore.open(s, dir, dim = 8); a.compact(); rederived(a)
-          assert(top(a, moved).head._1 == 5L) }))),
-      ("a layout with no recorded seq", Seq(
-        ("writes, then the seq file is lost", { dir =>
+          everyTier(a, moved, exactlyRanked)(_.head._1 == 5L, "the streamed upsert must be searched")
+        }))),
+      ("tables with no recorded seq", Seq(
+        ("writes, then the seq files are lost", { dir =>
           val a = indexed(dir); a.compact(); a.ingest(rows(data.slice(200, 220)))
           a.delete(Seq(3L, 205L)); upsert(dir, 4L, moved)
-          Files.delete(Paths.get(s"$dir/vectors_by_cluster/_layout_seq"))
+          Tables.foreach(t => Files.delete(Paths.get(s"$dir/$t/_layout_seq")))
         }),
         ("compact", { dir =>
           VectorStore.open(s, dir, dim = 8).compact()
-          assert(exists(s"$dir/vectors_by_cluster/_layout_seq")) }))),
-      ("a leftover ivf_tombstones", Seq(
-        ("a sidecar naming a live id", { dir =>
+          Tables.foreach(t => assert(exists(s"$dir/$t/_layout_seq"))) }))),
+      ("leftover ivf_tombstones and ivfpq_tombstones", Seq(
+        ("sidecars naming a live id", { dir =>
           indexed(dir)
-          Seq(7L, 1000L).toDF("id").write.parquet(s"$dir/ivf_tombstones")
-          assert(top(VectorStore.open(s, dir, dim = 8), data(7)._2).head._1 == 7L,
-            "search must ignore the sidecar")
+          Seq("ivf_tombstones", "ivfpq_tombstones").foreach(d =>
+            Seq(7L, 1000L).toDF("id").write.parquet(s"$dir/$d"))
+          val store = VectorStore.open(s, dir, dim = 8)
+          everyTier(store, data(7)._2, exactlyRanked)(_.head._1 == 7L,
+            "search must ignore the sidecars")
+          assertServes(Seq(store), Seq(data(7)._2))
         }),
         ("an ingest with no next-id marker", { dir =>
           Files.delete(Paths.get(s"$dir/next_id"))
           val first = VectorStore.open(s, dir, dim = 8).ingest(rows(data.slice(200, 202)))
-          assert(first > 1000L, s"the fallback next id $first must max against the sidecar")
+          assert(first > 1000L, s"the fallback next id $first must max against the sidecars")
         }),
         ("compact", { dir =>
           VectorStore.open(s, dir, dim = 8).compact()
-          assert(!exists(s"$dir/ivf_tombstones"), "the fold must remove the sidecar") }))))
+          Seq("ivf_tombstones", "ivfpq_tombstones").foreach(d =>
+            assert(!exists(s"$dir/$d"), s"the fold must remove $d")) }))))
     cases.foreach { case (name, steps) =>
       val dir = Files.createTempDirectory("ivfoutrun").toString
       steps.foreach { case (step, run) =>

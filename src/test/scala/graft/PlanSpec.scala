@@ -46,7 +46,8 @@ class PlanSpec extends SparkSpec {
     val store = graft.VectorStore.open(spark, dir, dim = 8)
     store.ingest(toDF(data).select("embedding"))
     store.buildIvf(4)
-    store.delete(Seq(3L)) // creates the sidecar
+    store.buildIvfPq(kClusters = 4, chunks = 4, kCodes = 4)
+    store.delete(Seq(3L)) // overlaid on both tables from the delta tail
     val plan = store.searchIvf(data.head._2.toSeq, nProbe = 2, k = 5)
       .queryExecution.executedPlan.toString
     // the probe filter must still prune the PARTITIONED scan — pushed
@@ -57,6 +58,18 @@ class PlanSpec extends SparkSpec {
     // a shuffled join of the index table
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
       s"sidecar must join as a broadcast anti-join, plan:\n$plan")
+    // the IVF-PQ code table keeps its pruned, vector-free scan under the
+    // same overlay
+    val pqPlan = store.searchIvfPq(data.head._2.toSeq, nProbe = 2, k = 5)
+      .queryExecution.executedPlan.toString
+    val codeScan = pqPlan.linesIterator
+      .filter(l => l.contains("FileScan") && l.contains("codes_by_cluster")).toSeq
+    assert(codeScan.length == 1, s"expected one code-table scan, plan:\n$pqPlan")
+    assert(codeScan.head.contains("PartitionFilters: [cluster_id"),
+      s"expected partition pruning on cluster_id, plan:\n$pqPlan")
+    assert(codeScan.head.contains("ReadSchema") &&
+      !codeScan.head.substring(codeScan.head.indexOf("ReadSchema")).contains("embedding"),
+      s"the code-table scan must read no vectors, plan:\n$pqPlan")
   }
 
   test("exact kNN plans as TakeOrderedAndProject (no global sort)") {

@@ -148,6 +148,70 @@ class StreamingSpec extends SparkSpec {
     assert(seqs == seqs.distinct)
   }
 
+  test("a fresh checkpoint streaming into a compacted store lands above the log") {
+    // the store's log has a watermark before the stream starts: every
+    // batch must still land above it, reach every tier before and after
+    // compact, and a re-run or a replay of the checkpoint changes nothing
+    val s = spark
+    import s.implicits._
+    val tmp = Files.createTempDirectory("streamcompacted").toString
+    val dir = s"$tmp/store"
+    val store = VectorStore.open(s, dir, dim = 8)
+    val data = corpus(60, 8)
+    store.ingest(data.take(40).map { case (_, v) => Tuple1(v) }.toDF("embedding"))
+    store.compact()
+    store.ingest(data.drop(40).map { case (_, v) => Tuple1(v) }.toDF("embedding"))
+    store.delete(Seq(3L))
+    store.compact()
+    assert(graft.core.DeltaLog.watermark(s, s"$dir/vectors") >= 2L)
+    store.buildIvf(4)
+    store.buildIvfPq(kClusters = 4, chunks = 4, kCodes = 4)
+    store.trainLsh()
+    val streamed = Seq(500L -> Array.fill(8)(0.5f), 501L -> Array.fill(8)(0.25f))
+    streamed.zipWithIndex.foreach { case ((id, v), i) =>
+      Seq((id, v, s"doc $id", Map("g" -> "s"), "{}", false))
+        .toDF("id", "embedding", "content", "metadata", "metadata_json", "is_deleted")
+        .write.parquet(s"$tmp/in/f$i")
+    }
+    val schema = s.read.parquet(s"$tmp/in/f0").schema
+    def drain(): Unit = StreamingIngest.upsertStream(
+      s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(s"$tmp/in/*"),
+      "id", s"$dir/vectors", s"$tmp/ckpt", compactEvery = 0).awaitTermination()
+    def seen(when: String): Unit = withClue(s"$when: ") {
+      assert(store.size() == 61L)
+      streamed.foreach { case (id, v) =>
+        assert(store.get(id).map(_.getAs[String]("content")).contains(s"doc $id"))
+        def self(df: org.apache.spark.sql.DataFrame) = {
+          val r = df.select("id", "dist").head
+          (r.getLong(0), r.getDouble(1))
+        }
+        assert(self(store.searchIvf(v.toSeq, nProbe = 4, k = 3)) == ((id, 0.0)), "searchIvf")
+        assert(self(store.searchIvfPq(v.toSeq, nProbe = 4, k = 3, rerank = 61)) == ((id, 0.0)),
+          "searchIvfPq")
+        assert(self(store.searchLsh(v.toSeq, k = 3)) == ((id, 0.0)), "searchLsh")
+      }
+    }
+    drain()
+    seen("streamed")
+    store.compact()
+    seen("compacted")
+    def state() = (graft.core.DeltaLog.version(s, s"$dir/vectors"),
+      store.snapshot().orderBy("id").collect().toSeq)
+    val before = state()
+    drain()
+    assert(state() == before, "re-running the checkpoint must change nothing")
+    // a replay of the last batch (its commit lost) rewrites its own seq,
+    // which the compaction already folded
+    val commits = new java.io.File(s"$tmp/ckpt/commits").listFiles()
+      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
+    new java.io.File(s"$tmp/ckpt/commits/.${commits.last.getName}.crc").delete()
+    assert(commits.last.delete())
+    drain()
+    assert(state()._2 == before._2, "a replay must leave the rows unchanged")
+    assert(state()._1.live.isEmpty, "a replay must land at or below the watermark")
+    seen("replayed")
+  }
+
   test("stream ingest → threshold flush → IVF rebuild → search sees new rows") {
     // the reference's full write path (HTTP ingest → storage → index
     // insert → threshold save, services/indexing_service.py:77-89) as a

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Facade lifecycle mirroring the reference's store round-trips
   * (test_mmap_vector_store.py): write/read/search/delete/persistence. */
@@ -395,13 +396,15 @@ class VectorStoreSpec extends SparkSpec {
     val data = corpus(60, 16)
     store.ingest(data.take(40).map { case (_, v) => Tuple1(v) }.toDF("embedding"))
     store.trainLsh()
-    // ingest AFTER the build: signatures are appended for the new rows
+    // ingest AFTER the build: searches read the new rows from the tail
     store.ingest(data.drop(40).map { case (_, v) => Tuple1(v) }.toDF("embedding"))
     val newSelf = data(50)._2.toSeq // a post-train row, queried as itself
     val hits = store.searchLsh(newSelf, k = 3).collect()
     assert(hits.nonEmpty && hits.head.getAs[Double]("dist") < 1e-6,
       "a row ingested after trainLsh must be findable without retraining")
-    // and the persisted path is still in play (signature table exists)
+    // the persisted path is still in play: compact signs the tail into
+    // the signature table
+    store.compact()
     assert(s.read.parquet(s"$dir/lsh_signatures").count() == 60L)
   }
 
@@ -426,8 +429,7 @@ class VectorStoreSpec extends SparkSpec {
     val pqHit = store.searchIvfPq(newSelf, nProbe = 4, k = 3, rerank = 60).collect()
     assert(pqHit.head.getAs[Double]("dist") < 1e-6,
       "a row ingested after buildIvfPq must be findable without a rebuild")
-    // delete AFTER the builds: the delta tail drops it from the IVF
-    // tier, the sidecar from the IVF-PQ tier
+    // delete AFTER the builds: the delta tail drops it from both tiers
     val gone = ivfHit.head.getAs[Long]("id")
     store.delete(Seq(gone))
     assert(!store.searchIvf(newSelf, nProbe = 4, k = 5).collect()
@@ -448,6 +450,49 @@ class VectorStoreSpec extends SparkSpec {
     store.delete(Seq.empty)
     assert(graft.core.DeltaLog.deltaSeqs(s, s"$dir/vectors") == seqs)
     assert(!f.exists(new org.apache.hadoop.fs.Path(s"$dir/ivf_tombstones")))
+  }
+
+  test("ingest, delete and deleteIds each write one delta and touch no index table") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("storeonedelta").toString
+    val store = VectorStore.open(s, dir, dim = 8)
+    val data = corpus(60, 8)
+    store.ingest(data.take(40).map { case (_, v) => Tuple1(v) }.toDF("embedding"))
+    store.buildIvf(4)
+    store.buildIvfPq(kClusters = 4, chunks = 4, kCodes = 4)
+    store.trainLsh()
+    store.buildHnsw(m = 8, efConstruction = 50, numPartitions = 2)
+    val root = java.nio.file.Paths.get(dir)
+    /** Every file under the store dir → (length, mtime). */
+    def files(): Map[String, (Long, Long)] = {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
+        root.relativize(p).toString -> (Files.size(p), Files.getLastModifiedTime(p).toMillis)
+      }.toMap finally walk.close()
+    }
+    val marker = Set("next_id", ".next_id.crc")
+    val writes = Seq[(String, () => Unit, Set[String])](
+      ("ingest", () => { store.ingest(data.drop(40).map { case (_, v) => Tuple1(v) }
+        .toDF("embedding")); () }, marker),
+      ("delete", () => store.delete(Seq(3L, 41L)), Set.empty),
+      ("deleteIds", () => store.deleteIds(Seq(4L, 42L).toDF("id")), Set.empty))
+    writes.foreach { case (name, write, alsoChanged) =>
+      withClue(s"$name: ") {
+        val seqs = graft.core.DeltaLog.deltaSeqs(s, s"$dir/vectors")
+        val before = files()
+        Thread.sleep(5) // a rewrite within the same millisecond keeps its mtime
+        write()
+        val after = files()
+        val added = graft.core.DeltaLog.deltaSeqs(s, s"$dir/vectors").diff(seqs)
+        assert(added.length == 1, s"one delta must land, got $added")
+        val delta = graft.core.DeltaLog.deltaPath("vectors", added.head) + "/"
+        val changed = (before.keySet ++ after.keySet).filter(p => before.get(p) != after.get(p))
+        assert(changed.exists(_.startsWith(delta)))
+        assert(changed.forall(p => p.startsWith(delta) || alsoChanged(p)),
+          s"only $delta and $alsoChanged may change: ${changed.toSeq.sorted}")
+      }
+    }
   }
 
   test("cross-instance freshness: B's exact search sees A's ingest and delete") {
@@ -560,7 +605,8 @@ class VectorStoreSpec extends SparkSpec {
     // the IVF tier reads deletes from the delta tail: no sidecar
     assert(!f.exists(new org.apache.hadoop.fs.Path(s"$dir/ivf_tombstones")),
       "a delete must append no IVF sidecar")
-    assert(f.exists(new org.apache.hadoop.fs.Path(s"$dir/ivfpq_tombstones")))
+    assert(!f.exists(new org.apache.hadoop.fs.Path(s"$dir/ivfpq_tombstones")),
+      "a delete must append no IVF-PQ sidecar")
     store.compact()
     // sidecars are folded INTO the tables and cleared
     assert(!f.exists(new org.apache.hadoop.fs.Path(s"$dir/ivf_tombstones")),
@@ -619,14 +665,18 @@ class VectorStoreSpec extends SparkSpec {
     store.trainLsh()
     store.delete(Seq(5L)) // the max id
     store.compact()       // physically dropped: snapshot max shrinks to 4
+    assert(s.read.parquet(s"$dir/lsh_signatures").filter(col("id") === 5L).count() == 0L,
+      "the fold must drop the deleted id from the signature table")
     // simulate a torn/absent high-water marker (legacy store shape)
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     f.delete(new org.apache.hadoop.fs.Path(s"$dir/next_id"), false)
-    val next = store.ingest(data.take(1).map { case (_, v) => Tuple1(v) }
-      .toDF("embedding"))
-    assert(next >= 6L,
-      s"fallback must max against the signature table (id 5 lives there), got $next")
+    val reborn = Array.fill(8)(0.5f)
+    val next = store.ingest(Seq(Tuple1(reborn)).toDF("embedding"))
+    val served = store.searchLsh(reborn.toSeq, k = 6).collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[Double]("dist"))
+    assert(served.count(_._1 == next) == 1 && served.head == ((next, 0.0)),
+      s"the issued id $next must be served once, at its new vector: ${served.toSeq}")
   }
 
   test("buildIvf hierarchical: searches serve, ingest assigns two-level, flat rebuild clears supers") {
