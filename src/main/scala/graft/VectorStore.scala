@@ -7,6 +7,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** Public library facade — the engine's analog of the reference's
   * embedded `MemoryMappingService` (`inference/mmap_vector_store.py:12-177`):
@@ -23,7 +24,8 @@ import org.apache.spark.sql.functions._
   * IVF-PQ and LSH models and each index table's relation and table seq
   * on the files of their dirs.
   *
-  * Executor-side state is the persisted HNSW graph: its shards,
+  * Executor-side state, on the distributed side (a store over the
+  * serve snapshot's budget, below), is the persisted HNSW graph: its shards,
   * reconstructed from the delta-log base and `hnsw_edges`
   * ([[graft.operators.Hnsw.holdShards]]), persisted MEMORY_ONLY and
   * keyed on the file stamps of `hnsw_model` and `hnsw_edges` and on
@@ -41,6 +43,30 @@ import org.apache.spark.sql.functions._
   * (storage.py:198-230) — and [[compact]] folds the tail on the
   * caller's cadence. Pre-delta stores (plain snapshot at the vectors
   * root) are adopted by renames on first read.
+  *
+  * Serve snapshot. While the live store fits [[graft.core.DriverLocal]]
+  * (a no-job estimate: the rows `_basecount` and the delta files'
+  * parquet footers give, times the per-row width at the store's dim,
+  * plus the HNSW edges times the per-edge width), the Spark driver
+  * holds one [[ServeSnapshot]] per store dir, shared by every instance
+  * over it, and these calls answer from it with no Spark job, returning
+  * a local relation of the distributed path's schema and values:
+  * [[search]] (exact and filtered), [[searchIvf]], the persisted-graph
+  * routes of [[searchHnsw]], [[get]], [[size]] and the row lookup of
+  * [[delete]], which still appends its delta. Its key is what is on
+  * disk: the log version ([[graft.core.DeltaLog.version]]) and the
+  * file stamps of the IVF layout, `hnsw_model` and `hnsw_edges`. A new
+  * version that only adds deltas above the held ones, over the same
+  * watermark, base `_SUCCESS` mtime and earlier delta stamps, is
+  * absorbed by reading just those deltas; any other change re-holds it
+  * (the base only when its identity changed), and the layout's
+  * (id, list) pairs and the HNSW shards are re-held when their own key
+  * changes. The hold is lazy: the first read call at a version pays
+  * it, never a write or a build. A store the estimate puts over the
+  * budget releases its snapshot and serves every call distributed, as
+  * [[graft.core.DriverLocal.forcedDistributed]] does; writes, builds,
+  * folds, the pre-filter HNSW rebuild route and the other tiers always
+  * run distributed.
   */
 class VectorStore private (val spark: SparkSession, val path: String,
                            val dim: Int) {
@@ -140,15 +166,19 @@ class VectorStore private (val spark: SparkSession, val path: String,
   /** The index table at `dir` as one relation and its recorded table
     * seq, memoized on the dir's files. */
   private def indexTable(dir: String): (DataFrame, Option[Long]) =
-    memo(s"table $dir", stamps(dir)) {
+    (memo(s"table $dir", stamps(dir))(spark.read.parquet(dir)), recordedSeq(dir))
+
+  /** The table seq recorded in the index table at `dir`, memoized on
+    * the dir's files; reading it reads no table file. */
+  private def recordedSeq(dir: String): Option[Long] =
+    memo(s"seq $dir", stamps(dir)) {
       val seqFile = new org.apache.hadoop.fs.Path(dir, tableSeqFile)
       val f = seqFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val seq = if (!f.exists(seqFile)) None else {
+      if (!f.exists(seqFile)) None else {
         val in = f.open(seqFile)
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLongOption
         finally in.close()
       }
-      (spark.read.parquet(dir), seq)
     }
 
   /** The index table at `dir` read against the log: its rows, the held
@@ -340,12 +370,33 @@ class VectorStore private (val spark: SparkSession, val path: String,
 
   /** O2/O7: exact filtered search over live rows. */
   def search(query: Seq[Float], k: Int,
-             metadataFilter: Map[String, String] = Map.empty): DataFrame = {
-    val live = snapshot().filter(!col("is_deleted"))
-    val pred = if (metadataFilter.isEmpty) None
-      else Some(Search.metadataFilter(col("metadata"), metadataFilter))
-    Search.knnExact(live, "id", "embedding", query, k, pred)
-  }
+             metadataFilter: Map[String, String] = Map.empty): DataFrame =
+    servedFor(query, k) match {
+      case Some(s) => exactFrame(s, query, k, metadataFilter)
+      case None =>
+        val live = snapshot().filter(!col("is_deleted"))
+        val pred = if (metadataFilter.isEmpty) None
+          else Some(Search.metadataFilter(col("metadata"), metadataFilter))
+        Search.knnExact(live, "id", "embedding", query, k, pred)
+    }
+
+  /** [[search]] answered from the serve snapshot `s`. */
+  private def exactFrame(s: ServeSnapshot.Snap, query: Seq[Float], k: Int,
+                         metadataFilter: Map[String, String]): DataFrame =
+    ServeSnapshot.frame(spark, s.exact(query.toArray, k, metadataFilter).map {
+      case (r, d) => r.rows.values(r.i) :+ d }, ServeSnapshot.Schema.add("dist", DoubleType))
+
+  /** The serve snapshot (class scaladoc), when the store fits
+    * [[graft.core.DriverLocal]] and the forcing scope is off. */
+  private def served(): Option[ServeSnapshot.Snap] =
+    ServeSnapshot.at(spark, dataPath, dim,
+      Some(hnswEdgesPath).filter(_ => successAt(hnswEdgesPath)))
+
+  /** [[served]] for a query the snapshot can rank: of the stored dim
+    * and a non-negative k. Any other query takes the distributed path,
+    * which reports it as it always has. */
+  private def servedFor(query: Seq[Float], k: Int): Option[ServeSnapshot.Snap] =
+    if (query.length != dim || k < 0) None else served().filter(_.dim == dim)
 
   /** O7 over the raw-fidelity JSON column: conjunctive equality on JSON
     * paths (int/list/nested values — the payload shapes the string map
@@ -387,6 +438,8 @@ class VectorStore private (val spark: SparkSession, val path: String,
   def searchHnsw(query: Seq[Float], k: Int, ef: Int = 0,
                  metadataFilter: Map[String, String] = Map.empty): DataFrame = {
     lazy val corpus = live(metadataFilter)
+    val snap = servedFor(query, k)
+    lazy val total = snap.fold(liveCount())(_.liveCount)
     val persisted = successAt(hnswModelPath) && successAt(hnswEdgesPath)
     // metadata-filtered searches route by SELECTIVITY when a persisted
     // graph exists: a TIGHT filter keeps the pre-filter rebuild (shard
@@ -403,9 +456,9 @@ class VectorStore private (val spark: SparkSession, val path: String,
     // (persisted && filtered) and for the default-beam scaling of the
     // rebuild route (ef == 0) — a tight-filter/explicit-ef call must
     // not pay a full filtered scan it never uses
-    lazy val filteredN = if (metadataFilter.isEmpty) 0L else corpus.count()
+    lazy val filteredN = if (metadataFilter.isEmpty) 0L
+      else snap.fold(corpus.count())(_.count(metadataFilter))
     val postFilterRoute = metadataFilter.nonEmpty && persisted && {
-      val total = liveCount()
       total > 0L &&
         filteredN.toDouble / total >= sessionConfig.hnswPostFilterMinFraction
     }
@@ -413,15 +466,17 @@ class VectorStore private (val spark: SparkSession, val path: String,
       // persisted-graph serving (the B11 load path): walk the shard
       // graphs held on the executors ([[heldHnsw]]: reconstructed from
       // the edges table [[buildHnsw]] wrote once per build, refresh or
-      // compaction, not once per query). Rows ingested AFTER the build
-      // (id ≥ the build watermark) are served by an EXACT scan of that
-      // tail, merged with the graph results — so post-build ingests
-      // surface immediately with exact (not just graph-approximate)
-      // ranking, ingest() stays O(batch), and the tail bill amortizes
-      // away at the next buildHnsw. Writes since the hold reach the
-      // shards as the shadow of the live delta tail: a delete makes its
-      // id absent (the walk steps over it — the reference's B2
-      // tolerance, hnsw.py:370-373), an upsert replaces its vector.
+      // compaction, not once per query), or on the Spark driver beside
+      // the serve snapshot ([[driverHnsw]]). Rows ingested AFTER the
+      // build (id ≥ the build watermark) are served by an EXACT scan of
+      // that tail, merged with the graph results — so post-build
+      // ingests surface immediately with exact (not just
+      // graph-approximate) ranking, ingest() stays O(batch), and the
+      // tail bill amortizes away at the next buildHnsw. Writes since
+      // the hold reach the shards as the shadow of the live delta tail:
+      // a delete makes its id absent (the walk steps over it — the
+      // reference's B2 tolerance, hnsw.py:370-373), an upsert replaces
+      // its vector.
       val m = hnswModel() // memo — no per-call model-row read
       // the graph was built over the UNFILTERED corpus, so the graph
       // side always walks the unfiltered rows below the watermark; a
@@ -429,25 +484,36 @@ class VectorStore private (val spark: SparkSession, val path: String,
       // post-filters, and its beam widens to cover the fetch window
       val kFetch = if (!postFilterRoute) k
         else math.min(Int.MaxValue.toLong, math.max(k.toLong,
-          math.ceil(2.0 * k * liveCount().toDouble /
+          math.ceil(2.0 * k * total.toDouble /
             math.max(1L, filteredN)).toLong)).toInt
       val eff0 =
         if (ef > 0) ef
-        else Hnsw.scaledEf(sessionConfig.ef, liveCount(), m.parts)
-      val (shards, shadow) = heldHnsw(m)
+        else Hnsw.scaledEf(sessionConfig.ef, total, m.parts)
       val q = query.toArray
+      // one pass over the shards: per shard the graph walk's top kGraph
+      // and the exact scan's top kPost of the rows at or above the
+      // watermark — one job on the executors, none on the driver
+      val (walk, release) = snap match {
+        case Some(s) =>
+          val shards = driverHnsw(s, m)
+          val shadow = s.shadow(m.parts)
+          ((kGraph: Int, beam: Int, kPost: Int) =>
+            Hnsw.searchDriverShards(shards, shadow, q, kGraph, beam, kPost), () => ())
+        case None =>
+          val (shards, shadow) = heldHnsw(m)
+          ((kGraph: Int, beam: Int, kPost: Int) =>
+            Hnsw.searchShards(shards, shadow, q, kGraph, beam, kPost),
+            () => shadow.destroy())
+      }
       try {
         if (!postFilterRoute) {
-          // one job: per shard the graph walk and the exact scan of the
-          // rows at or above the watermark. The two sides hold disjoint
-          // ids, so the merge is the top k of both
-          val (graph, tail) = Hnsw.searchShards(shards, shadow, q, kFetch, eff0, k)
+          // the two sides hold disjoint ids, so the merge is the top k of both
+          val (graph, tail) = walk(kFetch, eff0, k)
           hitsFrame(Hnsw.topK((graph ++ tail).iterator, k))
         } else {
           // only the over-fetch route widens the beam (it must cover the
           // fetch window); the unfiltered path keeps its ef contract
-          def graphRaw(kf: Int) = hitsFrame(Hnsw.searchShards(shards, shadow, q,
-            kf, math.max(eff0, kf), kPost = 0)._1)
+          def graphRaw(kf: Int) = walk(kf, math.max(eff0, kf), 0)._1
           // the 2× global-selectivity margin under-fills k when the
           // filter is CORRELATED against the query's neighborhood
           // (local match fraction ≪ global — the r16 VERDICT #6
@@ -458,30 +524,42 @@ class VectorStore private (val spark: SparkSession, val path: String,
           // check collects ≤ k (id, dist) rows per attempt; the common
           // uncorrelated query fills on the first window.
           val maxKf = math.min(Int.MaxValue.toLong,
-            math.max(kFetch.toLong, liveCount())).toInt
-          def survivors(kf: Int) = graphRaw(kf).join(corpus.select("id"), "id")
-            .orderBy(col("dist").asc, col("id").asc).limit(k).collect()
-            .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+            math.max(kFetch.toLong, total)).toInt
+          val survivors: Int => Seq[(Long, Double)] = snap match {
+            case Some(s) => kf => Hnsw.topK(graphRaw(kf).iterator.filter { case (id, _) =>
+                s.row(id).exists(r => r.rows.live(r.i) && s.matches(metadataFilter)(r.rows, r.i))
+              }, k)
+            case None => kf => hitsFrame(graphRaw(kf)).join(corpus.select("id"), "id")
+              .orderBy(col("dist").asc, col("id").asc).limit(k).collect()
+              .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+          }
           var kf = kFetch
           var rows = survivors(kf)
           while (rows.length < k && kf < maxKf) {
             kf = math.min(maxKf.toLong, 4L * kf).toInt
             rows = survivors(kf)
           }
-          val tailSide = Search.knnExact(corpus.filter(col("id") >= m.watermark),
-              "id", "embedding", query, k)
-            .select("id", "dist")
           // the graph side holds ids below the watermark only, so the
           // two sides are disjoint here too
-          hitsFrame(rows).unionByName(tailSide)
-            .orderBy(col("dist").asc, col("id").asc).limit(k)
+          snap match {
+            case Some(s) =>
+              val tailSide = s.exact(q, k, metadataFilter, _ >= m.watermark)
+                .map { case (r, d) => (r.id, d) }
+              hitsFrame(Hnsw.topK((rows ++ tailSide).iterator, k), nullable = true)
+            case None =>
+              val tailSide = Search.knnExact(corpus.filter(col("id") >= m.watermark),
+                  "id", "embedding", query, k)
+                .select("id", "dist")
+              hitsFrame(rows).unionByName(tailSide)
+                .orderBy(col("dist").asc, col("id").asc).limit(k)
+          }
         }
-      } finally shadow.destroy()
+      } finally release()
     } else {
       val eff =
         if (ef > 0) ef
         else Hnsw.scaledEf(sessionConfig.ef,
-          if (metadataFilter.isEmpty) liveCount() else filteredN,
+          if (metadataFilter.isEmpty) total else filteredN,
           spark.sparkContext.defaultParallelism)
       Hnsw.search(corpus, "id", "embedding", query, k, eff)
         .select("id", "dist")
@@ -489,13 +567,25 @@ class VectorStore private (val spark: SparkSession, val path: String,
   }
 
   /** (id, dist) hits as a local DataFrame. */
-  private def hitsFrame(hits: Seq[(Long, Double)]): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    spark.createDataFrame(
-      java.util.Arrays.asList(hits.map { case (id, d) =>
-        org.apache.spark.sql.Row(id, d) }: _*),
-      StructType(Seq(StructField("id", LongType, nullable = false),
-        StructField("dist", DoubleType, nullable = false))))
+  private def hitsFrame(hits: Seq[(Long, Double)], nullable: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    ServeSnapshot.frame(spark, hits.map { case (id, d) => Seq[Any](id, d) },
+      StructType(Seq(StructField("id", LongType, nullable),
+        StructField("dist", DoubleType, nullable))))
+  }
+
+  /** The persisted graph's shards on the Spark driver, held beside the
+    * serve snapshot `s`: reconstructed as [[Hnsw.holdShards]] does, from
+    * the snapshot's base and the edge table (collected once per edge
+    * files), on the first search after a build, refresh or compaction. */
+  private def driverHnsw(s: ServeSnapshot.Snap, m: HnswModelRow): Array[Hnsw.Shard] = {
+    val edgeKey = stamps(hnswEdgesPath)
+    val edges = ServeSnapshot.part(spark, dataPath, s, "hnsw edges", edgeKey)(
+      ServeSnapshot.edges(spark.read.parquet(hnswEdgesPath)))
+    ServeSnapshot.part(spark, dataPath, s, "hnsw graph", (stamps(hnswModelPath), edgeKey,
+        s.base.watermark, s.base.baseMtime, s.base.stamps)) {
+      Hnsw.driverShards(s.baseLive, edges.iterator, m.parts, m.params, m.watermark)
+    }
   }
 
   /** The persisted graph's shards held on the executors, and the live
@@ -767,14 +857,32 @@ class VectorStore private (val spark: SparkSession, val path: String,
       case Right(hm) => Ivf.probedHier(hm, query, np(hm.k))
       case Left(model) => Ivf.probed(model, query, np(model.k))
     }
-    indexView(ivfDataPath) match {
-      case None => search(query, k, metadataFilter)
-      case Some((layout, over, _)) =>
-        val rows = overlaid(layout.filter(col(Ivf.ClusterCol).isin(probed: _*))
-          .select("id", "embedding", "metadata"), over)(identity)
-        val pred = if (metadataFilter.isEmpty) None
-          else Some(Search.metadataFilter(col("metadata"), metadataFilter))
-        Search.knnExact(rows, "id", "embedding", query, k, pred)
+    servedFor(query, k) match {
+      case Some(s) =>
+        // the table seq and the layout's (id, list) pairs, against the
+        // snapshot's tail: no job once the layout is held
+        recoverIndexFold(ivfDataPath)
+        val seq = recordedSeq(ivfDataPath).getOrElse(s.version.watermark)
+        if (s.version.watermark > seq) exactFrame(s, query, k, metadataFilter)
+        else {
+          val layout = ServeSnapshot.part(spark, dataPath, s, "ivf layout",
+              stamps(ivfDataPath)) {
+            ServeSnapshot.layout(spark, ivfDataPath, Ivf.ClusterCol)(indexTable(ivfDataPath)._1)
+          }
+          ServeSnapshot.frame(spark, s.ivf(query.toArray, k, metadataFilter, probed, layout, seq)
+            .map { case (r, d) => Seq(r.id, r.rows.vec(r.i), r.rows.metadata(r.i), d) },
+            ServeSnapshot.IvfSchema)
+        }
+      case None =>
+        indexView(ivfDataPath) match {
+          case None => search(query, k, metadataFilter)
+          case Some((layout, over, _)) =>
+            val rows = overlaid(layout.filter(col(Ivf.ClusterCol).isin(probed: _*))
+              .select("id", "embedding", "metadata"), over)(identity)
+            val pred = if (metadataFilter.isEmpty) None
+              else Some(Search.metadataFilter(col("metadata"), metadataFilter))
+            Search.knnExact(rows, "id", "embedding", query, k, pred)
+        }
     }
   }
 
@@ -1016,8 +1124,8 @@ class VectorStore private (val spark: SparkSession, val path: String,
   /** Unfiltered live row count: every scale-aware default (hnsw auto
     * beam, bq/pq auto rerank windows) and [[size]] would price one
     * corpus count per call otherwise. */
-  private def liveCount(): Long =
-    memo("live", logVersion)(snapshot().filter(!col("is_deleted")).count())
+  private def liveCount(): Long = served().fold(
+    memo("live", logVersion)(snapshot().filter(!col("is_deleted")).count()))(_.liveCount)
   /** Count for scale rules: memoized for the unfiltered corpus, exact
     * per call under a metadata filter (filtered counts are
     * filter-specific and already bounded by the filtered scan the
@@ -1099,13 +1207,22 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * tombstoned rows stay visible in [[snapshot]] with
     * `is_deleted = true` (reference dangling-id tolerance) until
     * [[compact]] physically drops them. Every tier reads the delete
-    * from the delta tail; no index table is touched. No ids, no write:
-    * an empty call appends no delta. */
+    * from the delta tail; no index table is touched. No present id, no
+    * write: a call none of whose ids the merged view holds appends no
+    * delta. */
   def delete(ids: Seq[Long]): Unit = if (ids.nonEmpty) {
-    val hit = snapshot().filter(col("id").isin(ids: _*))
-      .withColumn("is_deleted", lit(true))
-    graft.core.DeltaLog.append(hit, dataPath,
+    def append(hit: DataFrame): Unit = graft.core.DeltaLog.append(hit, dataPath,
       graft.core.DeltaLog.nextSeq(spark, dataPath))
+    served() match {
+      case Some(s) =>
+        // the rows from the snapshot, one file as from the held tail
+        val hit = s.rowsOf(ids).map(r => r.rows.values(r.i).init :+ true)
+        if (hit.nonEmpty) append(ServeSnapshot.frame(spark, hit, ServeSnapshot.Schema).coalesce(1))
+      case None =>
+        val hit = snapshot().filter(col("id").isin(ids: _*))
+          .withColumn("is_deleted", lit(true)).persist()
+        try { if (hit.count() > 0) append(hit) } finally { hit.unpersist(); () }
+    }
   }
 
   /** Bulk [[delete]]: the ids arrive as a one-column DataFrame (any
@@ -1248,8 +1365,13 @@ class VectorStore private (val spark: SparkSession, val path: String,
     }
 
   /** S2/S4: point lookup and live count. */
-  def get(id: Long): Option[org.apache.spark.sql.Row] =
-    snapshot().filter(col("id") === id && !col("is_deleted")).collect().headOption
+  def get(id: Long): Option[org.apache.spark.sql.Row] = served() match {
+    case Some(s) =>
+      ServeSnapshot.frame(spark, s.row(id).filter(r => r.rows.live(r.i))
+        .map(r => r.rows.values(r.i)).toSeq, ServeSnapshot.Schema).collect().headOption
+    case None =>
+      snapshot().filter(col("id") === id && !col("is_deleted")).collect().headOption
+  }
   def size(): Long = liveCount()
 }
 

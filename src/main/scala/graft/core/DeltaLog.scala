@@ -5,6 +5,7 @@ import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Append-only delta log with merge-on-read — the O(batch) streaming
   * upsert layout. The reference's threshold flush persists the whole
@@ -291,8 +292,11 @@ object DeltaLog {
 
   /** The live deltas (seq above the watermark) as ONE parquet relation,
     * schemas merged, each row tagged with its seq in [[SeqCol]]. */
-  private def scanTail(spark: SparkSession, live: Seq[Delta]): DataFrame =
-    spark.read.option("mergeSchema", "true")
+  private[graft] def scanTail(spark: SparkSession, live: Seq[Delta]): DataFrame =
+    // deltas of one schema read with it, as their footers record it:
+    // no inference job
+    declared(spark, live.map(d => (d.path, d.files)), merged = true)
+      .fold(spark.read.option("mergeSchema", "true"))(spark.read.schema)
       .parquet(live.map(_.path.toString): _*)
       .withColumn(SeqCol,
         regexp_extract(col("_metadata.file_path"), SeqInPath, 1).cast("long"))
@@ -410,11 +414,104 @@ object DeltaLog {
     (log, resolvedTail(spark, dir, idCol, hold, log))
   }
 
+  /** The log version on disk, after adopting a legacy root layout. */
+  private[graft] def logVersion(spark: SparkSession, dir: String): Version = {
+    adoptIfLegacy(spark, dir)
+    version(spark, dir)
+  }
+
   private def sides(spark: SparkSession, dir: String, idCol: String,
                     hold: Boolean): Sides = {
     val (log, t) = tail(spark, dir, idCol, hold)
-    Sides(log, SnapshotIO.read(spark, basePath(dir)), t)
+    Sides(log, readBase(spark, dir), t)
   }
+
+  /** Qualified base dir → the relation last read there and the file
+    * stamps it was read at. */
+  private val bases =
+    scala.collection.mutable.Map.empty[String, (SparkSession, Seq[FileStamp], DataFrame)]
+
+  /** The base as one relation ([[SnapshotIO.read]]), memoized on the
+    * session and the base dir's file stamps: a relation keeps the file
+    * listing and schema it was read with, so a second read at the same
+    * base lists and infers nothing. A republish ([[compact]],
+    * [[SnapshotIO.compactFiles]]) names its part files afresh, which
+    * changes the stamps. An absent base takes the crash-recovery read
+    * and is not memoized. */
+  private[graft] def readBase(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val path = basePath(dir)
+    val stamps = fileStamps(spark, path)
+    if (!stamps.exists(_.name == "_SUCCESS")) SnapshotIO.read(spark, path)
+    else {
+      val key = qualify(spark, path)
+      bases.synchronized {
+        bases.get(key) match {
+          case Some((s, st, df)) if (s eq spark) && st == stamps => Some(df)
+          case _ =>
+            // the schema its publish recorded: no inference job
+            val df = declared(spark, Seq((new Path(path), stamps)), merged = false)
+              .fold(spark.read)(spark.read.schema).parquet(path)
+            bases(key) = (spark, stamps, df)
+            Some(df)
+        }
+      }
+    }
+  }
+
+  /** One parquet part file's footer: its row count and the Spark
+    * schema its writer recorded (None from another writer). Read on the
+    * driver, so it runs no Spark job, and memoized per file stamp. */
+  private def footer(spark: SparkSession, dir: Path,
+                     st: FileStamp): (Long, Option[StructType]) = {
+    val p = new Path(dir, st.name)
+    val key = (qualify(spark, p.toString), st)
+    footers.synchronized(footers.get(key)).getOrElse {
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromPath(p, spark.sparkContext.hadoopConfiguration)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val got = try (reader.getRecordCount, Option(reader.getFooter.getFileMetaData
+          .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(j => DataType.fromJson(j).asInstanceOf[StructType]))
+        finally reader.close()
+      footers.synchronized {
+        if (footers.size >= 4096) footers.clear()
+        footers(key) = got
+      }
+      got
+    }
+  }
+  private val footers =
+    scala.collection.mutable.Map.empty[(String, FileStamp), (Long, Option[StructType])]
+
+  private def parts(files: Seq[FileStamp]) = files.filter(_.name.endsWith(".parquet"))
+
+  /** Rows in the parquet part files `files` of `dir`, from their
+    * footers. */
+  private[graft] def footerRows(spark: SparkSession, dir: Path,
+                                files: Seq[FileStamp]): Long =
+    parts(files).map(footer(spark, dir, _)._1).sum
+
+  /** The schema a read of `dirs` (each with its file stamps) infers,
+    * taken from the Spark schema its writer recorded in a footer: that
+    * of the first part file, the one a read without schema merging
+    * infers from, and the same in every dir when `merged`. None when a
+    * dir holds no part file or a footer records none, or the dirs
+    * differ. */
+  private def declared(spark: SparkSession, dirs: Seq[(Path, Seq[FileStamp])],
+                       merged: Boolean): Option[StructType] = {
+    val firsts = dirs.map { case (d, fs) => parts(fs).headOption.flatMap(footer(spark, d, _)._2) }
+    if (firsts.isEmpty || firsts.exists(_.isEmpty)) None
+    else if (merged && firsts.distinct.length > 1) None
+    else firsts.head
+  }
+
+  /** Rows of the base at `dir`: the count recorded at the last fold
+    * when it is the current one, else the part files' footers. */
+  private[graft] def baseRows(spark: SparkSession, dir: String): Long =
+    baseCount(spark, dir).getOrElse {
+      val p = new Path(basePath(dir))
+      footerRows(spark, p, fileStamps(spark, p.toString))
+    }
 
   private def merged(spark: SparkSession, dir: String, idCol: String,
                      hold: Boolean): Option[DataFrame] = {

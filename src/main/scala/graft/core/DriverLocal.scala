@@ -17,7 +17,10 @@ import java.util.concurrent.atomic.AtomicInteger
   * its distributed side bit for bit (same double arithmetic, the same
   * DECIMAL(38,18) rounding, the same argmax order), and a spec per
   * operator pins that equality, so the side taken never changes an
-  * answer and the oracle match is side-independent.
+  * answer and the oracle match is side-independent. [[graft.VectorStore]]'s
+  * read calls take the same gate for the serve snapshot they answer
+  * from on the driver (the last row below; `IvfTailSpec` and `HnswSpec`
+  * pin its answers to the distributed ones).
   *
   * The gate: a twin takes its local side when [[fits]] accepts an
   * estimate of the driver heap its local side would hold. Each twin
@@ -35,6 +38,15 @@ import java.util.concurrent.atomic.AtomicInteger
   * | `exactQuantilesDiscGrouped` | Σ over pass-1 groups of n_g × (224 + 2 × UTF-8 bytes of g) (measured 218 at 2-byte g) | ≤ 588 674 keys at 2-byte g |
   * | `Classifier.train` | docs × (dim + 1) × 128 (measured 122 per feature entry) | ≤ 1 048 576 entries |
   * | `Bpe` / `ByteBpe.learnMerges` | Σ (224 + 2 × UTF-8 bytes of word) over a probe of ≤ [[Budget]]/224 + 1 rows (measured 216 at 8-byte words) | ≤ 559 240 words of 8 bytes |
+  * | `VectorStore`'s serve snapshot ([[graft.ServeSnapshot]]) | rows × (512 + 8 × dim) + persisted HNSW edges × 80 (retained heap after GC, measured per row 440 + 4 × dim for the columns, 14–19 for the IVF list entry and 16 + 4 × dim for the HNSW node's vector; 80 per edge all-in at M = 16) | ≤ 131 072 rows at dim 64 with no HNSW graph, ≤ 87 381 at dim 128; ≤ 44 384 at dim 64 with an M = 16 graph (~25 edges per row) |
+  *
+  * The snapshot's estimate costs no job either: its rows are the base
+  * count the last fold recorded (`_basecount`, else the base files'
+  * parquet footers) plus the live delta files' footer row counts, and
+  * its edges the footer row counts of `hnsw_edges` — driver-side reads,
+  * memoized per file stamp. Its widths are for rows like `perfbench`'s
+  * (a two-entry metadata map, no content); long content or metadata
+  * strings widen a row beyond them.
   *
   * Input-type routing is the twin's own: PageRank over non-long ids
   * always runs distributed, whatever the estimate.

@@ -96,9 +96,13 @@ object Hnsw {
   /** L2 distance in double precision, summed left to right — the same
     * operation sequence as [[Search.knnExact]]'s kernel, so a graph
     * distance and an exact-scan distance of one pair are equal bits. */
-  private[operators] def l2(a: Array[Float], b: Array[Float]): Double = {
+  private[graft] def l2(a: Array[Float], b: Array[Float]): Double = l2(a, b, 0)
+
+  /** [[l2]] between `a` and the `a.length` floats of `m` from `off`: a
+    * row of a packed matrix. */
+  private[graft] def l2(a: Array[Float], m: Array[Float], off: Int): Double = {
     var s = 0.0; var i = 0
-    while (i < a.length) { val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1 }
+    while (i < a.length) { val d = a(i).toDouble - m(off + i).toDouble; s += d * d; i += 1 }
     math.sqrt(s)
   }
 
@@ -429,6 +433,11 @@ object Hnsw {
   private def shardOf(id: Column, parts: Int): Column =
     pmod(hash(id.cast("long")), lit(parts))
 
+  /** [[shardOf]] of one id, computed on the Spark driver: `hash`'s
+    * murmur3 of a long under its seed 42, then `pmod`. */
+  private[graft] def shardOf(id: Long, parts: Int): Int =
+    Math.floorMod(org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(id, 42), parts)
+
   private def partsOr(spark: SparkSession, numPartitions: Int): Int =
     if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
 
@@ -535,11 +544,41 @@ object Hnsw {
     * per-shard tops of [[Shard.search]], merged on the Spark driver. */
   private[graft] def searchShards(shards: RDD[Shard], shadow: Broadcast[Shadow],
                    query: Array[Float], kGraph: Int, ef: Int,
-                   kPost: Int): (Seq[(Long, Double)], Seq[(Long, Double)]) = {
-    val hits = shards.map { s =>
+                   kPost: Int): (Seq[(Long, Double)], Seq[(Long, Double)]) =
+    merge(shards.map { s =>
       s.search(query, kGraph, ef, kPost, shadow.value.getOrElse(s.pid, Array.empty))
-    }.collect()
+    }.collect(), kGraph, kPost)
+
+  /** [[searchShards]] over shards held on the Spark driver
+    * ([[driverShards]]): no job. */
+  private[graft] def searchDriverShards(shards: Array[Shard], shadow: Shadow,
+                   query: Array[Float], kGraph: Int, ef: Int,
+                   kPost: Int): (Seq[(Long, Double)], Seq[(Long, Double)]) =
+    merge(shards.map(s => s.search(query, kGraph, ef, kPost,
+      shadow.getOrElse(s.pid, Array.empty))), kGraph, kPost)
+
+  private def merge(hits: Array[(Seq[(Long, Double)], Seq[(Long, Double)])], kGraph: Int,
+                    kPost: Int): (Seq[(Long, Double)], Seq[(Long, Double)]) =
     (topK(hits.iterator.flatMap(_._1), kGraph), topK(hits.iterator.flatMap(_._2), kPost))
+
+  /** [[holdShards]] on the Spark driver, from rows and edges already
+    * there: the vectors keyed by [[shardOf]], the edges (partition_id,
+    * src, level, dst) by their partition_id in the order given, and the
+    * same [[reconstruct]] per shard id in [0, numPartitions). */
+  private[graft] def driverShards(vectors: Iterator[(Long, Array[Float])],
+                                  edges: Iterator[(Int, Long, Int, Long)], numPartitions: Int,
+                                  params: Params, watermark: Long): Array[Shard] = {
+    val vecs = Array.fill(numPartitions)(mutable.ArrayBuffer.empty[(Long, Array[Float])])
+    val adj = Array.fill(numPartitions)(mutable.ArrayBuffer.empty[(Long, Int, Long)])
+    vectors.foreach { v => vecs(shardOf(v._1, numPartitions)) += v }
+    edges.foreach { case (pid, src, level, dst) =>
+      if (pid >= 0 && pid < numPartitions) adj(pid) += ((src, level, dst))
+    }
+    Array.tabulate(numPartitions) { pid =>
+      val (below, post) = vecs(pid).partition(_._1 < watermark)
+      new Shard(pid, reconstruct(pid, params, below.iterator, adj(pid).iterator),
+        watermark, post.toArray)
+    }
   }
 
   /** Rebuild one shard's graph from its vectors + persisted adjacency.

@@ -281,6 +281,31 @@ class DeltaLogSpec extends SparkSpec {
     assert(rows(dir) == expected)
   }
 
+  test("a second read at the same base lists and infers nothing; a republish is seen") {
+    val dir = Files.createTempDirectory("dlogbase").toString
+    DeltaLog.append(df((0L until 40L).map(i => i -> s"v$i"): _*), dir, 0L)
+    DeltaLog.compact(spark, dir, "id")
+    def read() = DeltaLog.readMerged(spark, dir, "id")
+    def base() = DeltaLog.readBase(spark, dir).get
+    val first = base()
+    assert(jobsOf(read()) == 0, "a second read at the same base launched a job")
+    assert(base() eq first, "a second read at the same base read it afresh")
+    // republished by a fold and by a file compaction: each read sees it
+    DeltaLog.append(df(0L -> "folded"), dir, 1L)
+    DeltaLog.compact(spark, dir, "id")
+    assert(rows(dir)(0L) == "folded")
+    (1L until 6L).foreach { i =>
+      DeltaLog.append(df(i -> s"f$i"), dir, i + 1)
+      DeltaLog.compact(spark, dir, "id")
+    }
+    val files = new java.io.File(s"$dir/base").listFiles().count(_.getName.endsWith(".parquet"))
+    assert(SnapshotIO.compactFiles(spark, s"$dir/base", targetBytes = 1L << 30) == 1L)
+    assert(files > 1, s"the base had $files files before the file compaction")
+    assert(rows(dir) == (0L until 40L).map(i =>
+      i -> (if (i == 0L) "folded" else if (i < 6L) s"f$i" else s"v$i")).toMap)
+    assert(!(base() eq first), "a read after the republish reused the old base relation")
+  }
+
   test("schema drift: a column only a later delta carries reads null for earlier rows") {
     val s = spark
     import s.implicits._

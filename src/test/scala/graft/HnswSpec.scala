@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.DeltaLog
+import graft.core.{DeltaLog, DriverLocal}
 import graft.operators.{Hnsw, Search}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -303,6 +303,8 @@ class HnswSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
   }
 
+  // every case searches from the driver's snapshot and, under the
+  // forcing scope, from the executors' held graph
   test("held graph: searchHnsw equals searchEdges over the merged live rows, bit for bit") {
     val s = spark
     import s.implicits._
@@ -352,29 +354,43 @@ class HnswSpec extends SparkSpec {
         Seq(data(400)._2), Map.empty),
       ("the post-filter route", () => store.delete(Seq(100L, 401L)), Seq(moved),
         Map("g" -> "big")))
+    def bits(hits: Seq[(Long, Double)]) =
+      hits.map { case (id, d) => (id, java.lang.Double.doubleToLongBits(d)) }
     cases.foreach { case (name, write, extra, filter) =>
       withClue(s"$name: ") {
         write()
         // a narrow beam on the random queries; the case's own queries
         // also with a beam past every shard, which reaches the rows the
         // case wrote wherever they sit in the graph
-        (queries.map((_, 10)) ++ extra.flatMap(q => Seq((q, 10), (q, 200))))
-          .zipWithIndex.foreach { case ((q, ef), i) =>
-            val got = store.searchHnsw(q.toSeq, k = 8, ef, filter).collect()
-              .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        val searches = (queries.map((_, 10)) ++ extra.flatMap(q => Seq((q, 10), (q, 200))))
+        def run() = searches.map { case (q, ef) =>
+          store.searchHnsw(q.toSeq, k = 8, ef, filter).collect()
+            .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        }
+        // the driver's snapshot, then again once it holds this version,
+        // and the executors' held graph under the forcing scope
+        val driver = run()
+        var rerun = Seq.empty[Seq[(Long, Double)]]
+        val jobs = jobsOf { rerun = run() }
+        assert(jobs == 0, s"the snapshot's searches ran $jobs jobs")
+        val executors = DriverLocal.forcedDistributed(run())
+        searches.zip(driver.zip(rerun).zip(executors)).zipWithIndex.foreach {
+          case (((q, ef), ((got, again), held)), i) =>
             val want = persistedOracle(store, q, 8, ef, filter)
-            assert(got.map { case (id, d) => (id, java.lang.Double.doubleToLongBits(d)) } ==
-              want.map { case (id, d) => (id, java.lang.Double.doubleToLongBits(d)) },
-              s"query $i (ef $ef): held $got, merged $want")
-          }
+            assert(bits(got) == bits(want), s"query $i (ef $ef): snapshot $got, merged $want")
+            assert(bits(again) == bits(got), s"query $i (ef $ef): snapshot rerun $again")
+            assert(bits(held) == bits(want), s"query $i (ef $ef): held $held, merged $want")
+        }
         if (name.startsWith("compact"))
           assert(heldHnswGraphs(store).nonEmpty && heldHnswGraphs(store) != heldAt,
             "compact must re-hold the graph")
         if (name.startsWith("an upsert")) {
           // an exhaustive beam reaches the node wherever it now sits
-          val top = store.searchHnsw(moved.toSeq, k = 1, ef = 1000).collect().head
-          assert(top.getLong(0) == 77L && top.getDouble(1) == 0.0,
-            "the upserted vector must be the one searched")
+          def top() = store.searchHnsw(moved.toSeq, k = 1, ef = 1000).collect().head
+          Seq(top(), DriverLocal.forcedDistributed(top())).foreach { t =>
+            assert(t.getLong(0) == 77L && t.getDouble(1) == 0.0,
+              "the upserted vector must be the one searched")
+          }
         }
       }
     }

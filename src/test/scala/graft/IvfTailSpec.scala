@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.DeltaLog
+import graft.core.{DeltaLog, DriverLocal}
 import graft.operators.{Ivf, IvfPq, Lsh, Search}
 import graft.streaming.StreamingIngest
 import org.apache.spark.sql.DataFrame
@@ -14,7 +14,8 @@ import java.nio.file.{Files, Paths}
   * the exact path once the log has folded deltas the table never saw.
   * Every answer of every tier is checked bit for bit against that
   * formula computed here from what is on disk, through two store
-  * instances over one dir. */
+  * instances over one dir. The calls the serve snapshot answers are
+  * checked, case by case, against the distributed path. */
 class IvfTailSpec extends SparkSpec {
 
   private val K = 6
@@ -42,7 +43,8 @@ class IvfTailSpec extends SparkSpec {
       def opt(c: String) = if (df.columns.contains(c)) col(c) else lit(null)
       df.select(col("id"), col(DeltaLog.TombCol), opt("is_deleted"),
         opt("embedding"), opt("metadata")).collect().toSeq.map { r =>
-        val dead = r.getBoolean(1) || (!r.isNullAt(2) && r.getBoolean(2))
+        // a null is_deleted (a raw append without the column) is absent
+        val dead = r.getBoolean(1) || r.isNullAt(2) || r.getBoolean(2)
         (r.getLong(0), d, if (dead) None else Some((r.getSeq[Float](3).toArray,
           Option(r.getMap[String, String](4)).map(_.toMap).getOrElse(Map.empty))))
       }
@@ -173,12 +175,81 @@ class IvfTailSpec extends SparkSpec {
       tombstoneCol = Some(DeltaLog.TombCol))
   }
 
-  /** Every index the tables belong to, built over the store's rows. */
+  /** Every index the tables belong to, built over the store's rows,
+    * and the HNSW graph. */
   private def buildAll(store: VectorStore, ivfLists: Int): Unit = {
     store.buildIvf(ivfLists)
     store.buildIvfPq(kClusters = 6, chunks = 4, kCodes = 8)
     store.trainLsh()
-    ()
+    store.buildHnsw(m = 6, efConstruction = 30, numPartitions = 4)
+  }
+
+  /** A collected row as comparable values: arrays and maps by content,
+    * doubles by their bits. */
+  private def canon(r: org.apache.spark.sql.Row): Seq[Any] = r.toSeq.map {
+    case d: Double => java.lang.Double.doubleToLongBits(d)
+    case xs: scala.collection.Seq[_] => xs.toList
+    case m: scala.collection.Map[_, _] => m.toMap
+    case x => x
+  }
+
+  /** Every call the serve snapshot answers, with its result schema:
+    * exact and filtered search, searchIvf, searchHnsw unfiltered and
+    * through the post-filter route, get and size. */
+  private def snapshotCalls(store: VectorStore, q: Array[Float],
+                            filter: Map[String, String], ids: Seq[Long]): Seq[(String, Any)] = {
+    def df(name: String, d: => DataFrame) = {
+      val f = d
+      name -> ((f.schema, f.collect().toSeq.map(canon)))
+    }
+    Seq(df("search", store.search(q.toSeq, K)),
+      df("filtered search", store.search(q.toSeq, K, filter)),
+      df("searchIvf", store.searchIvf(q.toSeq, NProbe, K, filter)),
+      df("searchHnsw", store.searchHnsw(q.toSeq, K, ef = 10)),
+      df("searchHnsw, auto ef", store.searchHnsw(q.toSeq, K)),
+      df("searchHnsw, post-filter route", store.searchHnsw(q.toSeq, K, 10, Map("g" -> "big"))),
+      "get" -> ids.map(id => store.get(id).map(r => (r.schema, canon(r)))),
+      "size" -> store.size())
+  }
+
+  /** Each store answers every snapshot call as the distributed path
+    * does, and, once its snapshot and memos hold this version, with no
+    * Spark job. */
+  private def assertSnapshotServes(stores: Seq[VectorStore], queries: Seq[Array[Float]],
+                                   filter: Map[String, String], ids: Seq[Long]): Unit =
+    for ((q, qi) <- queries.zipWithIndex) {
+      val want = DriverLocal.forcedDistributed(snapshotCalls(stores.head, q, filter, ids))
+      stores.zipWithIndex.foreach { case (store, si) =>
+        val first = snapshotCalls(store, q, filter, ids)
+        var again = Seq.empty[(String, Any)]
+        val jobs = jobsOf { again = snapshotCalls(store, q, filter, ids) }
+        assert(jobs == 0, s"store $si, query $qi: the held snapshot ran $jobs jobs")
+        first.zip(again).zip(want).foreach { case (((call, got), (_, rerun)), (_, w)) =>
+          assert(got == w, s"store $si, query $qi: $call from the snapshot $got, distributed $w")
+          assert(rerun == got, s"store $si, query $qi: $call changed on a rerun")
+        }
+      }
+    }
+
+  /** `ids` deleted through `store` and, under the forcing scope, through
+    * a copy of its dir made first: both write the same delta. */
+  private def deleteBothWays(store: VectorStore, ids: Seq[Long]): Unit = {
+    val twin = Files.createTempDirectory("ivftwin")
+    val src = Paths.get(store.path)
+    Files.walk(src).forEach { p =>
+      val to = twin.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to)
+      else Files.copy(p, to, java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
+    }
+    store.delete(ids)
+    DriverLocal.forcedDistributed(VectorStore.open(spark, twin.toString, store.dim).delete(ids))
+    def written(dir: String) = {
+      val seq = DeltaLog.deltaSeqs(spark, s"$dir/vectors").last
+      val d = spark.read.parquet(DeltaLog.deltaPath(s"$dir/vectors", seq))
+      (seq, d.schema, d.collect().toSeq.map(canon).sortBy(_.head.asInstanceOf[Long]))
+    }
+    assert(written(store.path) == written(twin.toString),
+      "the snapshot's delete wrote another delta than the distributed one")
   }
 
   private val moved = Array.fill(8)(0.5f)
@@ -216,7 +287,7 @@ class IvfTailSpec extends SparkSpec {
         () => everyTier(b, data(310)._2)(_.head == ((310L, zero)),
           "a row ingested after the build must be its own top-1")),
       ("VectorStore.delete, a just-ingested id among them",
-        () => a.delete(Seq(5L, 12L, 310L)), Seq(data(5)._2, data(310)._2), Map.empty,
+        () => deleteBothWays(a, Seq(5L, 12L, 310L, 99999L)), Seq(data(5)._2, data(310)._2), Map.empty,
         () => everyTier(b, data(310)._2)(!_.exists(_._1 == 310L), "the deleted id was served")),
       ("a raw upsert that moves a vector", () => upsert(dir, 11L, moved),
         Seq(data(11)._2, moved), Map.empty, { () =>
@@ -228,6 +299,11 @@ class IvfTailSpec extends SparkSpec {
         () => everyTier(b, data(10)._2)(!_.exists(_._1 == 10L), "the tombstoned id was served")),
       ("a raw insert of a new id", () => upsert(dir, 1000L, inserted), Seq(inserted), Map.empty,
         () => everyTier(b, inserted)(_.head == ((1000L, zero)), "the inserted row must be its own top-1")),
+      ("a raw append without is_deleted", () => rawNoFlag(dir, 13L, 1001L),
+        Seq(data(13)._2, inserted), Map.empty, { () =>
+          everyTier(b, data(13)._2)(!_.exists(_._1 == 13L), "a null is_deleted row was served")
+          assert(b.get(1001L).isEmpty && b.get(13L).isEmpty, "get served a null is_deleted row")
+        }),
       ("compact", () => a.compact(),
         Seq(data(10)._2, data(11)._2, moved, inserted, data(335)._2), Map.empty,
         () => Tables.foreach(t => assert(tableSeq(dir, t) == DeltaLog.watermark(spark, s"$dir/vectors"),
@@ -259,17 +335,32 @@ class IvfTailSpec extends SparkSpec {
           .agg(max(col(Ivf.ClusterCol))).head.getInt(0)
         assert(maxCid < lists, s"folded cluster id $maxCid out of range")
       }),
+      ("a rebuild of the HNSW graph with another numPartitions",
+        () => a.buildHnsw(m = 5, efConstruction = 25, numPartitions = 3),
+        Seq(data(390)._2), Map.empty, () => ()),
       ("cross-instance: B serves, A rebuilds and writes", { () =>
           served(b, moved); buildAll(a, 8); a.ingest(rows(data.drop(400))); a.delete(Seq(60L))
           upsert(dir, 1000L, moved) },
         Seq(data(410)._2, moved, data(60)._2), Map.empty, () => ()))
+    val probeIds = Seq(0L, 5L, 10L, 11L, 13L, 50L, 310L, 345L, 1000L, 1001L)
     cases.foreach { case (name, write, extra, filter, check) =>
       withClue(s"$name: ") {
         write()
         assertServes(Seq(a, b), queries ++ extra, filter)
+        assertSnapshotServes(Seq(a, b), queries.take(2) ++ extra,
+          if (filter.isEmpty) Map("g" -> "small") else filter, probeIds)
         check()
       }
     }
+  }
+
+  /** A raw append of `ids` at `inserted` with no is_deleted column. */
+  private def rawNoFlag(dir: String, ids: Long*): Unit = {
+    val s = spark
+    import s.implicits._
+    DeltaLog.append(ids.map(i => (i, inserted, "raw", Map("g" -> "big"), "{}"))
+      .toDF("id", "embedding", "content", "metadata", "metadata_json"),
+      s"$dir/vectors", DeltaLog.nextSeq(s, s"$dir/vectors"))
   }
 
   test("a layout the log has outrun is never served; the next compact re-derives it") {

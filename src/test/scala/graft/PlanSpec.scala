@@ -48,8 +48,11 @@ class PlanSpec extends SparkSpec {
     store.buildIvf(4)
     store.buildIvfPq(kClusters = 4, chunks = 4, kCodes = 4)
     store.delete(Seq(3L)) // overlaid on both tables from the delta tail
-    val plan = store.searchIvf(data.head._2.toSeq, nProbe = 2, k = 5)
-      .queryExecution.executedPlan.toString
+    // the distributed plan: a store this small is otherwise answered
+    // from the driver's serve snapshot, a local relation
+    val plan = graft.core.DriverLocal.forcedDistributed(
+      store.searchIvf(data.head._2.toSeq, nProbe = 2, k = 5)
+        .queryExecution.executedPlan.toString)
     // the probe filter must still prune the PARTITIONED scan — pushed
     // through the anti-join's left side, not evaluated above it
     assert(plan.contains("PartitionFilters: [cluster_id"),

@@ -476,6 +476,8 @@ class VectorStoreSpec extends SparkSpec {
       ("ingest", () => { store.ingest(data.drop(40).map { case (_, v) => Tuple1(v) }
         .toDF("embedding")); () }, marker),
       ("delete", () => store.delete(Seq(3L, 41L)), Set.empty),
+      ("delete under the forcing scope",
+        () => graft.core.DriverLocal.forcedDistributed(store.delete(Seq(5L, 43L))), Set.empty),
       ("deleteIds", () => store.deleteIds(Seq(4L, 42L).toDF("id")), Set.empty))
     writes.foreach { case (name, write, alsoChanged) =>
       withClue(s"$name: ") {
@@ -493,6 +495,20 @@ class VectorStoreSpec extends SparkSpec {
           s"only $delta and $alsoChanged may change: ${changed.toSeq.sorted}")
       }
     }
+  }
+
+  test("a delete of ids none of which is present appends no delta") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("storeabsent").toString
+    val store = VectorStore.open(s, dir, dim = 8)
+    store.ingest(corpus(20, 8).map { case (_, v) => Tuple1(v) }.toDF("embedding"))
+    store.delete(Seq(3L))
+    val seqs = graft.core.DeltaLog.deltaSeqs(s, s"$dir/vectors")
+    store.delete(Seq(1000L, 1001L))
+    graft.core.DriverLocal.forcedDistributed(store.delete(Seq(1000L)))
+    assert(graft.core.DeltaLog.deltaSeqs(s, s"$dir/vectors") == seqs)
+    assert(store.size() == 19L)
   }
 
   test("cross-instance freshness: B's exact search sees A's ingest and delete") {
@@ -564,10 +580,14 @@ class VectorStoreSpec extends SparkSpec {
       ("HNSW held graph", { (a, b) =>
           a.buildHnsw(m = 8, efConstruction = 50, numPartitions = 4)
           bTop = ids(hnsw(b)).head
+          // the executors' graph is held only on the distributed side
+          graft.core.DriverLocal.forcedDistributed(hnsw(b))
           bHeld = heldHnswGraphs(b) },
         { a => a.delete(Seq(bTop)); a.compact() },
         { (_, b) =>
           assert(!ids(hnsw(b)).contains(bTop), "B returned the id A deleted")
+          assert(!ids(graft.core.DriverLocal.forcedDistributed(hnsw(b))).contains(bTop),
+            "B's executors returned the id A deleted")
           assert(heldHnswGraphs(b).nonEmpty && heldHnswGraphs(b) != bHeld,
             "B kept the graph held before A's compaction")
         }),
@@ -921,6 +941,11 @@ class VectorStoreSpec extends SparkSpec {
 
   test("held HNSW graph: one per store through its lifecycle, no edge reads " +
       "while held, recomputed when its blocks are dropped") {
+    // the executors hold the graph on the distributed side only
+    graft.core.DriverLocal.forcedDistributed(heldGraphLifecycle())
+  }
+
+  private def heldGraphLifecycle(): Unit = {
     val s = spark
     import s.implicits._
     val dir = Files.createTempDirectory("storehnswheld").toString
