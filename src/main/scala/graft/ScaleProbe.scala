@@ -9,19 +9,22 @@ import org.apache.spark.sql.functions._
   * core operators — evidence for the 100x-scale-up claims (run manually;
   * not part of the driver contract).
   *
-  * args: [n] [group] — group ∈ {all, vectors, text} selects the probe
-  * family ("text" = the dedup/text/sketch tier, runnable alone at 10M+
-  * rows without paying for the vector-index builds; default all). */
+  * args: [n] [group] — group ∈ {all, vectors, text, layout, stream,
+  * store} selects the probe family ("text" = the dedup/text/sketch
+  * tier, runnable alone at 10M+ rows without paying for the
+  * vector-index builds; "store" = the `VectorStore` facade's
+  * steady-state calls; default all). */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val group = args.lift(1).getOrElse("all")
-    require(Set("all", "vectors", "text", "layout", "stream")(group),
+    require(Set("all", "vectors", "text", "layout", "stream", "store")(group),
       s"unknown group $group")
     val vectors = group == "all" || group == "vectors"
     val text = group == "all" || group == "text"
     val layout = group == "all" || group == "layout"
     val stream = group == "all" || group == "stream"
+    val storeCalls = group == "all" || group == "store"
     // SPARK_GRAFT_CPUS mirrors Bench's knob (default 16 keeps published
     // probe rows comparable; raise for the 100M-tier runs)
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(16)
@@ -44,8 +47,13 @@ object ScaleProbe {
     val shuffleWriteBytes = new java.util.concurrent.atomic.AtomicLong(0)
     val outputBytes = new java.util.concurrent.atomic.AtomicLong(0)
     val inputBytes = new java.util.concurrent.atomic.AtomicLong(0)
+    val jobsStarted = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobsStarted.incrementAndGet(); ()
+        }
         override def onTaskEnd(
             te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
           val m = te.taskMetrics
@@ -1901,6 +1909,64 @@ object ScaleProbe {
         Dedup.hammingNearDupPairsSharded(dhashCorpus, "id", "h",
           maxDist = 3, hashBits = 56, shards = 4,
           spillDir = s"/tmp/graft_hshard_$n", nBlocks = 8).count()
+      }
+    }
+    if (storeCalls) {
+      // The VectorStore facade's steady-state calls on a store of n rows
+      // × 64 dims with 1 000 rows ingested and 20 deleted since its last
+      // compaction — the mix of a serving round. At 1M rows the store is
+      // far over the serve snapshot's DriverLocal budget, so every call
+      // takes the distributed path; the rows give each call's median
+      // wall and its Spark jobs. The graph tier is built only up to
+      // 200 000 rows (the build is the cost there, not the search).
+      val sdir = s"/tmp/graft_store_$n"
+      val p = java.nio.file.Paths.get(sdir)
+      if (java.nio.file.Files.exists(p)) {
+        val walk = java.nio.file.Files.walk(p)
+        try walk.sorted(java.util.Comparator.reverseOrder())
+          .forEach(f => java.nio.file.Files.delete(f))
+        finally walk.close()
+      }
+      def vecs(from: Long, m: Long) = spark.range(from, from + m).select(
+        transform(sequence(lit(0), lit(63)),
+          i => (pmod(xxhash64(col("id") * 64 + i), lit(10000)) / 10000.0).cast("float"))
+          .as("embedding"),
+        map(lit("label"), pmod(col("id"), lit(10)).cast("string")).as("metadata"))
+      val store = VectorStore.open(spark, sdir, 64)
+      val graph = n <= 200000L
+      t("store_ingest") { store.ingest(vecs(0L, n)); n }
+      t("store_compact") { store.compact(); n }
+      t("store_build_ivf") { store.buildIvf(math.sqrt(n.toDouble).round.toInt); n }
+      if (graph) t("store_build_hnsw") { store.buildHnsw(); n }
+      t("store_ingest_1000") { store.ingest(vecs(n, 1000L)); 1000L }
+      t("store_delete_20") { store.delete((0L until 20L).map(_ * 997L)); 20L }
+      val q = vecs(n + 7L, 1L).head.getSeq[Float](0).toSeq
+      val reps = 5
+      // (call, what it runs); a delete takes a fresh id each rep and
+      // changes the log version, so each call's first rep after it
+      // pays that version's reads
+      val calls = Seq[(String, Int => Long)](
+        ("exact", _ => store.search(q, 10).collect().length.toLong),
+        ("filtered", _ => store.search(q, 10, Map("label" -> "3")).collect().length.toLong),
+        ("ivf", _ => store.searchIvf(q, 0, 10).collect().length.toLong),
+        ("get", r => store.get(n + r.toLong).size.toLong),
+        ("size", _ => store.size()),
+        ("delete", r => { store.delete(Seq(20000L + r)); 1L })) ++
+        (if (graph) Seq[(String, Int => Long)](("hnsw", _ => store.searchHnsw(q, 10).collect().length.toLong))
+         else Nil)
+      calls.foreach { case (name, call) =>
+        val runs = (0 until reps).map { r =>
+          val j0 = jobsStarted.get()
+          val t0 = System.nanoTime()
+          call(r)
+          val dt = (System.nanoTime() - t0) / 1e9
+          Thread.sleep(300) // listener events drain asynchronously
+          (dt, jobsStarted.get() - j0)
+        }
+        val secs = runs.map(_._1).sorted
+        println(f"STORE n=$n%-9d $name%-9s p50=${secs(reps / 2)}%.3f s " +
+          f"min=${secs.head}%.3f s jobs/call=${runs.map(_._2).sum.toDouble / reps}%.1f " +
+          s"jobs=${runs.map(_._2).mkString(",")}")
       }
     }
     spark.stop()

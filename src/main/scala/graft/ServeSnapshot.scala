@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.hadoop.fs.Path
 import scala.collection.mutable
 
 /** A store's live rows held on the Spark driver: the serve snapshot
@@ -36,15 +37,41 @@ private[graft] object ServeSnapshot {
   val IvfSchema: StructType = StructType(Schema.fields.filter(f =>
     Set("id", "embedding", "metadata")(f.name))).add("dist", DoubleType)
 
-  /** Driver heap of the snapshot per row at dim `d` (the [[DriverLocal]]
-    * table): its columns (measured 440 + 4·d B with a two-entry
-    * metadata map and a short `metadata_json`), its IVF list entry
-    * (measured 14–19 B) and its HNSW node's vector copy (16 + 4·d B). */
-  def rowBytes(dim: Int): Long = 512L + 8L * dim
-  /** Driver heap per persisted HNSW edge: the collected edge table and
-    * the reconstructed adjacency with its per-node structures (measured
-    * 80 B all-in, node vectors included, at M = 16). */
-  val EdgeBytes: Long = 80L
+  /** The snapshot's driver heap at the peak of its hold, per row at
+    * dim `d` (the [[DriverLocal]] table): the columns, the packed vector
+    * shipped and held (measured 1 609 B at dim 64 and 2 622 B at dim
+    * 128 with a two-entry metadata map and 25 string bytes, which the
+    * constants below price apart), and the IVF list entry (13–23 B). */
+  def rowBytes(dim: Int): Long = 64L + 16L * dim
+  /** Peak driver heap per metadata map entry (measured 225 B). */
+  val EntryBytes: Long = 256L
+  /** Peak driver heap per unencoded UTF-8 byte of a string column
+    * (`content`, `metadata_json`, the metadata keys and values):
+    * measured 4.1 B for ASCII, 5.0 B for text held as UTF-16. */
+  val ByteBytes: Long = 6L
+  /** Peak driver heap per persisted HNSW edge: the collected edge table
+    * and the reconstructed shards, node vectors included (measured
+    * 151 B at M = 16). */
+  val EdgeBytes: Long = 160L
+  private val StringCols = Seq("content", "metadata_json", "metadata")
+
+  /** The driver heap a snapshot of the store at `dir` at `v` holds at
+    * its peak, with the HNSW graph whose edges are at `edgesDir`: rows
+    * (the base and live delta files' row counts, so an id the tail
+    * shadows counts twice), metadata entries and the string columns'
+    * unencoded UTF-8 bytes, all from parquet footers — no job.
+    * `Long.MaxValue` when a footer records no size statistics for a
+    * string column. */
+  def estimate(spark: SparkSession, dir: String, v: DeltaLog.Version, dim: Int,
+               edgesDir: Option[String]): Long = {
+    def at(d: String) = DeltaLog.footers(spark, new Path(d), DeltaLog.fileStamps(spark, d))
+    val files = at(s"$dir/base") ++ v.live.flatMap(d => DeltaLog.footers(spark, d.path, d.files))
+    val strings = files.flatMap(f => StringCols.map(c => f.bytes.getOrElse(c, Some(0L))))
+    if (strings.exists(_.isEmpty)) Long.MaxValue
+    else files.map(_.rows).sum * rowBytes(dim) +
+      files.map(_.values.getOrElse("metadata", 0L)).sum * EntryBytes +
+      strings.flatten.sum * ByteBytes + edgesDir.fold(0L)(at(_).map(_.rows).sum) * EdgeBytes
+  }
 
   /** Rows packed into columns, as one partition ships them and the
     * driver holds them. `deleted` is 0 for false, 1 for true and 2 for
@@ -246,8 +273,12 @@ private[graft] object ServeSnapshot {
     * snapshot cannot serve (over budget, empty, or a row it cannot
     * carry), so a call at that version holds nothing. The held
     * snapshots of all dirs together stay within the one budget: a hold
-    * releases other dirs' snapshots until it fits. */
+    * releases other dirs' snapshots until it fits. Guarded by its own
+    * lock, which no Spark job runs under. */
   private val held = mutable.Map.empty[String, Either[DeltaLog.Version, Held]]
+  /** Qualified vectors dir → the lock its holds and absorbs run under,
+    * so a dir's collect jobs hold up only calls on that dir. */
+  private val holding = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   /** The snapshot of the store at `dir` at its current log version, or
     * None when the store does not fit [[DriverLocal]] (or the forcing
@@ -259,51 +290,49 @@ private[graft] object ServeSnapshot {
     else {
       val key = DeltaLog.qualify(spark, dir)
       val v = DeltaLog.logVersion(spark, dir)
-      held.synchronized {
-        held.get(key) match {
-          case Some(Right(h)) if h.snap.version == v => Some(h.snap)
-          case Some(Left(over)) if over == v => None
-          case prior =>
-            val old = prior.flatMap(_.toOption)
-            val absorb = old.filter(h => absorbable(h.snap.version, v))
-            val newRows = absorb.fold(DeltaLog.baseRows(spark, dir) + deltaRows(spark, v.live))(
-              h => h.snap.base.rows.n + h.snap.tail.size + deltaRows(spark, v.live.drop(h.snap.version.live.length)))
-            val edges = edgesDir.fold(0L) { e =>
-              val p = new org.apache.hadoop.fs.Path(e)
-              DeltaLog.footerRows(spark, p, DeltaLog.fileStamps(spark, e))
-            }
-            val bytes = newRows * rowBytes(dim) + edges * EdgeBytes
-            if (!DriverLocal.fits(bytes)) {
-              held(key) = Left(v)
-              None
-            } else {
-              val others = held.collect { case (k, Right(h)) if k != key => (k, h.bytes) }
-              others.foldLeft(others.values.sum) { case (total, (k, b)) =>
-                if (DriverLocal.fits(total + bytes)) total else { held.remove(k); total - b }
-              }
-              val snap = absorb match {
-                case Some(h) => absorbInto(spark, h.snap, v, dim)
-                case None => holdAt(spark, dir, v, dim, old.map(_.snap.base))
-              }
-              if (!snap.exists(s => s.base.servable && servableTail(s))) {
-                held(key) = Left(v) // nothing to hold at v, or a row it cannot carry
-                None
-              } else {
-                // parts keyed on the base (the HNSW graph) go with it;
-                // the rest stay until their own key changes
-                val parts = old.fold(mutable.Map.empty[String, (Any, Any)])(_.parts)
-                held(key) = Right(new Held(snap.get, bytes, parts))
-                snap
-              }
-            }
-        }
+      def current: Option[Option[Snap]] = held.synchronized(held.get(key)) match {
+        case Some(Right(h)) if h.snap.version == v => Some(Some(h.snap))
+        case Some(Left(over)) if over == v => Some(None)
+        case _ => None
       }
+      current.getOrElse(holding.computeIfAbsent(key, _ => new AnyRef).synchronized {
+        current.getOrElse(hold(spark, dir, key, v, dim, edgesDir))
+      })
     }
 
-  private def servableTail(s: Snap): Boolean = s.tail.valuesIterator.forall(_.rows.servable)
+  /** Holds the snapshot of `dir` at `v`: absorbs the deltas above the
+    * held version when only those were added, else reads it afresh. */
+  private def hold(spark: SparkSession, dir: String, key: String, v: DeltaLog.Version,
+                   dim: Int, edgesDir: Option[String]): Option[Snap] = {
+    val old = held.synchronized(held.get(key)).flatMap(_.toOption)
+    val bytes = estimate(spark, dir, v, dim, edgesDir)
+    def refuse(): None.type = { held.synchronized(held(key) = Left(v)); None }
+    if (!DriverLocal.fits(bytes)) refuse()
+    else {
+      held.synchronized {
+        held.remove(key)
+        val others = held.collect { case (k, Right(h)) => (k, h.bytes) }
+        others.foldLeft(others.values.sum) { case (total, (k, b)) =>
+          if (DriverLocal.fits(total + bytes)) total else { held.remove(k); total - b }
+        }
+      }
+      val snap = old.filter(h => absorbable(h.snap.version, v)) match {
+        case Some(h) => absorbInto(spark, h.snap, v, dim)
+        case None => holdAt(spark, dir, v, dim, old.map(_.snap.base))
+      }
+      if (!snap.exists(s => s.base.servable && servableTail(s)))
+        refuse() // nothing to hold at v, or a row it cannot carry
+      else {
+        // parts keyed on the base (the HNSW graph) go with it; the rest
+        // stay until their own key changes
+        val parts = old.fold(mutable.Map.empty[String, (Any, Any)])(_.parts)
+        held.synchronized(held(key) = Right(new Held(snap.get, bytes, parts)))
+        snap
+      }
+    }
+  }
 
-  private def deltaRows(spark: SparkSession, ds: Seq[DeltaLog.Delta]): Long =
-    ds.map(d => DeltaLog.footerRows(spark, d.path, d.files)).sum
+  private def servableTail(s: Snap): Boolean = s.tail.valuesIterator.forall(_.rows.servable)
 
   /** Whether `to` only adds deltas above what `from` holds, over the
     * same base and the same earlier deltas. */
@@ -369,21 +398,21 @@ private[graft] object ServeSnapshot {
 
   /** (id, list) of the IVF layout at `dir`, grouped by list: each list
     * dir's part files read on the Spark driver, `id` alone, so no job
-    * lists or reads the table. `read` gives the table as one relation
-    * for a layout not partitioned by `clusterCol`. */
-  def layout(spark: SparkSession, dir: String, clusterCol: String)(
-      read: => DataFrame): Map[Int, Array[Long]] = {
-    import org.apache.hadoop.fs.Path
+    * lists or reads the table. None when `dir` holds a dir that is not
+    * a `clusterCol=` list, which only the distributed read can take. */
+  def layout(spark: SparkSession, dir: String, clusterCol: String): Option[Map[Int, Array[Long]]] = {
     val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
     conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
       "message spark_schema { optional int64 id; }")
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
-    val lists = fs.listStatus(root).toSeq.filter(_.isDirectory).map { st =>
-      (st.getPath, st.getPath.getName.stripPrefix(s"$clusterCol=").toIntOption)
-    }
-    if (lists.isEmpty || lists.exists(_._2.isEmpty)) layoutOf(read, clusterCol)
-    else lists.map { case (p, c) =>
+    val lists = fs.listStatus(root).toSeq
+      .filter(st => st.isDirectory && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(st => (st.getPath, Some(st.getPath.getName).filter(_.startsWith(s"$clusterCol="))
+        .flatMap(_.stripPrefix(s"$clusterCol=").toIntOption)))
+    if (lists.exists(_._2.isEmpty)) None
+    else Some(lists.map { case (p, c) =>
       val ids = mutable.ArrayBuilder.make[Long]
       fs.listStatus(p).map(_.getPath).filter(_.getName.endsWith(".parquet")).foreach { f =>
         val reader = org.apache.parquet.hadoop.ParquetReader
@@ -395,19 +424,8 @@ private[graft] object ServeSnapshot {
         } finally reader.close()
       }
       c.get -> ids.result()
-    }.toMap
+    }.toMap)
   }
-
-  private def layoutOf(table: DataFrame, clusterCol: String): Map[Int, Array[Long]] =
-    table.select(col("id").cast("long"), col(clusterCol).cast("int")).queryExecution.toRdd
-      .mapPartitions { it =>
-        val ids = mutable.ArrayBuilder.make[Long]
-        val cs = mutable.ArrayBuilder.make[Int]
-        it.foreach { r => ids += r.getLong(0); cs += r.getInt(1) }
-        Iterator((ids.result(), cs.result()))
-      }.collect()
-      .flatMap { case (ids, cs) => ids.indices.map(i => (cs(i), ids(i))) }
-      .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
 
   /** A persisted HNSW edge table as collected rows (partition_id, src,
     * level, dst), in scan order. */

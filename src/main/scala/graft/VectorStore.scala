@@ -45,12 +45,13 @@ import org.apache.spark.sql.types.DoubleType
   * root) are adopted by renames on first read.
   *
   * Serve snapshot. While the live store fits [[graft.core.DriverLocal]]
-  * (a no-job estimate: the rows `_basecount` and the delta files'
-  * parquet footers give, times the per-row width at the store's dim,
-  * plus the HNSW edges times the per-edge width), the Spark driver
-  * holds one [[ServeSnapshot]] per store dir, shared by every instance
-  * over it, and these calls answer from it with no Spark job, returning
-  * a local relation of the distributed path's schema and values:
+  * (a no-job estimate from the base and delta files' parquet footers:
+  * rows at the per-row width of the store's dim, metadata entries and
+  * string bytes at theirs, plus the HNSW edges at the per-edge width),
+  * the Spark driver holds one [[ServeSnapshot]] per store dir, shared
+  * by every instance over it, and these calls answer from it with no
+  * Spark job, returning a local relation of the distributed path's
+  * schema and values:
   * [[search]] (exact and filtered), [[searchIvf]], the persisted-graph
   * routes of [[searchHnsw]], [[get]], [[size]] and the row lookup of
   * [[delete]], which still appends its delta. Its key is what is on
@@ -62,11 +63,12 @@ import org.apache.spark.sql.types.DoubleType
   * (the base only when its identity changed), and the layout's
   * (id, list) pairs and the HNSW shards are re-held when their own key
   * changes. The hold is lazy: the first read call at a version pays
-  * it, never a write or a build. A store the estimate puts over the
-  * budget releases its snapshot and serves every call distributed, as
-  * [[graft.core.DriverLocal.forcedDistributed]] does; writes, builds,
-  * folds, the pre-filter HNSW rebuild route and the other tiers always
-  * run distributed.
+  * it, never a write or a build. The snapshot is released when the
+  * estimate puts its store over the budget, or when another store's
+  * hold needs the room; a store over the budget serves every call
+  * distributed, as [[graft.core.DriverLocal.forcedDistributed]] does;
+  * writes, builds, folds, the pre-filter HNSW rebuild route and the
+  * other tiers always run distributed.
   */
 class VectorStore private (val spark: SparkSession, val path: String,
                            val dim: Int) {
@@ -857,32 +859,29 @@ class VectorStore private (val spark: SparkSession, val path: String,
       case Right(hm) => Ivf.probedHier(hm, query, np(hm.k))
       case Left(model) => Ivf.probed(model, query, np(model.k))
     }
-    servedFor(query, k) match {
-      case Some(s) =>
-        // the table seq and the layout's (id, list) pairs, against the
-        // snapshot's tail: no job once the layout is held
-        recoverIndexFold(ivfDataPath)
-        val seq = recordedSeq(ivfDataPath).getOrElse(s.version.watermark)
-        if (s.version.watermark > seq) exactFrame(s, query, k, metadataFilter)
-        else {
-          val layout = ServeSnapshot.part(spark, dataPath, s, "ivf layout",
-              stamps(ivfDataPath)) {
-            ServeSnapshot.layout(spark, ivfDataPath, Ivf.ClusterCol)(indexTable(ivfDataPath)._1)
-          }
-          ServeSnapshot.frame(spark, s.ivf(query.toArray, k, metadataFilter, probed, layout, seq)
-            .map { case (r, d) => Seq(r.id, r.rows.vec(r.i), r.rows.metadata(r.i), d) },
-            ServeSnapshot.IvfSchema)
-        }
-      case None =>
-        indexView(ivfDataPath) match {
-          case None => search(query, k, metadataFilter)
-          case Some((layout, over, _)) =>
-            val rows = overlaid(layout.filter(col(Ivf.ClusterCol).isin(probed: _*))
-              .select("id", "embedding", "metadata"), over)(identity)
-            val pred = if (metadataFilter.isEmpty) None
-              else Some(Search.metadataFilter(col("metadata"), metadataFilter))
-            Search.knnExact(rows, "id", "embedding", query, k, pred)
-        }
+    // the table seq and the layout's (id, list) pairs, against the
+    // snapshot's tail: no job once the layout is held
+    servedFor(query, k).flatMap { s =>
+      recoverIndexFold(ivfDataPath)
+      val seq = recordedSeq(ivfDataPath).getOrElse(s.version.watermark)
+      if (s.version.watermark > seq) Some(exactFrame(s, query, k, metadataFilter))
+      else ServeSnapshot.part(spark, dataPath, s, "ivf layout", stamps(ivfDataPath)) {
+        ServeSnapshot.layout(spark, ivfDataPath, Ivf.ClusterCol)
+      }.map { layout =>
+        ServeSnapshot.frame(spark, s.ivf(query.toArray, k, metadataFilter, probed, layout, seq)
+          .map { case (r, d) => Seq(r.id, r.rows.vec(r.i), r.rows.metadata(r.i), d) },
+          ServeSnapshot.IvfSchema)
+      }
+    }.getOrElse {
+      indexView(ivfDataPath) match {
+        case None => search(query, k, metadataFilter)
+        case Some((layout, over, _)) =>
+          val rows = overlaid(layout.filter(col(Ivf.ClusterCol).isin(probed: _*))
+            .select("id", "embedding", "metadata"), over)(identity)
+          val pred = if (metadataFilter.isEmpty) None
+            else Some(Search.metadataFilter(col("metadata"), metadataFilter))
+          Search.knnExact(rows, "id", "embedding", query, k, pred)
+      }
     }
   }
 
@@ -1208,20 +1207,23 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * `is_deleted = true` (reference dangling-id tolerance) until
     * [[compact]] physically drops them. Every tier reads the delete
     * from the delta tail; no index table is touched. No present id, no
-    * write: a call none of whose ids the merged view holds appends no
-    * delta. */
+    * delta: a call none of whose ids the merged view holds leaves the
+    * log as it was (the distributed side removes the empty delta its
+    * write left, which costs no job where counting the hits first
+    * would). */
   def delete(ids: Seq[Long]): Unit = if (ids.nonEmpty) {
-    def append(hit: DataFrame): Unit = graft.core.DeltaLog.append(hit, dataPath,
-      graft.core.DeltaLog.nextSeq(spark, dataPath))
+    val seq = graft.core.DeltaLog.nextSeq(spark, dataPath)
     served() match {
       case Some(s) =>
         // the rows from the snapshot, one file as from the held tail
         val hit = s.rowsOf(ids).map(r => r.rows.values(r.i).init :+ true)
-        if (hit.nonEmpty) append(ServeSnapshot.frame(spark, hit, ServeSnapshot.Schema).coalesce(1))
+        if (hit.nonEmpty) graft.core.DeltaLog.append(
+          ServeSnapshot.frame(spark, hit, ServeSnapshot.Schema).coalesce(1), dataPath, seq)
       case None =>
-        val hit = snapshot().filter(col("id").isin(ids: _*))
-          .withColumn("is_deleted", lit(true)).persist()
-        try { if (hit.count() > 0) append(hit) } finally { hit.unpersist(); () }
+        graft.core.DeltaLog.append(snapshot().filter(col("id").isin(ids: _*))
+          .withColumn("is_deleted", lit(true)), dataPath, seq)
+        // no id present: the append wrote no row, and is taken back
+        graft.core.DeltaLog.dropIfEmpty(spark, dataPath, seq)
     }
   }
 

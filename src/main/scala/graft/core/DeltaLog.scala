@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Append-only delta log with merge-on-read — the O(batch) streaming
   * upsert layout. The reference's threshold flush persists the whole
@@ -185,6 +186,16 @@ object DeltaLog {
         batch.withColumn(TombCol, lit(false))
     }
     normalized.write.mode("overwrite").parquet(seqDir(dir, seq))
+  }
+
+  /** Removes the delta at `seq` when its part files hold no row, so an
+    * append that matched nothing leaves the log version as it was. Its
+    * footers are read on the driver: no job. */
+  private[graft] def dropIfEmpty(spark: SparkSession, dir: String, seq: Long): Unit = {
+    val p = new Path(seqDir(dir, seq))
+    if (footers(spark, p, fileStamps(spark, p.toString)).map(_.rows).sum == 0L) {
+      fs(spark, p).delete(p, true); ()
+    }
   }
 
   /** Highest seq folded into base (−1 before the first compaction). */
@@ -458,38 +469,62 @@ object DeltaLog {
     }
   }
 
-  /** One parquet part file's footer: its row count and the Spark
-    * schema its writer recorded (None from another writer). Read on the
-    * driver, so it runs no Spark job, and memoized per file stamp. */
-  private def footer(spark: SparkSession, dir: Path,
-                     st: FileStamp): (Long, Option[StructType]) = {
+  /** One parquet part file's footer: its row count, the Spark schema
+    * its writer recorded (None from another writer) and, per top-level
+    * column, the values its first leaf holds (a map's entries, with one
+    * per null or empty map) and the unencoded byte-array bytes of all
+    * its leaves — None where a chunk records no size statistics. */
+  private[graft] final case class Footer(rows: Long, schema: Option[StructType],
+                                         values: Map[String, Long],
+                                         bytes: Map[String, Option[Long]])
+
+  /** `st`'s footer in `dir`. Read on the driver, so it runs no Spark
+    * job, and memoized per file stamp. */
+  private def footer(spark: SparkSession, dir: Path, st: FileStamp): Footer = {
     val p = new Path(dir, st.name)
     val key = (qualify(spark, p.toString), st)
-    footers.synchronized(footers.get(key)).getOrElse {
+    footerMemo.synchronized(footerMemo.get(key)).getOrElse {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
         .fromPath(p, spark.sparkContext.hadoopConfiguration)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val got = try (reader.getRecordCount, Option(reader.getFooter.getFileMetaData
-          .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(j => DataType.fromJson(j).asInstanceOf[StructType]))
-        finally reader.close()
-      footers.synchronized {
-        if (footers.size >= 4096) footers.clear()
-        footers(key) = got
+      val got = try {
+        val meta = reader.getFooter
+        val chunks = meta.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+          .groupBy(_.getPath.toArray.head)
+        Footer(reader.getRecordCount, Option(meta.getFileMetaData
+            .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+            .map(j => DataType.fromJson(j).asInstanceOf[StructType]),
+          chunks.map { case (c, cs) =>
+            val first = cs.head.getPath
+            c -> cs.filter(_.getPath == first).map(_.getValueCount).sum
+          },
+          chunks.map { case (c, cs) =>
+            c -> cs.foldLeft(Option(0L)) { (acc, ch) =>
+              val b = Option(ch.getSizeStatistics).filter(_.isValid)
+                .flatMap(s => Option(s.getUnencodedByteArrayDataBytes.orElse(null)))
+              // a leaf of a fixed-width type holds no byte-array bytes
+              val leaf = if (ch.getPrimitiveType.getPrimitiveTypeName ==
+                  org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY) b.map(_.toLong)
+                else Some(0L)
+              for (a <- acc; l <- leaf) yield a + l
+            }
+          })
+      } finally reader.close()
+      footerMemo.synchronized {
+        if (footerMemo.size >= 4096) footerMemo.clear()
+        footerMemo(key) = got
       }
       got
     }
   }
-  private val footers =
-    scala.collection.mutable.Map.empty[(String, FileStamp), (Long, Option[StructType])]
+  private val footerMemo = scala.collection.mutable.Map.empty[(String, FileStamp), Footer]
 
   private def parts(files: Seq[FileStamp]) = files.filter(_.name.endsWith(".parquet"))
 
-  /** Rows in the parquet part files `files` of `dir`, from their
-    * footers. */
-  private[graft] def footerRows(spark: SparkSession, dir: Path,
-                                files: Seq[FileStamp]): Long =
-    parts(files).map(footer(spark, dir, _)._1).sum
+  /** The footers of the parquet part files `files` of `dir`. */
+  private[graft] def footers(spark: SparkSession, dir: Path,
+                             files: Seq[FileStamp]): Seq[Footer] =
+    parts(files).map(footer(spark, dir, _))
 
   /** The schema a read of `dirs` (each with its file stamps) infers,
     * taken from the Spark schema its writer recorded in a footer: that
@@ -499,19 +534,11 @@ object DeltaLog {
     * differ. */
   private def declared(spark: SparkSession, dirs: Seq[(Path, Seq[FileStamp])],
                        merged: Boolean): Option[StructType] = {
-    val firsts = dirs.map { case (d, fs) => parts(fs).headOption.flatMap(footer(spark, d, _)._2) }
+    val firsts = dirs.map { case (d, fs) => parts(fs).headOption.flatMap(footer(spark, d, _).schema) }
     if (firsts.isEmpty || firsts.exists(_.isEmpty)) None
     else if (merged && firsts.distinct.length > 1) None
     else firsts.head
   }
-
-  /** Rows of the base at `dir`: the count recorded at the last fold
-    * when it is the current one, else the part files' footers. */
-  private[graft] def baseRows(spark: SparkSession, dir: String): Long =
-    baseCount(spark, dir).getOrElse {
-      val p = new Path(basePath(dir))
-      footerRows(spark, p, fileStamps(spark, p.toString))
-    }
 
   private def merged(spark: SparkSession, dir: String, idCol: String,
                      hold: Boolean): Option[DataFrame] = {

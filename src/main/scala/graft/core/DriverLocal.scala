@@ -38,15 +38,23 @@ import java.util.concurrent.atomic.AtomicInteger
   * | `exactQuantilesDiscGrouped` | Σ over pass-1 groups of n_g × (224 + 2 × UTF-8 bytes of g) (measured 218 at 2-byte g) | ≤ 588 674 keys at 2-byte g |
   * | `Classifier.train` | docs × (dim + 1) × 128 (measured 122 per feature entry) | ≤ 1 048 576 entries |
   * | `Bpe` / `ByteBpe.learnMerges` | Σ (224 + 2 × UTF-8 bytes of word) over a probe of ≤ [[Budget]]/224 + 1 rows (measured 216 at 8-byte words) | ≤ 559 240 words of 8 bytes |
-  * | `VectorStore`'s serve snapshot ([[graft.ServeSnapshot]]) | rows × (512 + 8 × dim) + persisted HNSW edges × 80 (retained heap after GC, measured per row 440 + 4 × dim for the columns, 14–19 for the IVF list entry and 16 + 4 × dim for the HNSW node's vector; 80 per edge all-in at M = 16) | ≤ 131 072 rows at dim 64 with no HNSW graph, ≤ 87 381 at dim 128; ≤ 44 384 at dim 64 with an M = 16 graph (~25 edges per row) |
+  * | `VectorStore`'s serve snapshot ([[graft.ServeSnapshot]]) | rows × (64 + 16 × dim) + metadata entries × 256 + UTF-8 bytes of `content`, `metadata_json` and the metadata × 6 + persisted HNSW edges × 160 (measured per row 1 609 at dim 64 and 2 622 at dim 128 with two entries and 25 string bytes, per entry 225, per byte 4.1 ASCII / 5.0 held as UTF-16, per edge 151 at M = 16) | ≤ 76 695 rows at dim 64 with two short entries and no HNSW graph, ≤ 48 384 at dim 128; ≤ 23 342 at dim 64 with an M = 16 graph (~25 edges per row); ≤ 9 560 at dim 64 with 2 KB of content per row |
   *
-  * The snapshot's estimate costs no job either: its rows are the base
-  * count the last fold recorded (`_basecount`, else the base files'
-  * parquet footers) plus the live delta files' footer row counts, and
-  * its edges the footer row counts of `hnsw_edges` — driver-side reads,
-  * memoized per file stamp. Its widths are for rows like `perfbench`'s
-  * (a two-entry metadata map, no content); long content or metadata
-  * strings widen a row beyond them.
+  * The snapshot's estimate costs no job either: its rows, map entries
+  * and string bytes are the base and live delta files' parquet footers
+  * (row counts, the metadata key chunks' value counts, the string
+  * chunks' unencoded byte-array sizes) and its edges the footer row
+  * counts of `hnsw_edges` — driver-side reads, memoized per file
+  * stamp. Its widths are, like the twins', the peak of the hold,
+  * measured as the largest live heap between back-to-back full GCs
+  * while it runs (local[4], a 64-bit JVM with compressed oops). About
+  * 40% of that peak stays held after it (measured 612 B per row at dim
+  * 64, 880 at dim 128, 1.0–2.0 per string byte, 69 per edge), until
+  * the estimate puts its store over the budget or another store's hold
+  * needs the room. The held snapshots of all stores stay within one
+  * [[Budget]], but a twin's collect is not charged for them: a driver
+  * can hold up to twice the budget while a twin runs beside a held
+  * snapshot.
   *
   * Input-type routing is the twin's own: PageRank over non-long ids
   * always runs distributed, whatever the estimate.

@@ -363,6 +363,32 @@ class IvfTailSpec extends SparkSpec {
       s"$dir/vectors", DeltaLog.nextSeq(s, s"$dir/vectors"))
   }
 
+  test("a store whose strings put the snapshot over the budget is served distributed") {
+    val dir = Files.createTempDirectory("ivflong").toString
+    val store = VectorStore.open(spark, dir, dim = 8)
+    val data = corpus(2000, 8, seed = 17L)
+    // 12 000 UTF-8 bytes of content a row: a few MB of files (every
+    // row alike, so dictionary pages), 24 MB of strings to hold
+    store.ingest(rows(data).withColumn("content", repeat(lit("x"), 12000)))
+    store.compact()
+    buildAll(store, 8)
+    store.ingest(rows(corpus(20, 8, seed = 18L)).withColumn("content", lit("short")))
+    store.delete(Seq(3L, 2005L))
+    val v = DeltaLog.logVersion(spark, s"$dir/vectors")
+    assert(!DriverLocal.fits(ServeSnapshot.estimate(spark, s"$dir/vectors", v, 8,
+      Some(s"$dir/hnsw_edges"))), "the content did not put the store over the budget")
+    val rnd = new scala.util.Random(9L)
+    Seq(data(7)._2, Array.fill(8)(rnd.nextFloat())).foreach { q =>
+      val want = DriverLocal.forcedDistributed(snapshotCalls(store, q, Map("g" -> "small"),
+        Seq(1L, 3L, 2010L)))
+      snapshotCalls(store, q, Map("g" -> "small"), Seq(1L, 3L, 2010L))
+      var got = Seq.empty[(String, Any)]
+      val jobs = jobsOf { got = snapshotCalls(store, q, Map("g" -> "small"), Seq(1L, 3L, 2010L)) }
+      assert(jobs > 0, "a store over the budget answered from a held snapshot")
+      got.zip(want).foreach { case ((call, g), (_, w)) => assert(g == w, s"$call: $g, forced $w") }
+    }
+  }
+
   test("a layout the log has outrun is never served; the next compact re-derives it") {
     val s = spark
     import s.implicits._
